@@ -51,13 +51,6 @@ _BENCH_GRAM_CACHE = PlanCache(capacity=2)
 _LINES_CACHE = PlanCache(capacity=2)
 
 
-def clear_caches() -> None:
-    """Unpersist the decontam/boilerplate caches (test/ops hook, same
-    contract as :func:`ner_pytorch_spark.operators.dedup.clear_caches`)."""
-    _BENCH_GRAM_CACHE.clear()
-    _LINES_CACHE.clear()
-
-
 _WS = r"\s+"
 
 

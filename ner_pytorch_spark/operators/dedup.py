@@ -39,7 +39,8 @@ from pyspark.sql.types import LongType
 # DIFFERENT corpora keep their own slot (a single-slot global thrashed);
 # LRU-bounded. At cluster scale the shingle table for a dedup pass is
 # the natural unit to persist anyway.
-from ..plan_cache import PlanCache, plan_key
+from ..plan_cache import PlanCache, plan_key, register
+from .textstats import tokens_lower
 
 _SH_CACHE = PlanCache(capacity=4)
 # minhash_lsh_pairs' per-doc table (signature + capped shingle set):
@@ -56,7 +57,7 @@ _SIMHASH_CACHE = PlanCache(capacity=8)
 # per-corpus policy stats / bit-index vocabulary (3 numbers + a
 # ≤_DENSE_MAX_SHINGLES int64 array; bounded, keyed like the plan caches)
 _JDENSE_CACHE = PlanCache(capacity=4)
-_JDENSE_META: dict = {}
+_JDENSE_META: dict = register({})
 
 
 def _cached_shingles(docs: DataFrame, n: int, text_col: str,
@@ -64,22 +65,6 @@ def _cached_shingles(docs: DataFrame, n: int, text_col: str,
     key = (plan_key(docs), n, text_col, id_col)
     return _SH_CACHE.get_or_build(
         key, lambda: word_shingles(docs, n, text_col, id_col))
-
-
-def clear_caches() -> None:
-    """Unpersist every module-level plan cache.
-
-    CONTRACT: the caches key persisted tables by the input's
-    analyzed-plan semanticHash + params, which identifies the LOGICAL
-    plan — if the files UNDER a source path are rewritten between runs,
-    the key is unchanged and the stale persisted table would be
-    returned. Callers that mutate a source between dedup passes in one
-    driver process must call this first (batch pipelines that read
-    immutable snapshots — the normal mode — never need to).
-    """
-    for c in (_SH_CACHE, _DOC_CACHE, _SIMHASH_CACHE, _JDENSE_CACHE):
-        c.clear()
-    _JDENSE_META.clear()
 
 
 # ------------------------------------------------------------- exact
@@ -102,22 +87,11 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text",
 # ------------------------------------------------- shingles / jaccard
 
 
-def _norm_tokens(text_col: str) -> F.Column:
-    """lowercase → strip non-alnum → whitespace split, empties removed.
-
-    Single regexp_extract_all pass: a token is a maximal [a-z0-9]+ run
-    of the lowercased text — identical output to the old replace+trim+
-    split+filter chain at ~7× less regex work (see textstats
-    tokens_lower)."""
-    return F.regexp_extract_all(F.lower(F.col(text_col)),
-                                F.lit("[a-z0-9]+"), 0)
-
-
 def word_shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
     """→ (doc_id, shingle) distinct word n-grams; JVM-side only.
 
-    Shingle = n consecutive normalized tokens joined by a space.
+    Shingle = n consecutive :func:`tokens_lower` tokens joined by a space.
     Documents shorter than n tokens yield their full token join (one
     shingle) so they still participate.
 
@@ -126,7 +100,7 @@ def word_shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
     300-token docs).
     """
     toks = docs.select(F.col(id_col).alias("doc_id"),
-                       _norm_tokens(text_col).alias("toks"))
+                       tokens_lower(text_col).alias("toks"))
 
     def ngrams(col):
         m = F.size(col) - n + 1  # number of n-grams
@@ -180,7 +154,8 @@ def ngram_jaccard_pairs(
     bounded, and the relational path would already do ≥
     ``_DENSE_MIN_DENSITY`` × all-pairs work — at real corpus scale the
     vocabulary is large and df exceeds the stop cap, so the policy
-    keeps the scale-safe blocking join. True/False force a path (tests).
+    keeps the scale-safe blocking join. True forces the dense kernel
+    (ValueError when either bound is exceeded), False the blocking join.
     Both paths emit bit-identical rows (same candidate set, same
     long-typed n_common/sizes, the SAME Spark division/round
     expression).
@@ -211,20 +186,26 @@ def ngram_jaccard_pairs(
             while len(_JDENSE_META) > 8:
                 _JDENSE_META.pop(next(iter(_JDENSE_META)))
         n_nonstop, work = meta["n_nonstop"], meta["work"]
-        use_dense = False
-        if dense is True:
-            use_dense = n_nonstop > 0
-        elif 0 < n_nonstop <= _DENSE_MAX_SHINGLES:
+        # the dense kernel collects the bit-index vocabulary to the driver
+        # and tiles every doc: forcing it past either bound is an error,
+        # not an unbounded collect
+        if dense is True and n_nonstop > _DENSE_MAX_SHINGLES:
+            raise ValueError(
+                f"dense=True: {n_nonstop} non-stop shingles exceed "
+                f"_DENSE_MAX_SHINGLES={_DENSE_MAX_SHINGLES}")
+        if 0 < n_nonstop <= _DENSE_MAX_SHINGLES:
             if meta["n_docs"] is None:
                 meta["n_docs"] = sizes.count()
-            all_pairs = meta["n_docs"] * (meta["n_docs"] - 1) / 2
-            use_dense = (2 <= meta["n_docs"] <= _DENSE_MAX_DOCS
-                         and work >= _DENSE_MIN_DENSITY * all_pairs)
-        if use_dense:
-            if meta["n_docs"] is None:
-                meta["n_docs"] = sizes.count()
-            return _jaccard_dense(sh, sizes, freq, nonstop, threshold,
-                                  meta, meta_key)
+            n_docs = meta["n_docs"]
+            if dense is True and n_docs > _DENSE_MAX_DOCS:
+                raise ValueError(
+                    f"dense=True: {n_docs} docs exceed "
+                    f"_DENSE_MAX_DOCS={_DENSE_MAX_DOCS}")
+            all_pairs = n_docs * (n_docs - 1) / 2
+            if dense is True or (2 <= n_docs <= _DENSE_MAX_DOCS and
+                                 work >= _DENSE_MIN_DENSITY * all_pairs):
+                return _jaccard_dense(sh, sizes, freq, nonstop, threshold,
+                                      meta, meta_key)
     # anti-join against the (tiny, AQE-broadcastable) stop-shingle set
     # instead of an equi-join with the full corpus df table — same rows,
     # no by-shingle re-shuffle of the corpus shingle relation.
@@ -750,7 +731,7 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
         (plan_key(docs), text_col, id_col),
         lambda: docs.select(
             F.col(id_col).alias("doc_id"),
-            simhash_udf(_norm_tokens(text_col)).alias("simhash"),
+            simhash_udf(tokens_lower(text_col)).alias("simhash"),
         ))
     def _chunk(lo: int, width: int):
         c = F.shiftrightunsigned("simhash", lo)

@@ -37,10 +37,39 @@ def plan_key(df: DataFrame) -> Hashable:
         return ("pyid", id(df))
 
 
+# every module-level cache in the package, cleared together by
+# clear_caches(): PlanCaches register on construction, other memos via
+# register()
+_REGISTRY: list = []
+
+
+def register(cache):
+    """Add ``cache`` (anything with ``.clear()``) to :func:`clear_caches`;
+    returns it."""
+    _REGISTRY.append(cache)
+    return cache
+
+
+def clear_caches() -> None:
+    """Empty every registered cache, unpersisting the cached tables.
+
+    CONTRACT: the caches key persisted tables by the input's
+    analyzed-plan semanticHash + params, which identifies the LOGICAL
+    plan — if the files UNDER a source path are rewritten between runs,
+    the key is unchanged and the stale persisted table would be
+    returned. Callers that mutate a source between passes in one driver
+    process must call this first (batch pipelines that read immutable
+    snapshots — the normal mode — never need to).
+    """
+    for cache in _REGISTRY:
+        cache.clear()
+
+
 class PlanCache:
     def __init__(self, capacity: int = 4):
         self.capacity = capacity
         self._slots: OrderedDict[Hashable, DataFrame] = OrderedDict()
+        register(self)
 
     def get_or_build(self, key: Hashable,
                      build: Callable[[], DataFrame]) -> DataFrame:

@@ -255,3 +255,46 @@ def test_jaccard_dense_policy_stays_relational_when_sparse(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan  # relational path chosen
     assert df.count() == 0
+
+
+def test_jaccard_dense_forced_past_bounds_raises(spark, docs, monkeypatch):
+    """dense=True respects the dense kernel's size bounds: past either
+    one it raises, naming the bound, instead of collecting the
+    vocabulary to the driver."""
+    from ner_pytorch_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_DENSE_MAX_SHINGLES", 2)
+    with pytest.raises(ValueError, match="_DENSE_MAX_SHINGLES"):
+        ngram_jaccard_pairs(docs, n=1, dense=True)
+    monkeypatch.setattr(dedup, "_DENSE_MAX_SHINGLES", 4096)
+    monkeypatch.setattr(dedup, "_DENSE_MAX_DOCS", 2)
+    with pytest.raises(ValueError, match="_DENSE_MAX_DOCS"):
+        ngram_jaccard_pairs(docs, n=1, dense=True)
+
+
+def test_clear_caches_empties_every_module_cache(spark, docs):
+    """One plan_cache.clear_caches() empties the dedup, decontam and
+    similarity caches (and the dense-jaccard policy memo) and
+    unpersists what they held."""
+    import numpy as np
+
+    from ner_pytorch_spark import plan_cache
+    from ner_pytorch_spark.operators import dedup, decontam, similarity
+
+    ngram_jaccard_pairs(docs, n=1, dense="auto")
+    decontam.benchmark_overlap(docs, docs, n=2)
+    rng = np.random.default_rng(0)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(4)]) for i in range(8)],
+        "vec_id long, embedding array<float>")
+    similarity.ivf_topk(emb, k=2, n_cells=2, n_probe=1)
+    caches = (dedup._SH_CACHE, decontam._BENCH_GRAM_CACHE,
+              similarity._IVF_CACHE)
+    held = [df for c in caches for df in c._slots.values()]
+    assert all(c._slots for c in caches) and dedup._JDENSE_META
+    assert all(df.is_cached for df in held)
+
+    plan_cache.clear_caches()
+    assert not dedup._JDENSE_META
+    assert all(not getattr(c, "_slots", c) for c in plan_cache._REGISTRY)
+    assert not any(df.is_cached for df in held)

@@ -97,21 +97,10 @@ def test_fused_neural_matches_staged_neural(spark, corpus):
     assert a == b
 
 
-def test_fused_dp_free_off_matches_on(spark, corpus):
-    """dp_free=False (full Viterbi, the bench instrumentation path)
-    produces bit-identical fused output to the DP-free default."""
-    pages, aliases, _, fused = corpus
-    slow = pages_to_mention_pairs(pages, aliases, dp_free=False)
-    a = sorted(map(tuple, fused.collect()))
-    b = sorted(map(tuple, slow.collect()))
-    assert a == b
-
-
 def test_gazetteer_decode_empty_tokens():
     """Public-precondition guard: empty token lists decode to []."""
     from ner_pytorch_spark.operators.tagger import (build_surface_index,
-                                                    gazetteer_decode,
-                                                    gazetteer_viterbi)
+                                                    gazetteer_decode)
     from ner_pytorch_spark.operators.tagset import (grammar_transitions,
                                                     tag_to_id)
 
@@ -119,7 +108,6 @@ def test_gazetteer_decode_empty_tokens():
     tids = tag_to_id()
     trans = grammar_transitions()
     assert gazetteer_decode([[], ["Acme", "Corp"]], sidx, tids, trans)[0] == []
-    assert gazetteer_viterbi([[], ["Acme", "Corp"]], sidx, tids, trans)[0] == []
 
 
 def test_gazetteer_decode_matches_viterbi_and_falls_back():
@@ -178,3 +166,24 @@ def test_gazetteer_decode_matches_viterbi_and_falls_back():
     em2 = np.zeros((1, 3, T), dtype=np.float32)
     em2[0, np.arange(3), bad] = MATCH_SCORE
     assert out == viterbi_decode(em2, np.array([3]), trans)
+
+
+def test_decode_memo_overflow_matches_unmemoized(monkeypatch):
+    """With the memo full, new sentences are still decoded correctly
+    (served from the batch, not retained) and the memo never grows past
+    its cap."""
+    import ner_pytorch_spark.operators.tagger as tg
+
+    monkeypatch.setattr(tg, "_MEMO_CAP", 1)
+    v = tg._tagger_payload("gazetteer", tg.ENTITY_TYPES,
+                           datagen.alias_rows(), None, None, None, None)
+
+    def build(uniq):
+        return [[v["tags"][i] for i in p] for p in tg._decode(uniq, v)]
+
+    a, b, c = ["Acme", "Corp", "acquired", "Initech"], ["x", "y"], ["Initech"]
+    memo: dict = {}
+    for batch in ([a, a, b], [b, c, a, c], [c, b]):
+        assert tg._memoized(memo, batch, build) == build(batch)
+        assert len(memo) <= 1
+    assert list(memo) == [tuple(a)]

@@ -118,68 +118,6 @@ def test_ppdb_stem_filter_drops_inflectional_pairs(spark, tmp_path):
     assert ("hash join", "merge join") in filtered
 
 
-def test_multimodal_plumbing(spark):
-    from ner_pytorch_spark.operators.multimodal import (extract_features,
-                                                        synthetic_media)
-
-    media = synthetic_media(spark, n=30)
-    feats = extract_features(media).collect()
-    assert len(feats) == 30
-    assert all(len(r.features) == 16 for r in feats)
-    # deterministic: same payload → same features
-    again = {r.media_id: r.features for r in extract_features(media).collect()}
-    first = {r.media_id: r.features for r in feats}
-    assert again == first
-
-
-def test_multimodal_stage_shapes(spark):
-    """Resize planning (JVM-only), video frame fan-out, audio windowing:
-    per-modality batch shapes with deterministic fake features."""
-    from ner_pytorch_spark.operators.multimodal import (audio_windows,
-                                                        resize_plan,
-                                                        sample_frames,
-                                                        synthetic_media)
-
-    media = synthetic_media(spark, n=30).persist()
-
-    rp = resize_plan(media, max_side=256).collect()
-    assert len(rp) == 10  # every 3rd row is an image
-    for r in rp:
-        assert max(r.target_w, r.target_h) <= 256
-        assert min(r.target_w, r.target_h) >= 1
-        # aspect preserved within rounding
-        assert abs(r.target_w / r.target_h
-                   - r.media.width / r.media.height) < 0.05
-
-    fr = sample_frames(media, fps=1.0, max_frames=8).collect()
-    by_vid: dict[int, list] = {}
-    for r in fr:
-        by_vid.setdefault(r.media_id, []).append(r)
-    vids = {r.media_id: r for r in media.filter("modality='video'").collect()}
-    assert set(by_vid) == set(vids)
-    for mid, rows in by_vid.items():
-        want = max(1, min(8, vids[mid].media.duration_ms // 1000))
-        assert len(rows) == want
-        assert sorted(r.frame_idx for r in rows) == list(range(len(rows)))
-        assert all(len(r.features) == 16 for r in rows)
-
-    aw = audio_windows(media, window_ms=1000, hop_ms=500).collect()
-    assert aw and all(r.end_ms - r.start_ms <= 1000 for r in aw)
-    # deterministic across runs
-    aw2 = audio_windows(media, window_ms=1000, hop_ms=500).collect()
-    assert sorted(map(tuple, aw)) == sorted(map(tuple, aw2))
-    media.unpersist()
-
-
-def test_decode_stub_raises():
-    import pytest as _pytest
-
-    from ner_pytorch_spark.operators.multimodal import decode_image
-
-    with _pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
-
-
 def test_word2vec_source_and_vocab_extension(spark):
     """S2-without-GloVe: MLlib skip-gram vectors in the GloVe table
     shape, normalized like build_vocab; J1 id-extension keeps base ids

@@ -49,7 +49,7 @@ def main() -> None:
 
     pages = datagen.pages_dataframe(spark, 2000, distributed=True,
                                     partitions=8).select("url", "text", "lang")
-    fused = pages_to_mention_pairs(pages, datagen.alias_rows(), dp_free=True)
+    fused = pages_to_mention_pairs(pages, datagen.alias_rows())
     kt = fused_triples(fused, datagen.PREDICATE_LEXICON)
     txt = kt._sc._jvm.PythonSQLUtils.explainString(
         kt._jdf.queryExecution(), "formatted")
