@@ -55,9 +55,35 @@ _SIMHASH_CACHE = PlanCache(capacity=8)
 # dense-jaccard tile tables (repartition inside the cached build — warm
 # calls score with zero exchanges, the simhash §2b pattern) and the
 # per-corpus policy stats / bit-index vocabulary (3 numbers + a
-# ≤_DENSE_MAX_SHINGLES int64 array; bounded, keyed like the plan caches)
+# broadcast ≤_DENSE_MAX_SHINGLES int64 array; bounded, keyed like the
+# plan caches)
 _JDENSE_CACHE = PlanCache(capacity=4)
-_JDENSE_META: dict = register({})
+
+
+class _MetaMemo(dict):
+    """Insertion-ordered memo of the newest ``capacity`` policy entries;
+    an entry's bit-index broadcast (``"bc"``) is unpersisted when the
+    entry is evicted or cleared."""
+
+    capacity = 8
+
+    def put(self, key, meta: dict) -> None:
+        self[key] = meta
+        while len(self) > self.capacity:
+            self._drop(self.pop(next(iter(self))))
+
+    def clear(self) -> None:
+        for meta in self.values():
+            self._drop(meta)
+        super().clear()
+
+    @staticmethod
+    def _drop(meta: dict) -> None:
+        if meta.get("bc") is not None:
+            meta["bc"].unpersist(blocking=False)
+
+
+_JDENSE_META = register(_MetaMemo())
 
 
 def _cached_shingles(docs: DataFrame, n: int, text_col: str,
@@ -182,9 +208,7 @@ def ngram_jaccard_pairs(
             ).collect()[0]
             meta = {"n_nonstop": st["n_nonstop"] or 0,
                     "work": float(st["work"] or 0.0), "n_docs": None}
-            _JDENSE_META[meta_key] = meta
-            while len(_JDENSE_META) > 8:
-                _JDENSE_META.pop(next(iter(_JDENSE_META)))
+            _JDENSE_META.put(meta_key, meta)
         n_nonstop, work = meta["n_nonstop"], meta["work"]
         # the dense kernel collects the bit-index vocabulary to the driver
         # and tiles every doc: forcing it past either bound is an error,
@@ -287,17 +311,18 @@ def _jaccard_dense(sh: DataFrame, sizes: DataFrame, freq: DataFrame,
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     spark = sh.sparkSession
-    # bit-index vocabulary: memoized next to the policy stats (bounded
-    # ≤ _DENSE_MAX_SHINGLES by the caller's proof) so warm calls skip
-    # the collect
-    if meta.get("bit_vals") is None:
-        meta["bit_vals"] = np.sort(np.array(
+    # bit-index vocabulary: memoized next to the policy stats as one
+    # broadcast (bounded ≤ _DENSE_MAX_SHINGLES by the caller's proof) so
+    # warm calls skip the collect and the re-broadcast; the per-call
+    # threshold rides the closure
+    if meta.get("bc") is None:
+        bit_vals = np.sort(np.array(
             [r[0] for r in freq.filter(nonstop)
              .select(F.xxhash64("shingle")).collect()], dtype=np.int64))
-    bit_vals = meta["bit_vals"]
-    n_bits = len(bit_vals)
-    n_words = (n_bits + 63) // 64
-    bc = spark.sparkContext.broadcast((bit_vals, n_words, float(threshold)))
+        meta["bc"] = spark.sparkContext.broadcast(
+            (bit_vals, (len(bit_vals) + 63) // 64))
+    bc = meta["bc"]
+    thr = float(threshold)
 
     # per-doc non-stop hash set + FULL size, salt-tiled into unordered
     # class-pair groups exactly like simhash_pairs: R classes, each doc
@@ -396,7 +421,7 @@ def _jaccard_dense(sh: DataFrame, sizes: DataFrame, freq: DataFrame,
     def tile_pairs(batches):
         import numpy as np
 
-        bit_vals_, n_words_, thr = bc.value
+        bit_vals_, n_words_ = bc.value
 
         def build_bitmaps(shs_col):
             lens = np.fromiter((len(v) for v in shs_col), dtype=np.int64,

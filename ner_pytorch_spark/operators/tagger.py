@@ -7,6 +7,9 @@ The inference hot path of the engine (SURVEY §7 Phase 1):
             featurize P1-P6 + emissions + CRF Viterbi M8)
           → mentions (C1 explode)
 
+or, fused, pages → ONE mapInArrow stage (line split, tokenize, decode,
+spans, in-sentence pairs) → flat mention/pair rows.
+
 Two modes share one decode pipeline (payload → per-task memo → decode):
 
 * ``neural``    — the full char-CNN/BiLSTM forward
@@ -18,6 +21,12 @@ Two modes share one decode pipeline (payload → per-task memo → decode):
   P/R gate where no trained checkpoint exists), decoded exactly without
   the Viterbi DP (:func:`gazetteer_decode`).
 
+Stage sizing: both Python crossings read their input through
+:func:`~ner_pytorch_spark.session.arrow_stage_input`, which coalesces it
+to max(cores, bytes / AQE advisory size) partitions — every Python task
+pays a fixed start-up cost, so a small input pays it once per core, not
+once per upstream partition.
+
 Featurization parity contracts (unit-tested):
   word ids: lowercase + digit-fold + <UNK> fallback
   (/root/reference/loader.py:135-137,160-161); char ids: case kept,
@@ -27,10 +36,12 @@ Featurization parity contracts (unit-tested):
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
@@ -38,6 +49,7 @@ from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
 
 from ..functions.textnorm import (py_cap_feature, py_tokenize_ws,
                                   py_zero_digits, tokenize_ws)
+from ..session import arrow_stage_input
 from .crf import IMPOSSIBLE, viterbi_decode
 from .encoder import TaggerWeights, neural_emissions
 from .spans import extract_spans
@@ -46,10 +58,20 @@ from .tagset import ENTITY_TYPES, grammar_transitions, iobes_tags
 MATCH_SCORE = 10.0
 
 # ASCII file/group/record/unit separators: str.split() whitespace but
-# NOT Java-\s whitespace — pages containing them can't use the fast path
-import re as _re
+# NOT Java-\s whitespace — lines containing them can't use the fast path
+_FS_SEPS = re.compile("[\x1c-\x1f]")
 
-_FS_SEPS = _re.compile("[\x1c-\x1f]")
+
+def _line_tokens(line: str) -> list[str]:
+    """One line → its tokens under the JVM ``\\s+`` contract
+    (:func:`tokenize_ws`, ``[ \\t\\n\\x0B\\f\\r]``). On plain-ASCII text
+    ``str.split()`` is identical and ~3× faster — EXCEPT the separators
+    ``\\x1c-\\x1f``, which it treats as whitespace and Java ``\\s`` does
+    not, so those lines (and non-ASCII ones, U+00A0 etc.) take the pinned
+    ASCII-class regex."""
+    if line.isascii() and _FS_SEPS.search(line) is None:
+        return line.split()
+    return py_tokenize_ws(line)
 
 
 # ------------------------------------------------------------ sentences
@@ -262,22 +284,33 @@ def _decode(uniq: list[list[str]], v: dict) -> list[list[int]]:
     return viterbi_decode(em, lens, v["transitions"])
 
 
-def _memoized(memo: dict, tok_lists: list[list[str]], build) -> list:
-    """Per-row ``build`` results, computing each distinct token sequence
-    once per task: ``build`` maps distinct token lists to one value each
-    (a pure function of the tokens), and ``memo`` — created per task,
+def _memoized(memo: dict, keys: list, build) -> list:
+    """Per-key ``build`` results, computing each distinct key once per
+    task: ``build`` maps a list of distinct hashable keys to one value
+    each (a pure function of the key), and ``memo`` — created per task,
     never surviving it — replays the repeats real corpora are full of
     (boilerplate). It keeps at most ``_MEMO_CAP`` entries; values built
     once it is full serve only the current batch."""
-    keys = [tuple(t) for t in tok_lists]
-    todo: dict[tuple, list[str]] = {}
-    for k, toks in zip(keys, tok_lists):
-        if k not in memo and k not in todo:
-            todo[k] = toks
-    new = dict(zip(todo, build(list(todo.values())))) if todo else {}
-    for k in list(new)[:max(0, _MEMO_CAP - len(memo))]:
+    todo = list(dict.fromkeys(k for k in keys if k not in memo))
+    new = dict(zip(todo, build(todo))) if todo else {}
+    for k in todo[:max(0, _MEMO_CAP - len(memo))]:
         memo[k] = new[k]
     return [new[k] if k in new else memo[k] for k in keys]
+
+
+def _decode_lines(lines: list[str], v: dict, make) -> list:
+    """Distinct raw lines → ``make(tokens, tag_names)`` each, tokenized
+    by :func:`_line_tokens`; token-less lines map to ``()`` and never
+    reach :func:`_decode`."""
+    toks = [_line_tokens(line) for line in lines]
+    out: list = [()] * len(lines)
+    todo = [i for i, t in enumerate(toks) if t]
+    if todo:
+        uniq = [toks[i] for i in todo]
+        tlist = v["tags"]
+        for i, t, p in zip(todo, uniq, _decode(uniq, v)):
+            out[i] = make(t, [tlist[k] for k in p])
+    return out
 
 
 _TAGGED_SCHEMA = StructType([
@@ -304,7 +337,8 @@ def tag_sentences(
     Everything heavy (weights / dictionaries) ships via
     ``sparkContext.broadcast`` once per job, not per task. Batch size is
     bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (session
-    factory) — the explicit inference-stage sizing knob.
+    factory) — the explicit inference-stage sizing knob; the task count
+    by the input's bytes (:func:`arrow_stage_input`).
     """
     bc = sentences.sparkSession.sparkContext.broadcast(_tagger_payload(
         mode, entity_types, aliases, weights, vocab, char_vocab,
@@ -319,27 +353,28 @@ def tag_sentences(
 
         memo: dict[tuple, list] = {}
         for pdf in batches:
-            tok_lists = [list(t) for t in pdf["tokens"]]
-            if not tok_lists:
+            keys = [tuple(t) for t in pdf["tokens"]]
+            if not keys:
                 continue
             yield pd.DataFrame({
                 "url": pdf["url"], "sent_id": pdf["sent_id"],
                 "tokens": pdf["tokens"],
-                "pred_tags": _memoized(memo, tok_lists, build),
-                "n_tokens": np.fromiter((len(t) for t in tok_lists),
-                                        np.int64, len(tok_lists)),
+                "pred_tags": _memoized(memo, keys, build),
+                "n_tokens": np.fromiter((len(k) for k in keys),
+                                        np.int64, len(keys)),
             })
 
-    return sentences.select("url", "sent_id", "tokens").mapInPandas(run, _TAGGED_SCHEMA)
+    return arrow_stage_input(sentences.select("url", "sent_id", "tokens")
+                             ).mapInPandas(run, _TAGGED_SCHEMA)
 
 
 # --------------------------------------------------- fused fast path
 
 # Flat union-typed output: kind=0 → mention row, kind=1 → pair row.
 # Nested list<struct> columns were measured 3-4× slower than flat
-# primitives in the pandas→Arrow conversion (the stage's actual
-# bottleneck at 200k pages), so the fused UDF emits flat rows and the
-# JVM side filters/projects the two views.
+# primitives across the Arrow boundary (the stage's actual bottleneck at
+# 200k pages), so the fused UDF emits flat rows and the JVM side
+# filters/projects the two views.
 _FUSED_SCHEMA = StructType([
     StructField("url", StringType()),
     StructField("sent_id", IntegerType()),
@@ -353,26 +388,76 @@ _FUSED_SCHEMA = StructType([
     StructField("surf_b", StringType()),    # -          | obj_surface
     StructField("between", StringType()),   # -          | between phrase
 ])
+# Arrow types of the template columns (kind … between)
+_TEMPLATE_TYPES = [pa.int32()] * 4 + [pa.string()] * 5
 
 
-def _sentence_template(toks: list[str], tags: list[str]) -> tuple:
-    """Decoded sentence → (mentions, in-sentence pairs), both keyed by
-    mention ordinal; the row-independent part of the fused output."""
+def _sentence_template(toks: list[str], tags: list[str]) -> list[tuple]:
+    """Decoded sentence → its fused rows (kind … between, as in
+    ``_FUSED_SCHEMA``): one per mention, then one per in-sentence pair,
+    keyed by mention ordinal; the row-independent part of the output."""
     spans = extract_spans(tags, toks)
-    ments = [(mid, s["start"], s["end"], s["tag_type"], s["surface"])
-             for mid, s in enumerate(spans)]
-    prs = []
+    rows = [(0, mid, s["start"], s["end"], s["tag_type"], None,
+             s["surface"], None, None) for mid, s in enumerate(spans)]
     for i, m1 in enumerate(spans):
         for j in range(i + 1, len(spans)):
             m2 = spans[j]
             if m1["end"] > m2["start"]:
                 continue
-            prs.append((
-                i, j, m2["start"] - m1["end"],
+            rows.append((
+                1, i, j, m2["start"] - m1["end"],
                 m1["tag_type"], m2["tag_type"],
                 m1["surface"], m2["surface"],
                 " ".join(toks[m1["end"]:m2["start"]])))
-    return ments, prs
+    return rows
+
+
+def _fused_batches(batches: Iterator[pa.RecordBatch],
+                   v: dict) -> Iterator[pa.RecordBatch]:
+    """The fused UDF body: (url, text) batches → ``_FUSED_SCHEMA``
+    batches under payload ``v``. The task memo maps each distinct raw
+    line to its template rows; per batch the distinct templates are
+    concatenated once and every output column is one Arrow ``take``
+    through repeat/cumsum index arrays — no per-output-row Python work."""
+
+    def build(lines):
+        return _decode_lines(lines, v, _sentence_template)
+
+    memo: dict[str, list] = {}
+    for rb in batches:
+        # each line → the batch-local slot of its distinct text
+        slot: dict[str, int] = {}
+        occ: list[int] = []
+        n_lines: list[int] = []
+        for text in rb.column("text").to_pylist():
+            lines = text.split("\n") if text is not None else []
+            n_lines.append(len(lines))
+            occ.extend([slot.setdefault(ln, len(slot)) for ln in lines])
+        tmpls = _memoized(memo, list(slot), build)
+        size = np.fromiter(map(len, tmpls), np.int64, len(tmpls))
+        occ_a = np.asarray(occ, dtype=np.int64)
+        cnt = size[occ_a]                       # output rows per line
+        total = int(cnt.sum())
+        if not total:
+            continue
+        # line ordinal (sent_id) and page of every line
+        n_lines_a = np.asarray(n_lines, dtype=np.int64)
+        page = np.repeat(np.arange(n_lines_a.size), n_lines_a)
+        sid = np.arange(occ_a.size) - (np.cumsum(n_lines_a)
+                                       - n_lines_a)[page]
+        # output row → its line, and its row in the concatenation of
+        # the distinct templates
+        line = np.repeat(np.arange(occ_a.size), cnt)
+        first = np.cumsum(size) - size
+        row = (np.repeat(first[occ_a] - (np.cumsum(cnt) - cnt), cnt)
+               + np.arange(total))
+        flat = [r for t in tmpls for r in t]
+        cols = [pa.array(c, t).take(row)
+                for c, t in zip(zip(*flat), _TEMPLATE_TYPES)]
+        yield pa.RecordBatch.from_arrays(
+            [rb.column("url").take(page[line]),
+             pa.array(sid[line].astype(np.int32)), *cols],
+            names=_FUSED_SCHEMA.fieldNames())
 
 
 def pages_to_mention_pairs(
@@ -394,6 +479,8 @@ def pages_to_mention_pairs(
     generation (between-phrase included) — and emits narrow columns (no
     token arrays, no tag arrays cross back).
 
+    The UDF is columnar (``mapInArrow``, :func:`_fused_batches`).
+
     Downstream, mentions = explode(spans) and triples = explode(pairs)
     ⨝ broadcast(lexicon): the whole pipeline has ZERO exchanges.
     Same semantics as tag_sentences→mentions_table→sentence_local_triples
@@ -403,62 +490,14 @@ def pages_to_mention_pairs(
         mode, entity_types, aliases, weights, vocab, char_vocab,
         grammar_prior))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        v = bc.value
-        tlist = v["tags"]
-
-        def build(uniq):
-            return [_sentence_template(toks, [tlist[i] for i in p])
-                    for toks, p in zip(uniq, _decode(uniq, v))]
-
-        memo: dict[tuple, tuple] = {}
-        for pdf in batches:
-            urls, sids, tok_lists = [], [], []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                # tokenization contract = JVM \s+ ([ \t\n\x0B\f\r]). On
-                # plain-ASCII text str.split() is identical and ~3×
-                # faster (the hot path) — EXCEPT the ASCII separators
-                # \x1c-\x1f, which str.split() treats as whitespace and
-                # Java \s does not, so those pages (and non-ASCII ones,
-                # U+00A0 etc.) take the pinned ASCII-class regex.
-                fast = text.isascii() and _FS_SEPS.search(text) is None
-                for sent_id, line in enumerate(text.split("\n")):
-                    toks = line.split() if fast else py_tokenize_ws(line)
-                    if toks:
-                        urls.append(url)
-                        sids.append(sent_id)
-                        tok_lists.append(toks)
-            if not tok_lists:
-                continue
-            out = {k: [] for k in ("url", "sent_id", "kind", "a", "b", "c",
-                                   "type_a", "type_b", "surf_a", "surf_b",
-                                   "between")}
-            app = {k: out[k].append for k in out}
-            for url, sid, (ments, prs) in zip(
-                    urls, sids, _memoized(memo, tok_lists, build)):
-                for mid, st, en, tt, surf in ments:
-                    app["url"](url); app["sent_id"](sid); app["kind"](0)
-                    app["a"](mid); app["b"](st); app["c"](en)
-                    app["type_a"](tt); app["type_b"](None)
-                    app["surf_a"](surf); app["surf_b"](None)
-                    app["between"](None)
-                for i, j, gap, ta, tb, sa, sb, btw in prs:
-                    app["url"](url); app["sent_id"](sid); app["kind"](1)
-                    app["a"](i); app["b"](j); app["c"](gap)
-                    app["type_a"](ta); app["type_b"](tb)
-                    app["surf_a"](sa); app["surf_b"](sb)
-                    app["between"](btw)
-            # int columns as int32 ndarrays: pd.DataFrame over plain int
-            # lists re-boxes per element (measured ~100 ms / 35k rows);
-            # ndarray columns are zero-copy into the frame
-            for col in ("sent_id", "kind", "a", "b", "c"):
-                out[col] = np.asarray(out[col], dtype=np.int32)
-            yield pd.DataFrame(out)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _fused_batches(batches, bc.value)
 
     df = pages
     if lang is not None:
         df = df.filter(F.col("lang") == lang)
-    return df.select("url", "text").mapInPandas(run, _FUSED_SCHEMA)
+    return arrow_stage_input(df.select("url", "text")).mapInArrow(
+        run, _FUSED_SCHEMA)
 
 
 def fused_mentions(fused: DataFrame) -> DataFrame:

@@ -3,7 +3,7 @@
 Local-mode testing runs on ``local[N]`` (one JVM); the same settings are
 what we would ship to a multi-executor cluster via ``spark-submit
 --py-files`` — AQE for runtime re-planning (skew-join splitting, dynamic
-partition coalescing), Arrow for the pandas-UDF inference stage, and a
+partition coalescing), Arrow for the Python-UDF inference stages, and a
 shuffle-partition count sized to the core count rather than the 200
 default.
 """
@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -57,7 +57,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Inference-stage batch sizing: bounds peak memory of the
-        # pandas-UDF tagger (padded [B, L] tensors) independently of
+        # Arrow-batched tagger (padded [B, L] tensors) independently of
         # partition row counts (SURVEY §4: explicit partition sizing
         # for the inference stage).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
@@ -70,3 +70,29 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def arrow_stage_input(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to the partition count a Python (``mapIn*``)
+    stage should run with: ``max(defaultParallelism, ceil(sizeInBytes /
+    spark.sql.adaptive.advisoryPartitionSizeInBytes))``.
+
+    Every Python task pays a fixed start-up cost before its first row
+    (on Python 3.11 each worker re-reads ``pyspark.zip``'s directory per
+    task), so a small input split into many upstream partitions is
+    dominated by it. ``sizeInBytes`` is Catalyst's estimate of ``df``
+    itself (real bytes once a persisted input is materialized).
+    ``coalesce`` is narrow — no exchange — and leaves the partition
+    count alone when the target is not below it, so large inputs are
+    untouched. Streaming inputs are returned as they are.
+    """
+    if df.isStreaming:
+        return df
+    spark = df.sparkSession
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    advisory = spark.sparkContext._jvm.org.apache.spark.network.util \
+        .JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    # an unknown size reads as Long.MaxValue: clamp to coalesce's Int
+    target = min(-(-size // max(advisory, 1)), 2**31 - 1)
+    return df.coalesce(max(spark.sparkContext.defaultParallelism, target))

@@ -46,7 +46,7 @@ def triples_stream(pages: DataFrame, aliases: list[dict],
                    cooccurrence_window: int | None = None) -> DataFrame:
     """Streaming KG construction: the FUSED single-crossing hot path
     (sentence split + gazetteer match + Viterbi + spans + pair gen in one
-    mapInPandas) lifted onto the stream, then the broadcast predicate-
+    mapInArrow) lifted onto the stream, then the broadcast predicate-
     lexicon join — all stateless / broadcast, so the micro-batch plan is
     the batch plan verbatim (stream==batch tested)."""
     from ..operators.tagger import fused_triples, pages_to_mention_pairs
@@ -74,33 +74,38 @@ def windowed_mention_counts(
                                    TimestampType)
 
     from ..operators.spans import extract_spans
-    from ..operators.tagger import (build_surface_index, gazetteer_tag_ids)
-    from ..operators.tagset import iobes_tags, tag_to_id
+    from ..operators.tagger import (ENTITY_TYPES, _decode_lines, _memoized,
+                                    _tagger_payload)
 
-    spark = pages.sparkSession
-    bc = spark.sparkContext.broadcast({
-        "sidx": build_surface_index(aliases),
-        "tids": tag_to_id(), "tags": iobes_tags(),
-    })
+    # the batch path's decode: JVM \s+ tokenization, grammar-checked
+    # gazetteer decode, per-task line memo
+    bc = pages.sparkSession.sparkContext.broadcast(_tagger_payload(
+        "gazetteer", ENTITY_TYPES, aliases, None, None, None, None))
     out_schema = StructType([
         StructField("warc_ts", TimestampType()),
         StructField("tag_type", StringType()),
     ])
 
+    def mention_types(toks, tags):
+        return [s["tag_type"] for s in extract_spans(tags)]
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v = bc.value
-        sidx, tids, tlist = v["sidx"], v["tids"], v["tags"]
+
+        def build(lines):
+            return _decode_lines(lines, v, mention_types)
+
+        memo: dict[str, list] = {}
         for pdf in batches:
-            ts_out, tt_out = [], []
+            line_ts, lines = [], []
             for ts, text in zip(pdf["warc_ts"], pdf["text"]):
-                for line in text.split("\n"):
-                    toks = line.split()
-                    if not toks:
-                        continue
-                    gold = gazetteer_tag_ids(toks, sidx, tids)
-                    for s in extract_spans([tlist[i] for i in gold]):
-                        ts_out.append(ts)
-                        tt_out.append(s["tag_type"])
+                page_lines = text.split("\n")
+                line_ts += [ts] * len(page_lines)
+                lines += page_lines
+            ts_out, tt_out = [], []
+            for ts, tts in zip(line_ts, _memoized(memo, lines, build)):
+                ts_out += [ts] * len(tts)
+                tt_out += tts
             yield pd.DataFrame({"warc_ts": ts_out, "tag_type": tt_out})
 
     mention_events = (

@@ -272,16 +272,26 @@ def test_jaccard_dense_forced_past_bounds_raises(spark, docs, monkeypatch):
         ngram_jaccard_pairs(docs, n=1, dense=True)
 
 
-def test_clear_caches_empties_every_module_cache(spark, docs):
+def test_clear_caches_empties_every_module_cache(spark, docs, monkeypatch):
     """One plan_cache.clear_caches() empties the dedup, decontam and
     similarity caches (and the dense-jaccard policy memo) and
-    unpersists what they held."""
+    unpersists what they held, the memo's bit-index broadcast too."""
     import numpy as np
+    from pyspark import Broadcast
 
     from ner_pytorch_spark import plan_cache
     from ner_pytorch_spark.operators import dedup, decontam, similarity
 
-    ngram_jaccard_pairs(docs, n=1, dense="auto")
+    unpersisted = []
+    unpersist = Broadcast.unpersist
+
+    def spy(self, blocking=False):
+        unpersisted.append(self)
+        return unpersist(self, blocking)
+
+    monkeypatch.setattr(Broadcast, "unpersist", spy)
+    ngram_jaccard_pairs(docs, n=1, dense=True)
+    bcs = [m["bc"] for m in dedup._JDENSE_META.values() if m.get("bc")]
     decontam.benchmark_overlap(docs, docs, n=2)
     rng = np.random.default_rng(0)
     emb = spark.createDataFrame(
@@ -296,5 +306,6 @@ def test_clear_caches_empties_every_module_cache(spark, docs):
 
     plan_cache.clear_caches()
     assert not dedup._JDENSE_META
+    assert bcs and all(any(b is u for u in unpersisted) for b in bcs)
     assert all(not getattr(c, "_slots", c) for c in plan_cache._REGISTRY)
     assert not any(df.is_cached for df in held)

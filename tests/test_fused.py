@@ -181,9 +181,80 @@ def test_decode_memo_overflow_matches_unmemoized(monkeypatch):
     def build(uniq):
         return [[v["tags"][i] for i in p] for p in tg._decode(uniq, v)]
 
-    a, b, c = ["Acme", "Corp", "acquired", "Initech"], ["x", "y"], ["Initech"]
+    a, b, c = ("Acme", "Corp", "acquired", "Initech"), ("x", "y"), ("Initech",)
     memo: dict = {}
     for batch in ([a, a, b], [b, c, a, c], [c, b]):
         assert tg._memoized(memo, batch, build) == build(batch)
         assert len(memo) <= 1
-    assert list(memo) == [tuple(a)]
+    assert list(memo) == [a]
+
+
+def test_line_tokenizer_matches_jvm_tokenize_ws(spark):
+    """The fused path's per-line tokenizer == the JVM tokenize_ws on
+    lines where str.split() and Java \\s disagree (\\x1c-\\x1f, NBSP,
+    U+2003) or where the line holds no tokens at all."""
+    from pyspark.sql import functions as F
+
+    from ner_pytorch_spark.functions.textnorm import tokenize_ws
+    from ner_pytorch_spark.operators.tagger import _line_tokens
+
+    lines = ["a\tb", " a\x0bb\x0c c\r", "a\x1cb", "x\x1d y\x1e\x1fz", "\x1c",
+             "Acme\u00a0Corp acquired", "a\u2003b", "café  bar",
+             " \t\x0b\x0c\r ", "", "\u00a0", "Acme Corp ."]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(lines)],
+                               "i int, line string")
+    jvm = [r[0] for r in df.orderBy("i")
+           .select(tokenize_ws(F.col("line"))).collect()]
+    assert [_line_tokens(s) for s in lines] == jvm
+
+
+def test_fused_stage_sized_by_input_bytes(spark):
+    """A small 12-partition input runs the fused UDF in
+    defaultParallelism tasks; with a 1k advisory partition size the
+    same input is large enough to keep its 12. Outputs are equal."""
+    from collections import Counter
+
+    aliases = datagen.alias_rows()
+    pages = datagen.pages_dataframe(spark, 120, distributed=True,
+                                    partitions=12).persist()
+    pages.count()
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    try:
+        small = pages_to_mention_pairs(pages, aliases)
+        assert (small.rdd.getNumPartitions()
+                == spark.sparkContext.defaultParallelism < 12)
+        spark.conf.set(key, "1k")
+        fine = pages_to_mention_pairs(pages, aliases)
+        assert fine.rdd.getNumPartitions() == 12
+        got = Counter(map(tuple, fine.collect()))
+    finally:
+        spark.conf.unset(key)
+    assert got == Counter(map(tuple, small.collect())) and got
+    pages.unpersist()
+
+
+def test_fused_memo_overflow_matches_default_cap(monkeypatch):
+    """Fused twin of the memo-overflow test: with the line memo capped at
+    one entry and batches of 4 pages (repeated lines span batches), the
+    fused UDF body emits exactly what it emits under the default cap."""
+    import pyarrow as pa
+
+    import ner_pytorch_spark.operators.tagger as tg
+
+    pages, _, _ = datagen.generate_pages(40)
+    table = pa.table({"url": [p["url"] for p in pages],
+                      "text": [p["text"] for p in pages]})
+    batches = table.to_batches(max_chunksize=4)
+    seen = [set(b.column("text").to_pylist()[0].split("\n"))
+            for b in batches]
+    assert any(seen[0] & s for s in seen[1:])
+    v = tg._tagger_payload("gazetteer", tg.ENTITY_TYPES,
+                           datagen.alias_rows(), None, None, None, None)
+
+    def fused():
+        out = pa.Table.from_batches(list(tg._fused_batches(iter(batches), v)))
+        return out.to_pylist()
+
+    want = fused()
+    monkeypatch.setattr(tg, "_MEMO_CAP", 1)
+    assert fused() == want and want

@@ -78,3 +78,40 @@ def test_windowed_mention_counts(spark, tmp_path):
     batch_mentions = mentions_table(tag_sentences(
         sentences_table(pages), mode="gazetteer", aliases=aliases)).count()
     assert got == batch_mentions
+
+
+def test_windowed_counts_follow_jvm_whitespace(spark, tmp_path):
+    """NBSP and \\x1c are not JVM \\s, so 'Acme\\u00a0Corp' is one token
+    and matches no alias: the streaming window counts per tag_type equal
+    the fused path's mention counts."""
+    import datetime as dt
+
+    from ner_pytorch_spark.operators.tagger import (fused_mentions,
+                                                    pages_to_mention_pairs)
+    from ner_pytorch_spark.streaming.pages_stream import (
+        PAGES_DDL, windowed_mention_counts)
+
+    text = ("Acme\u00a0Corp acquired Initech .\n"
+            "Acme\x1cCorp acquired Initech .\n"
+            "Acme Corp acquired Initech .\n \t\x0b\n")
+    pages = spark.createDataFrame(
+        [(f"https://ex.org/{i}", dt.datetime(2024, 1, 1, i), bytearray(b""),
+          text, "en") for i in range(3)], PAGES_DDL)
+    src = str(tmp_path / "in")
+    pages.write.parquet(src)
+    aliases = datagen.alias_rows()
+
+    q = (windowed_mention_counts(read_pages_stream(spark, src), aliases,
+                                 window="1 day")
+         .writeStream.format("memory").queryName("wmc_ws")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .outputMode("complete").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+
+    got = {r[0]: r[1] for r in spark.sql(
+        "select tag_type, sum(n_mentions) from wmc_ws group by tag_type")
+        .collect()}
+    want = {r[0]: r[1] for r in fused_mentions(
+        pages_to_mention_pairs(pages, aliases))
+        .groupBy("tag_type").count().collect()}
+    assert got == want and want

@@ -1,8 +1,9 @@
 """Physical-plan audit: assert the plans we claim are the plans we get.
 
 Checks (printed + asserted):
-  * fused KG path: ZERO Exchange operators end-to-end, lexicon join is
-    BroadcastHashJoin, html column pruned out of the scan
+  * fused KG path: ZERO Exchange operators end-to-end, a MapInArrow
+    (no MapInPandas) crossing fed through a Coalesce for a small input,
+    lexicon join is BroadcastHashJoin, html column pruned out of the scan
   * tpch_q1: filter + column pruning pushed into the parquet scan,
     partial (map-side) hash aggregation present
   * region_rollup: both dimension joins are broadcast
@@ -60,8 +61,18 @@ def main():
                        datagen.PREDICATE_LEXICON)
     plan = plan_of(tr)
     ok &= check("fused_kg_zero_exchange", plan,
-                must=[r"BroadcastHashJoin"],
+                must=[r"BroadcastHashJoin", r"MapInArrow"],
                 must_not=[r"\bExchange hashpartitioning", r"SortMergeJoin"])
+    # the formatted plan's tree: everything above the fused stage's
+    # coalesced input is the KG path — no pandas crossing there (the
+    # distributed datagen source below it is itself a MapInPandas)
+    tree = plan.split("\n\n", 1)[0]
+    ok &= check("fused_kg_arrow_not_pandas", tree.split("Coalesce", 1)[0],
+                must=[r"MapInArrow"], must_not=[r"MapInPandas"])
+    # 50 pages in 16 upstream partitions: the byte-sized stage coalesces
+    # them (no exchange) below the fused Python node
+    ok &= check("fused_small_input_coalesced", tree,
+                must=[r"MapInArrow[^\n]*\n(?:[^\n]*\n)*?[^\n]*Coalesce"])
 
     q1 = e.q_tpch_q1(spark, SF)
     plan = plan_of(q1)
