@@ -65,7 +65,7 @@ def _new_spark(cores: int):
 def _kg_pipeline(spark, pages, aliases, lexicon):
     """pages → triples in ONE action via the fused hot path: a single
     Arrow crossing (sentence split + gazetteer match + decode + BIOES
-    spans + pair gen in one mapInPandas) then filter + broadcast
+    spans + pair gen in one mapInArrow) then filter + broadcast
     lexicon join — zero exchanges."""
     from ner_pytorch_spark.operators.tagger import (fused_triples,
                                                     pages_to_mention_pairs)

@@ -21,11 +21,13 @@ Two modes share one decode pipeline (payload → per-task memo → decode):
   P/R gate where no trained checkpoint exists), decoded exactly without
   the Viterbi DP (:func:`gazetteer_decode`).
 
-Stage sizing: both Python crossings read their input through
-:func:`~ner_pytorch_spark.session.arrow_stage_input`, which coalesces it
-to max(cores, bytes / AQE advisory size) partitions — every Python task
-pays a fixed start-up cost, so a small input pays it once per core, not
-once per upstream partition.
+Stage sizing: the fused crossing reads its input through
+:func:`~ner_pytorch_spark.session.arrow_stage_input`, which coalesces an
+input smaller than cores × the AQE advisory size to one partition per
+core — every Python task pays a fixed start-up cost, so a small input
+split into more partitions than cores pays it once per core, not once
+per upstream partition. ``tag_sentences`` keeps its caller's
+partitioning.
 
 Featurization parity contracts (unit-tested):
   word ids: lowercase + digit-fold + <UNK> fallback
@@ -337,8 +339,7 @@ def tag_sentences(
     Everything heavy (weights / dictionaries) ships via
     ``sparkContext.broadcast`` once per job, not per task. Batch size is
     bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (session
-    factory) — the explicit inference-stage sizing knob; the task count
-    by the input's bytes (:func:`arrow_stage_input`).
+    factory) — the explicit inference-stage sizing knob.
     """
     bc = sentences.sparkSession.sparkContext.broadcast(_tagger_payload(
         mode, entity_types, aliases, weights, vocab, char_vocab,
@@ -364,8 +365,7 @@ def tag_sentences(
                                         np.int64, len(keys)),
             })
 
-    return arrow_stage_input(sentences.select("url", "sent_id", "tokens")
-                             ).mapInPandas(run, _TAGGED_SCHEMA)
+    return sentences.select("url", "sent_id", "tokens").mapInPandas(run, _TAGGED_SCHEMA)
 
 
 # --------------------------------------------------- fused fast path

@@ -73,26 +73,25 @@ def get_spark(
 
 
 def arrow_stage_input(df: DataFrame) -> DataFrame:
-    """``df`` coalesced to the partition count a Python (``mapIn*``)
-    stage should run with: ``max(defaultParallelism, ceil(sizeInBytes /
-    spark.sql.adaptive.advisoryPartitionSizeInBytes))``.
+    """``df`` coalesced to ``defaultParallelism`` partitions when it is
+    small — Catalyst's ``sizeInBytes`` estimate below ``defaultParallelism
+    × spark.sql.adaptive.advisoryPartitionSizeInBytes`` — else unchanged.
 
-    Every Python task pays a fixed start-up cost before its first row
-    (on Python 3.11 each worker re-reads ``pyspark.zip``'s directory per
-    task), so a small input split into many upstream partitions is
-    dominated by it. ``sizeInBytes`` is Catalyst's estimate of ``df``
-    itself (real bytes once a persisted input is materialized).
-    ``coalesce`` is narrow — no exchange — and leaves the partition
-    count alone when the target is not below it, so large inputs are
-    untouched. Streaming inputs are returned as they are.
+    Every Python (``mapIn*``) task pays a fixed start-up cost before its
+    first row (on Python 3.11 each worker re-reads ``pyspark.zip``'s
+    directory per task), so a small input split into more partitions
+    than cores is dominated by it. ``coalesce`` is narrow — no exchange —
+    and a no-op when ``df`` already has at most that many partitions.
+    Larger inputs keep their scan splits; an unknown size reads as
+    ``Long.MaxValue``. Streaming inputs are returned as they are.
     """
     if df.isStreaming:
         return df
-    spark = df.sparkSession
+    sc = df.sparkSession.sparkContext
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    advisory = spark.sparkContext._jvm.org.apache.spark.network.util \
-        .JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    # an unknown size reads as Long.MaxValue: clamp to coalesce's Int
-    target = min(-(-size // max(advisory, 1)), 2**31 - 1)
-    return df.coalesce(max(spark.sparkContext.defaultParallelism, target))
+    advisory = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        df.sparkSession.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    if size >= sc.defaultParallelism * advisory:
+        return df
+    return df.coalesce(sc.defaultParallelism)

@@ -233,6 +233,36 @@ def test_fused_stage_sized_by_input_bytes(spark):
     pages.unpersist()
 
 
+def test_stage_sizing_leaves_large_or_unknown_inputs(spark):
+    """Inputs estimated at or above cores × advisory size keep their
+    upstream partitions — also when size / advisory is below that count
+    (scan splits are never merged) — as does an RDD-backed frame of
+    unknown size (Long.MaxValue); tag_sentences keeps its input's."""
+    from ner_pytorch_spark.session import arrow_stage_input
+
+    dp = spark.sparkContext.defaultParallelism
+    pages = datagen.pages_dataframe(spark, 120, distributed=True,
+                                    partitions=dp * 3).persist()
+    pages.count()
+    size = int(pages._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    try:
+        spark.conf.set(key, str(size // (dp * 2)))
+        assert arrow_stage_input(pages).rdd.getNumPartitions() == dp * 3
+    finally:
+        spark.conf.unset(key)
+    pages.unpersist()
+    df = spark.sparkContext.parallelize(
+        [(i, str(i)) for i in range(64)], dp * 2).toDF(["id", "s"])
+    assert arrow_stage_input(df).rdd.getNumPartitions() == dp * 2
+    sents = sentences_table(datagen.pages_dataframe(
+        spark, 40, distributed=True, partitions=dp * 2))
+    tagged = tag_sentences(sents, mode="gazetteer",
+                           aliases=datagen.alias_rows())
+    assert tagged.rdd.getNumPartitions() == sents.rdd.getNumPartitions()
+
+
 def test_fused_memo_overflow_matches_default_cap(monkeypatch):
     """Fused twin of the memo-overflow test: with the line memo capped at
     one entry and batches of 4 pages (repeated lines span batches), the

@@ -57,8 +57,8 @@ def main():
     ok = True
 
     pages = datagen.pages_dataframe(spark, 50, distributed=True)
-    tr = fused_triples(pages_to_mention_pairs(pages, datagen.alias_rows()),
-                       datagen.PREDICATE_LEXICON)
+    fused = pages_to_mention_pairs(pages, datagen.alias_rows())
+    tr = fused_triples(fused, datagen.PREDICATE_LEXICON)
     plan = plan_of(tr)
     ok &= check("fused_kg_zero_exchange", plan,
                 must=[r"BroadcastHashJoin", r"MapInArrow"],
@@ -70,9 +70,14 @@ def main():
     ok &= check("fused_kg_arrow_not_pandas", tree.split("Coalesce", 1)[0],
                 must=[r"MapInArrow"], must_not=[r"MapInPandas"])
     # 50 pages in 16 upstream partitions: the byte-sized stage coalesces
-    # them (no exchange) below the fused Python node
-    ok &= check("fused_small_input_coalesced", tree,
-                must=[r"MapInArrow[^\n]*\n(?:[^\n]*\n)*?[^\n]*Coalesce"])
+    # them (no exchange) to one partition per core below the fused node
+    dp = spark.sparkContext.defaultParallelism
+    ok &= check("fused_small_input_coalesced",
+                f"{plan}\npartitions {pages.rdd.getNumPartitions()} -> "
+                f"{fused.rdd.getNumPartitions()}",
+                must=[r"MapInArrow[^\n]*\n(?:[^\n]*\n)*?[^\n]*Coalesce",
+                      rf"\) Coalesce\nInput[^\n]*\nArguments: {dp}\n",
+                      rf"partitions 16 -> {dp}$"])
 
     q1 = e.q_tpch_q1(spark, SF)
     plan = plan_of(q1)
