@@ -1,5 +1,8 @@
 """Dedup operators on constructed duplicates/near-duplicates."""
 
+import re
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,6 +14,22 @@ from ner_pytorch_spark.operators.dedup import (exact_duplicates,
 
 BASE = ("the quick brown fox jumps over the lazy dog and runs far away "
         "into the green forest near the river bank every single morning")
+# pair-kernel edge cases: token-less docs, single-token docs, and a block
+# of identical docs (one simhash, every shingle shared)
+ADVERSARIAL = (["", "   ", "!!! ???", "alpha", "alpha", "Beta", "x"]
+               + ["same words in every copy"] * 12)
+
+
+@contextmanager
+def tiny_arrow_batches(spark, n=5):
+    """Arrow batches of ``n`` rows, so pair-kernel tiles span many batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 @pytest.fixture(scope="module")
@@ -79,41 +98,61 @@ def test_lsh_wide_buckets_match_long_path(spark, docs):
     assert cands(wide, "bucket_key") == cands(long_buckets, "k")
 
 
-def test_simhash_blocking_is_lossless(spark):
+def test_simhash_blocking_is_lossless(spark, monkeypatch):
     """Pigeonhole recall at max_hamming > 3 (the round-1 bug class).
 
     Correlated random docs (subsets of a tiny vocab) produce many pairs
     at Hamming 4-20 whose differing bits span ALL FOUR of the old fixed
     16-bit chunks — the old blocking silently dropped those. The new
     (max_hamming+1)-chunk blocking must return exactly the brute-force
-    all-pairs answer.
+    all-pairs answer, also on the adversarial docs, with tiles of a few
+    docs spanning 5-row Arrow batches, and with a max_bucket cap (a pair
+    surfaces iff it agrees on a chunk whose bucket the cap kept).
     """
     import random
+    from collections import Counter
+
+    from ner_pytorch_spark.operators import pairtiles
+    from ner_pytorch_spark.operators.dedup import _chunk_bounds
 
     rng = random.Random(7)
     vocab = [f"tok{i}" for i in range(30)]
     texts = [" ".join(rng.sample(vocab, rng.randint(8, 20))) for _ in range(80)]
+    texts += ADVERSARIAL
     docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
 
-    hashes = {i: simhash64(t.split()) for i, t in enumerate(texts)}
     mask = (1 << 64) - 1
+    hashes = {i: simhash64(re.findall("[a-z0-9]+", t.lower())) & mask
+              for i, t in enumerate(texts)}
 
     def ham(a, b):
-        return bin((hashes[a] ^ hashes[b]) & mask).count("1")
+        return bin(hashes[a] ^ hashes[b]).count("1")
 
-    for max_h in (8, 20):
-        expect = {(a, b): ham(a, b) for a in hashes for b in hashes
-                  if a < b and ham(a, b) <= max_h}
-        got = {(r.doc_a, r.doc_b): r.hamming
-               for r in simhash_pairs(docs, max_hamming=max_h).collect()}
-        assert got == expect, f"max_hamming={max_h}"
+    def brute_force(max_h, max_bucket):
+        keys = {i: [(c, (h >> lo) & ((1 << w) - 1))
+                    for c, (lo, w) in enumerate(_chunk_bounds(max_h + 1))]
+                for i, h in hashes.items()}
+        df = Counter(k for ks in keys.values() for k in ks)
+        return {(a, b): ham(a, b) for a in hashes for b in hashes
+                if a < b and ham(a, b) <= max_h
+                and any(ka == kb and (max_bucket is None or df[ka] <= max_bucket)
+                        for ka, kb in zip(keys[a], keys[b]))}
+
+    monkeypatch.setattr(pairtiles, "_TILE", 4)
+    with tiny_arrow_batches(spark):
+        for max_h, max_bucket in ((8, None), (20, None), (8, 5), (20, 10)):
+            expect = brute_force(max_h, max_bucket)
+            got = {(r.doc_a, r.doc_b): r.hamming
+                   for r in simhash_pairs(docs, max_hamming=max_h,
+                                          max_bucket=max_bucket).collect()}
+            assert got == expect, (max_h, max_bucket)
+    assert any(v == 0 for v in brute_force(8, None).values())
 
     # the adversarial witness: ≥1 pair beyond Hamming 3 shares NONE of
     # the old fixed 16-bit chunks → the old 4-chunk blocking provably
     # missed it, the new blocking must not.
     def old_chunks(h):
-        u = h & mask
-        return [(u >> (16 * i)) & 0xFFFF for i in range(4)]
+        return [(h >> (16 * i)) & 0xFFFF for i in range(4)]
 
     witnesses = [
         (a, b) for a in hashes for b in hashes
@@ -200,13 +239,14 @@ def test_shingle_cache_keyed_by_plan(spark, docs):
     assert len(_SH_CACHE._slots) <= _SH_CACHE.capacity
 
 
-def test_jaccard_dense_matches_relational(spark):
+def test_jaccard_dense_matches_relational(spark, monkeypatch):
     """The dense bitmap kernel is value-identical to the relational
     blocking join, including stop-shingle cap semantics (n_common counts
-    only non-stop commons; sizes stay FULL), across tile boundaries."""
+    only non-stop commons; sizes stay FULL), on the adversarial docs and
+    with tiles spanning many 5-row Arrow batches."""
     import random
 
-    from ner_pytorch_spark.operators import dedup
+    from ner_pytorch_spark.operators import dedup, pairtiles
 
     rng = random.Random(13)
     hot = ["h0", "h1", "h2"]               # in every doc → df = 60
@@ -214,36 +254,33 @@ def test_jaccard_dense_matches_relational(spark):
     rows = [(i, " ".join(hot
                          + [rng.choice(cold) for _ in range(8)]))
             for i in range(60)]
-    rows.append((60, ""))                  # zero-token doc: excluded
+    rows += [(60 + i, t) for i, t in enumerate(ADVERSARIAL)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
+    def pairs(**kw):
+        return sorted(map(tuple, dedup.ngram_jaccard_pairs(
+            docs, n=1, **kw).collect()))
+
+    plan = dedup.ngram_jaccard_pairs(docs, n=1, dense=True) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
     # cap off, then cap=40: hot words stopped (df 60 > 40), cold kept —
-    # n_common loses the hot words while sizes n_a/n_b keep them
-    for max_block, thr in ((1000, 0.3), (40, 0.1)):
-        rel = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-            docs, n=1, threshold=thr, max_block=max_block,
-            dense=False).collect()))
-        den = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-            docs, n=1, threshold=thr, max_block=max_block,
-            dense=True).collect()))
-        assert rel == den and len(den) > 0
-    # multi-tile path: force tiny tiles so carry/slicing is exercised
-    old = dedup._JTILE
-    dedup._JTILE = 8
-    try:
-        den_tiled = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-            docs, n=1, threshold=0.3, dense=True).collect()))
-    finally:
-        dedup._JTILE = old
-    rel = sorted(map(tuple, dedup.ngram_jaccard_pairs(
-        docs, n=1, threshold=0.3, dense=False).collect()))
-    assert den_tiled == rel
+    # n_common loses the hot words while sizes n_a/n_b keep them; the
+    # last pass forces tiles of a few docs
+    with tiny_arrow_batches(spark):
+        for max_block, thr, tile in ((1000, 0.3, 2048), (40, 0.1, 2048),
+                                     (1000, 0.3, 4)):
+            monkeypatch.setattr(pairtiles, "_TILE", tile)
+            rel = pairs(threshold=thr, max_block=max_block, dense=False)
+            den = pairs(threshold=thr, max_block=max_block, dense=True)
+            assert rel == den and len(den) > 0
+            assert {(63, 64, 1.0), (67, 78, 1.0)} <= set(den)  # identical
 
 
 def test_jaccard_dense_policy_stays_relational_when_sparse(spark):
     """auto-policy: a sparse corpus (every doc its own vocabulary) must
     keep the scale-safe blocking join — the plan shows the shingle
-    equi-join, not the dense MapInPandas kernel."""
+    equi-join, no Python map node of the dense kernel."""
     from ner_pytorch_spark.operators import dedup
 
     # one contiguous alnum run per token (an underscore would split into
@@ -253,7 +290,8 @@ def test_jaccard_dense_policy_stays_relational_when_sparse(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     df = dedup.ngram_jaccard_pairs(docs, n=1, threshold=0.5, dense="auto")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan  # relational path chosen
+    # relational path chosen
+    assert "MapInPandas" not in plan and "MapInArrow" not in plan
     assert df.count() == 0
 
 
@@ -274,8 +312,8 @@ def test_jaccard_dense_forced_past_bounds_raises(spark, docs, monkeypatch):
 
 def test_clear_caches_empties_every_module_cache(spark, docs, monkeypatch):
     """One plan_cache.clear_caches() empties the dedup, decontam and
-    similarity caches (and the dense-jaccard policy memo) and
-    unpersists what they held, the memo's bit-index broadcast too."""
+    similarity caches (and the dedup memo) and unpersists what they
+    held, the memo's bit-index and simhash hot-bucket broadcasts too."""
     import numpy as np
     from pyspark import Broadcast
 
@@ -291,7 +329,11 @@ def test_clear_caches_empties_every_module_cache(spark, docs, monkeypatch):
 
     monkeypatch.setattr(Broadcast, "unpersist", spy)
     ngram_jaccard_pairs(docs, n=1, dense=True)
-    bcs = [m["bc"] for m in dedup._JDENSE_META.values() if m.get("bc")]
+    simhash_pairs(docs, max_hamming=3, max_bucket=1)
+    bcs = [(k[0], m["bc"]) for k, m in dedup._META.items() if m.get("bc")]
+    assert any(kind == "jaccard" for kind, _ in bcs)
+    # the hot buckets of the duplicate docs
+    assert any(kind == "simhash" and bc.value for kind, bc in bcs)
     decontam.benchmark_overlap(docs, docs, n=2)
     rng = np.random.default_rng(0)
     emb = spark.createDataFrame(
@@ -301,11 +343,11 @@ def test_clear_caches_empties_every_module_cache(spark, docs, monkeypatch):
     caches = (dedup._SH_CACHE, decontam._BENCH_GRAM_CACHE,
               similarity._IVF_CACHE)
     held = [df for c in caches for df in c._slots.values()]
-    assert all(c._slots for c in caches) and dedup._JDENSE_META
+    assert all(c._slots for c in caches) and dedup._META
     assert all(df.is_cached for df in held)
 
     plan_cache.clear_caches()
-    assert not dedup._JDENSE_META
-    assert bcs and all(any(b is u for u in unpersisted) for b in bcs)
+    assert not dedup._META
+    assert all(any(b is u for u in unpersisted) for _, b in bcs)
     assert all(not getattr(c, "_slots", c) for c in plan_cache._REGISTRY)
     assert not any(df.is_cached for df in held)

@@ -12,8 +12,11 @@ Checks (printed + asserted):
     bucketing via one Arrow stage, candidate join on (table, bucket)
   * verb_arc_triples: zero exchanges (HOF resolution inside the row,
     verb lexicon broadcast)
-  * simhash_pairs: candidate pairs from a chunk equi-join, never a
-    cartesian product
+  * simhash_pairs: pairs scored inside chunk buckets, never a cartesian
+    product; with max_bucket set the bucket cap is in the plan
+  * simhash_pairs and forced-dense ngram_jaccard_pairs: on a warm call
+    the scoring stage reads the cached tile table as InMemoryTableScan →
+    Sort → MapInArrow, no MapInPandas and no Exchange above the scan
 """
 
 from __future__ import annotations
@@ -135,6 +138,23 @@ def main():
     plan = plan_of(sh)
     ok &= check("simhash_chunk_equijoin", plan,
                 must_not=[r"CartesianProduct", r"BroadcastNestedLoop"])
+
+    # the shared pair kernel: a warm call scans the cached, already
+    # tile-partitioned table and scores it in one Arrow stage — the tree
+    # above the tile table's InMemoryTableScan holds no exchange
+    from ner_pytorch_spark.operators.dedup import ngram_jaccard_pairs
+
+    for name, pairs in (
+            ("simhash", lambda: e.q_simhash_pairs(spark, SF)),
+            ("jaccard_dense", lambda: ngram_jaccard_pairs(
+                e._read(spark, SF, "documents"), n=2, threshold=0.12,
+                dense=True))):
+        pairs().count()
+        tree = plan_of(pairs()).split("\n\n", 1)[0]
+        ok &= check(f"{name}_warm_arrow_tiles",
+                    tree.split("InMemoryTableScan", 1)[0],
+                    must=[r"MapInArrow", r"Sort"],
+                    must_not=[r"MapInPandas", r"Exchange"])
 
     # skew guards (round-5): with max_bucket set, both blocking joins
     # carry the frequency-cap filter — a hot (chunk/bucket) key is
