@@ -521,31 +521,28 @@ def q_kg_mentions(spark, sf_dir):
 
 def q_kg_triples(spark, sf_dir):
     from ner_pytorch_spark import datagen
-    from ner_pytorch_spark.operators.spans import mentions_table
     from ner_pytorch_spark.operators.tagger import sentences_table, tag_sentences
-    from ner_pytorch_spark.operators.triples import extract_triples
+    from ner_pytorch_spark.operators.triples import sentence_local_triples
 
     pages = datagen.pages_dataframe(spark, 500)
     tagged = tag_sentences(sentences_table(pages), mode="gazetteer",
                            aliases=datagen.alias_rows())
-    mentions = mentions_table(tagged)
-    return extract_triples(mentions, tagged, datagen.PREDICATE_LEXICON)
+    return sentence_local_triples(tagged, datagen.PREDICATE_LEXICON)
 
 
 def q_kg_triples_cooc(spark, sf_dir):
-    """Oracle-checked triple extraction: the relational pair+window path
-    over the SAME oracle-checked gazetteer mentions (the word-salad
-    testdata has no predicate lexicon, so pattern matches are empty by
-    construction and the co-occurrence fallback carries the check)."""
-    from ner_pytorch_spark.operators.spans import mentions_table
+    """Oracle-checked triple extraction: row-local mention pairs plus
+    the co-occurrence window fallback over the SAME oracle-checked
+    gazetteer mentions (the word-salad testdata has no predicate
+    lexicon, so pattern matches are empty by construction and the
+    co-occurrence fallback carries the check)."""
     from ner_pytorch_spark.operators.tagger import sentences_table, tag_sentences
-    from ner_pytorch_spark.operators.triples import extract_triples
+    from ner_pytorch_spark.operators.triples import sentence_local_triples
 
     pages = _docs_as_pages(spark, sf_dir)
     tagged = tag_sentences(sentences_table(pages, lang="en"),
                            mode="gazetteer", aliases=_TESTDATA_ALIASES)
-    mentions = mentions_table(tagged)
-    return extract_triples(mentions, tagged, {}, cooccurrence_window=3)
+    return sentence_local_triples(tagged, {}, cooccurrence_window=3)
 
 
 def q_kg_triples_arc(spark, sf_dir):
@@ -554,16 +551,14 @@ def q_kg_triples_arc(spark, sf_dir):
     between-phrase are recovered by nearest-mention verb arcs; golden
     P/R = 1.0 asserted in tests/test_golden_triples.py."""
     from ner_pytorch_spark import datagen
-    from ner_pytorch_spark.operators.spans import mentions_table
     from ner_pytorch_spark.operators.tagger import sentences_table, tag_sentences
-    from ner_pytorch_spark.operators.triples import extract_triples
+    from ner_pytorch_spark.operators.triples import sentence_local_triples
 
     pages = datagen.pages_dataframe(spark, 500, arc_frac=0.6)
     tagged = tag_sentences(sentences_table(pages), mode="gazetteer",
                            aliases=datagen.alias_rows())
-    mentions = mentions_table(tagged)
-    return extract_triples(mentions, tagged, datagen.PREDICATE_LEXICON,
-                           verb_lexicon=datagen.VERB_ARC_LEXICON)
+    return sentence_local_triples(tagged, datagen.PREDICATE_LEXICON,
+                                  verb_lexicon=datagen.VERB_ARC_LEXICON)
 
 
 # fake-parse verb set for the checked parsed-arc query: frequent
@@ -582,19 +577,18 @@ _PATTERN_LEXICON = {"column": "has_column", "key": "keyed_by",
 
 def q_kg_triples_pattern(spark, sf_dir):
     """Oracle-checked PATTERN-path triple extraction (the production
-    between-phrase broadcast lexicon join of extract_triples): ordered
-    in-sentence mention pairs, predicate = the exact token run between
-    them matched against _PATTERN_LEXICON. DuckDB replays the pair join
-    and the between-slice over the shared recursive-CTE mentions."""
-    from ner_pytorch_spark.operators.spans import mentions_table
+    between-phrase broadcast lexicon join of sentence_local_triples):
+    ordered in-sentence mention pairs, predicate = the exact token run
+    between them matched against _PATTERN_LEXICON. DuckDB replays the
+    pair join and the between-slice over the shared recursive-CTE
+    mentions."""
     from ner_pytorch_spark.operators.tagger import sentences_table, tag_sentences
-    from ner_pytorch_spark.operators.triples import extract_triples
+    from ner_pytorch_spark.operators.triples import sentence_local_triples
 
     pages = _docs_as_pages(spark, sf_dir)
     tagged = tag_sentences(sentences_table(pages, lang="en"),
                            mode="gazetteer", aliases=_TESTDATA_ALIASES)
-    mentions = mentions_table(tagged)
-    return extract_triples(mentions, tagged, _PATTERN_LEXICON)
+    return sentence_local_triples(tagged, _PATTERN_LEXICON)
 
 
 def q_kg_triples_arc_checked(spark, sf_dir):

@@ -37,6 +37,12 @@ def _is_tracking(kv: Column) -> Column:
     return cond
 
 
+def url_domain(url: Column) -> Column:
+    """Host of an http(s) URL ('' when absent); a host-only URL such as
+    ``https://example.com`` still yields its host."""
+    return F.regexp_extract(url, r"https?://([^/?#]+)", 1)
+
+
 def normalize_url(url: Column) -> Column:
     u = F.regexp_replace(F.trim(url), "#.*", "")        # fragment off
     scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))

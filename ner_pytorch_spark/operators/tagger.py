@@ -56,6 +56,7 @@ from .crf import IMPOSSIBLE, viterbi_decode
 from .encoder import TaggerWeights, neural_emissions
 from .spans import extract_spans
 from .tagset import ENTITY_TYPES, grammar_transitions, iobes_tags
+from .triples import _assemble_triples
 
 MATCH_SCORE = 10.0
 
@@ -481,10 +482,12 @@ def pages_to_mention_pairs(
 
     The UDF is columnar (``mapInArrow``, :func:`_fused_batches`).
 
-    Downstream, mentions = explode(spans) and triples = explode(pairs)
-    ⨝ broadcast(lexicon): the whole pipeline has ZERO exchanges.
-    Same semantics as tag_sentences→mentions_table→sentence_local_triples
-    (asserted equivalent in tests).
+    Downstream, mentions = the ``kind = 0`` rows (:func:`fused_mentions`)
+    and triples = the ``kind = 1`` pair rows through the same triple tail
+    as :func:`~.triples.sentence_local_triples` (:func:`fused_triples`):
+    the whole pipeline has ZERO exchanges. Same semantics as
+    tag_sentences→mentions_table→sentence_local_triples (asserted
+    equivalent in tests).
     """
     bc = pages.sparkSession.sparkContext.broadcast(_tagger_payload(
         mode, entity_types, aliases, weights, vocab, char_vocab,
@@ -518,10 +521,8 @@ def fused_triples(
     predicate_lexicon: dict[str, str],
     cooccurrence_window: int | None = None,
 ) -> DataFrame:
-    """explode(pairs) ⨝ broadcast(lexicon) → triples (zero exchanges)."""
-    spark = fused.sparkSession
-    lex = spark.createDataFrame(
-        sorted(predicate_lexicon.items()), "between string, pred string")
+    """kind=1 pair rows → the shared triple tail: broadcast lexicon join
+    plus the optional co-occurrence fallback (zero exchanges)."""
     pairs = (
         fused.filter(F.col("kind") == 1)
         .select(
@@ -536,20 +537,7 @@ def fused_triples(
             "between",
         )
     )
-    out_cols = [
-        "url", "sent_id", "subj_surface", "subj_type", "pred",
-        "obj_surface", "obj_type", "subj_mention_id", "obj_mention_id",
-    ]
-    result = pairs.join(F.broadcast(lex), on="between", how="inner").select(*out_cols)
-    if cooccurrence_window is not None:
-        coocc = (
-            pairs.join(F.broadcast(lex), on="between", how="left_anti")
-            .filter(F.col("gap") <= cooccurrence_window)
-            .withColumn("pred", F.lit("cooccurs_with"))
-            .select(*out_cols)
-        )
-        result = result.unionByName(coocc)
-    return result
+    return _assemble_triples(pairs, predicate_lexicon, cooccurrence_window)
 
 
 # ------------------------------------------------- physical helpers

@@ -13,6 +13,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from ..functions.textnorm import tokenize_ws
+
 # Tiny per-language stopword lists (deterministic, engine-agnostic).
 STOPWORDS = {
     "en": ("the", "and", "of", "to", "in", "is", "was", "for", "on", "with",
@@ -123,7 +125,7 @@ def token_counts(docs: DataFrame, text_col: str = "text",
     a deterministic proxy for tokenizer budgeting.
     """
     text = F.col(text_col)
-    ws = F.size(F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != ""))
+    ws = F.size(tokenize_ws(text))
     pieces = F.size(F.regexp_extract_all(
         text, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0))
     return docs.select(

@@ -5,8 +5,8 @@ tags through a dependency parse (/root/reference/dependency_paraphraser/
 udpipe.py:63-102) — no parser ships in this environment, so the primary
 extractor is the pattern/co-occurrence path SURVEY §7 Phase 3 specifies:
 
-* mention pairs within a sentence (self-join on (url, sent_id), ordered,
-  non-overlapping) — entirely JVM-side;
+* ordered, non-overlapping mention pairs exploded inside each tagged
+  row — no join;
 * predicate = the token run BETWEEN the two mentions, matched against a
   broadcast predicate lexicon (equi broadcast join, J5 shape);
 * **verb-arc layer** (:func:`verb_arc_triples`) — a deterministic
@@ -17,17 +17,15 @@ extractor is the pattern/co-occurrence path SURVEY §7 Phase 3 specifies:
   (udpipe.py:63-102 arc semantics, parser-free). Layered behind the
   pattern path: arcs only for pairs the between-join did not claim.
 * optional co-occurrence fallback (``cooccurs_with``) for pairs within
-  ``window`` tokens that match no pattern.
-
-At 100 TB the self-join is per-sentence (key = (url, sent_id)) so it
-shuffles both sides on the same key once; mentions-per-sentence is tiny,
-so no pair explosion. The lexicon join is broadcast.
+  ``window`` tokens that no other layer claimed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .spans import extract_spans_udf
 
 
 def sentence_local_triples(
@@ -36,19 +34,16 @@ def sentence_local_triples(
     cooccurrence_window: int | None = None,
     verb_lexicon: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Shuffle-free triple extraction (the 100 TB path).
+    """→ (url, sent_id, subj_surface, subj_type, pred, obj_surface,
+    obj_type, subj_mention_id, obj_mention_id).
 
     Mention pairs are intra-sentence, so no self-join is needed at all:
-    spans are computed on the tagged row, pair-exploded WITHIN the row,
-    and the only join is the broadcast predicate lexicon. The physical
-    plan is scan → UDF → explode → explode → filter → broadcast-join —
-    zero exchanges.
+    spans are computed on the tagged row and pair-exploded WITHIN the
+    row; :func:`_assemble_triples` adds the pattern join, the optional
+    verb-arc layer (``verb_lexicon``) and the optional co-occurrence
+    fallback. Without arcs the physical plan is scan → UDF → explode →
+    explode → filter → broadcast-join — zero exchanges.
     """
-    from .spans import extract_spans_udf
-
-    spark = tagged.sparkSession
-    lex = spark.createDataFrame(
-        sorted(predicate_lexicon.items()), "between string, pred string")
     sp = tagged.withColumn(
         "spans", extract_spans_udf(F.col("pred_tags"), F.col("tokens")))
     pairs = (
@@ -63,42 +58,70 @@ def sentence_local_triples(
             F.col("m1.tag_type").alias("subj_type"),
             F.col("m2.surface").alias("obj_surface"),
             F.col("m2.tag_type").alias("obj_type"),
-            F.col("m1.end").alias("gap_start"),
-            F.col("m2.start").alias("gap_end"),
+            (F.col("m2.start") - F.col("m1.end")).alias("gap"),
             F.array_join(
                 F.slice(F.col("tokens"), F.col("m1.end") + 1,
                         F.col("m2.start") - F.col("m1.end")), " ").alias("between"),
         )
     )
-    out_cols = [
-        "url", "sent_id", "subj_surface", "subj_type", "pred",
-        "obj_surface", "obj_type", "subj_mention_id", "obj_mention_id",
-    ]
-    result = pairs.join(F.broadcast(lex), on="between", how="inner").select(*out_cols)
-    if verb_lexicon:
-        result = _layer_verb_arcs(result, tagged, verb_lexicon, out_cols)
-    if cooccurrence_window is not None:
-        result = result.unionByName(
-            _cooccurrence_fallback(pairs, result, cooccurrence_window,
-                                   out_cols))
-    return result
+    arcs = verb_arc_triples(tagged, verb_lexicon) if verb_lexicon else None
+    return _assemble_triples(pairs, predicate_lexicon, cooccurrence_window,
+                             arcs)
 
 
+_OUT_COLS = [
+    "url", "sent_id", "subj_surface", "subj_type", "pred",
+    "obj_surface", "obj_type", "subj_mention_id", "obj_mention_id",
+]
 _PAIR_KEYS = ["url", "sent_id", "subj_mention_id", "obj_mention_id"]
 
 
-def _cooccurrence_fallback(pairs: DataFrame, claimed: DataFrame,
-                           window: int, out_cols: list[str]) -> DataFrame:
-    """cooccurs_with rows for in-window pairs NO other layer claimed —
-    anti-join on the pair keys against everything already emitted
-    (pattern AND verb-arc), not just the pattern lexicon, so one
-    relation never yields a duplicate co-occurrence edge."""
-    return (
-        pairs.join(claimed.select(*_PAIR_KEYS), on=_PAIR_KEYS, how="left_anti")
-        .filter(F.col("gap_end") - F.col("gap_start") <= window)
-        .withColumn("pred", F.lit("cooccurs_with"))
-        .select(*out_cols)
-    )
+def _assemble_triples(pairs: DataFrame, predicate_lexicon: dict[str, str],
+                      cooccurrence_window: int | None = None,
+                      arcs: DataFrame | None = None) -> DataFrame:
+    """The one triple tail shared by the staged and fused paths.
+
+    ``pairs``: (url, sent_id, subj/obj_mention_id, subj/obj_surface,
+    subj/obj_type, gap, between). Pattern triples = pairs ⨝ broadcast
+    lexicon on ``between``; ``arcs`` (verb-arc triples) are layered in
+    for pairs the pattern join did not claim; the ``cooccurs_with``
+    fallback keeps in-window pairs that neither claimed. A pair is
+    pattern-claimed iff its ``between`` is a lexicon key, so the
+    fallback is a broadcast anti-join on the lexicon — no pair-key
+    shuffle unless arcs exist.
+    """
+    lex = F.broadcast(pairs.sparkSession.createDataFrame(
+        sorted(predicate_lexicon.items()), "between string, pred string"))
+    pattern = pairs.join(lex, on="between", how="inner").select(*_OUT_COLS)
+    result = pattern
+    if arcs is not None:
+        result = pattern.unionByName(
+            arcs.join(pattern.select(*_PAIR_KEYS), on=_PAIR_KEYS,
+                      how="left_anti")
+            .select(*_OUT_COLS))
+    if cooccurrence_window is not None:
+        cooc = pairs.join(lex, on="between", how="left_anti")
+        if arcs is not None:
+            cooc = cooc.join(arcs.select(*_PAIR_KEYS), on=_PAIR_KEYS,
+                             how="left_anti")
+        result = result.unionByName(
+            cooc.filter(F.col("gap") <= cooccurrence_window)
+            .withColumn("pred", F.lit("cooccurs_with"))
+            .select(*_OUT_COLS))
+    return result
+
+
+def _indexed_spans() -> Column:
+    """Spans of the row's BIOES tags with their mention index:
+    array<struct<mention_id, start, end, tag_type, surface>>."""
+    # NOTE: field aliases on HOF lambda variables don't stick (Spark
+    # names them y_N), so the struct is cast to an explicit schema
+    return F.transform(
+        extract_spans_udf(F.col("pred_tags"), F.col("tokens")),
+        lambda m, i: F.struct(
+            i, m["start"], m["end"], m["tag_type"], m["surface"],
+        ).cast("struct<mention_id:int,start:int,end:int,"
+               "tag_type:string,surface:string>"))
 
 
 def verb_arc_triples(tagged: DataFrame,
@@ -117,21 +140,11 @@ def verb_arc_triples(tagged: DataFrame,
 
     ``verb_lexicon``: verb token → predicate name.
     """
-    from .spans import extract_spans_udf
-
     spark = tagged.sparkSession
     vlex = spark.createDataFrame(
         sorted(verb_lexicon.items()), "verb string, pred string")
-    # NOTE: field aliases on HOF lambda variables don't stick (Spark
-    # names them y_N), so the struct is cast to an explicit schema
-    spans_i = F.transform(
-        extract_spans_udf(F.col("pred_tags"), F.col("tokens")),
-        lambda m, i: F.struct(
-            i, m["start"], m["end"], m["tag_type"], m["surface"],
-        ).cast("struct<mention_id:int,start:int,end:int,"
-               "tag_type:string,surface:string>"))
     verbs = (
-        tagged.select("url", "sent_id", spans_i.alias("spans"),
+        tagged.select("url", "sent_id", _indexed_spans().alias("spans"),
                       F.posexplode("tokens").alias("pos", "verb"))
         .join(F.broadcast(vlex), on="verb")
         # a verb token inside a mention span is part of the entity name
@@ -211,18 +224,9 @@ def parsed_arc_triples(parsed: DataFrame,
 
     Still entirely row-local HOFs; the plan shape is unchanged.
     """
-    from .spans import extract_spans_udf
-
-    spans_i = F.transform(
-        extract_spans_udf(F.col("pred_tags"), F.col("tokens")),
-        lambda m, i: F.struct(
-            i, m["start"], m["end"], m["tag_type"], m["surface"],
-        ).cast("struct<mention_id:int,start:int,end:int,"
-               "tag_type:string,surface:string>"))
-
     verbs = (
         parsed.select(
-            "url", "sent_id", "tokens", spans_i.alias("spans"),
+            "url", "sent_id", "tokens", _indexed_spans().alias("spans"),
             F.col(arcs_col).alias("arcs"),
             F.posexplode(arcs_col).alias("apos", "arc"))
         .filter(F.col("arc.upos") == "VERB")
@@ -295,97 +299,6 @@ def parsed_arc_triples(parsed: DataFrame,
         .dropDuplicates(["url", "sent_id", "subj_mention_id",
                          "obj_mention_id", "pred"])
     )
-
-
-def _layer_verb_arcs(result: DataFrame, tagged: DataFrame,
-                     verb_lexicon: dict[str, str],
-                     out_cols: list[str]) -> DataFrame:
-    """Union arc triples for pairs the pattern path did not claim."""
-    keys = ["url", "sent_id", "subj_mention_id", "obj_mention_id"]
-    arcs = (
-        verb_arc_triples(tagged, verb_lexicon)
-        .join(result.select(*keys), on=keys, how="left_anti")
-        .select(*out_cols)
-    )
-    return result.unionByName(arcs)
-
-
-def mention_pairs(mentions: DataFrame, tagged: DataFrame) -> DataFrame:
-    """Ordered in-sentence mention pairs with the between-token phrase.
-
-    ``tagged`` supplies the tokens array (url, sent_id, tokens).
-    """
-    m1 = mentions.alias("m1")
-    m2 = mentions.alias("m2")
-    pairs = (
-        m1.join(m2, on=[
-            F.col("m1.url") == F.col("m2.url"),
-            F.col("m1.sent_id") == F.col("m2.sent_id"),
-            F.col("m1.end") <= F.col("m2.start"),
-        ])
-        .select(
-            F.col("m1.url").alias("url"),
-            F.col("m1.sent_id").alias("sent_id"),
-            F.col("m1.mention_id").alias("subj_mention_id"),
-            F.col("m2.mention_id").alias("obj_mention_id"),
-            F.col("m1.surface").alias("subj_surface"),
-            F.col("m1.tag_type").alias("subj_type"),
-            F.col("m2.surface").alias("obj_surface"),
-            F.col("m2.tag_type").alias("obj_type"),
-            F.col("m1.end").alias("gap_start"),
-            F.col("m2.start").alias("gap_end"),
-        )
-    )
-    toks = tagged.select("url", "sent_id", "tokens")
-    return (
-        pairs.join(toks, on=["url", "sent_id"])
-        .withColumn(
-            "between",
-            F.array_join(
-                F.slice(
-                    F.col("tokens"),
-                    F.col("gap_start") + 1,          # slice() is 1-based
-                    F.col("gap_end") - F.col("gap_start"),
-                ),
-                " ",
-            ),
-        )
-        .drop("tokens")
-    )
-
-
-def extract_triples(
-    mentions: DataFrame,
-    tagged: DataFrame,
-    predicate_lexicon: dict[str, str],
-    cooccurrence_window: int | None = None,
-    verb_lexicon: dict[str, str] | None = None,
-) -> DataFrame:
-    """→ (url, sent_id, subj_surface, subj_type, pred, obj_surface,
-    obj_type, subj_mention_id, obj_mention_id).
-
-    Pattern triples via broadcast lexicon equi-join on the between-phrase;
-    optional verb-arc layer (``verb_lexicon``) for predicates the exact
-    between-match misses; optional windowed co-occurrence fallback for
-    unmatched pairs.
-    """
-    spark = mentions.sparkSession
-    lex = spark.createDataFrame(
-        sorted(predicate_lexicon.items()), "between string, pred string")
-    pairs = mention_pairs(mentions, tagged)
-    pattern = pairs.join(F.broadcast(lex), on="between", how="inner")
-    out_cols = [
-        "url", "sent_id", "subj_surface", "subj_type", "pred",
-        "obj_surface", "obj_type", "subj_mention_id", "obj_mention_id",
-    ]
-    result = pattern.select(*out_cols)
-    if verb_lexicon:
-        result = _layer_verb_arcs(result, tagged, verb_lexicon, out_cols)
-    if cooccurrence_window is not None:
-        result = result.unionByName(
-            _cooccurrence_fallback(pairs, result, cooccurrence_window,
-                                   out_cols))
-    return result
 
 
 def canonical_triples(triples: DataFrame, links: DataFrame) -> DataFrame:

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.urlnorm import normalize_url
+from ..functions.urlnorm import normalize_url, url_domain
 from ..operators.decontam import decontaminate, strip_boilerplate
 from ..operators.dedup import exact_duplicates, ngram_jaccard_pairs
 from ..operators.textstats import (language_id, quality_scores,
@@ -106,9 +106,7 @@ class CorpusPrepPipeline(SnapshotStagedPlan):
         """Domain-scoped boilerplate strip; schema preserved."""
         if self.boilerplate_frac is None:
             return docs
-        dom = docs.withColumn(
-            "_domain",
-            F.regexp_extract("canonical_url", r"https?://([^/?#]+)", 1))
+        dom = docs.withColumn("_domain", url_domain(F.col("canonical_url")))
         out = strip_boilerplate(
             dom, min_doc_frac=self.boilerplate_frac,
             min_docs=self.boilerplate_min_docs,

@@ -10,7 +10,7 @@
       → [stage mentions]  salted repartition → Arrow-batched CRF tagging
                           → BIOES spans
       → [stage links]     broadcast alias-index cosine top-k → top-1
-      → [stage triples]   in-sentence pair join + broadcast predicate
+      → [stage triples]   row-local mention pairs + broadcast predicate
                           lexicon (+ optional co-occurrence fallback)
       → [stage canonical] connected components over (surface ↔ canonical)
                           edges → entity_nodes + canonical edge table
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datagen import PREDICATE_LEXICON
+from ..functions.urlnorm import url_domain
 from ..operators.cc import connected_components
 from ..operators.decontam import strip_boilerplate
 from ..operators.linking import candidate_links, link_mentions
@@ -40,9 +41,7 @@ from ..operators.spans import mentions_table
 from ..operators.tagger import (repartition_by_length, sentences_table,
                                 tag_sentences)
 from ..operators.triples import canonical_triples, sentence_local_triples
-from .staged import SnapshotStagedPlan, _partition_lineage  # noqa: F401
-# _partition_lineage re-exported: pre-round-6 callers imported it from
-# this module (it moved to .staged when CorpusPrepPipeline joined)
+from .staged import SnapshotStagedPlan
 
 
 def salted_repartition(df: DataFrame, key: str = "url", salt: int = 64,
@@ -50,9 +49,7 @@ def salted_repartition(df: DataFrame, key: str = "url", salt: int = 64,
     """Spread skewed domains: partition on (xxhash64(domain) % salt,
     xxhash64(key)) so a single hot domain occupies ``salt`` partitions
     instead of one."""
-    # no trailing slash: host-only URLs (https://example.com) must still
-    # yield their host, or every such page lands in one "" domain group
-    domain = F.regexp_extract(F.col("url"), r"https?://([^/?#]+)", 1)
+    domain = url_domain(F.col("url"))
     df = df.withColumn("_salt", F.pmod(F.xxhash64(domain), F.lit(salt))) \
            .withColumn("_spread", F.xxhash64(F.col(key)))
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
@@ -132,9 +129,7 @@ class KGPipeline(SnapshotStagedPlan):
     def _strip_boilerplate_pages(self, pages: DataFrame) -> DataFrame:
         """Domain-scoped boilerplate strip with the pages schema kept."""
         cols = pages.columns
-        dom = pages.withColumn(
-            "_domain",
-            F.regexp_extract(F.col("url"), r"https?://([^/?#]+)", 1))
+        dom = pages.withColumn("_domain", url_domain(F.col("url")))
         out = strip_boilerplate(
             dom, min_doc_frac=self.boilerplate_frac,
             min_docs=self.boilerplate_min_docs,

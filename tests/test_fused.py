@@ -8,8 +8,7 @@ from ner_pytorch_spark.operators.spans import mentions_table
 from ner_pytorch_spark.operators.tagger import (fused_mentions, fused_triples,
                                                 pages_to_mention_pairs,
                                                 sentences_table, tag_sentences)
-from ner_pytorch_spark.operators.triples import (extract_triples,
-                                                 sentence_local_triples)
+from ner_pytorch_spark.operators.triples import sentence_local_triples
 
 
 @pytest.fixture(scope="module")
@@ -54,15 +53,6 @@ def test_fused_triples_match_staged(spark, corpus):
     lex = datagen.PREDICATE_LEXICON
     a = sorted(map(tuple, sentence_local_triples(tagged, lex).collect()))
     b = sorted(map(tuple, fused_triples(fused, lex).collect()))
-    assert a == b
-
-
-def test_sentence_local_matches_join_based(spark, corpus):
-    _, _, tagged, _ = corpus
-    lex = datagen.PREDICATE_LEXICON
-    mentions = mentions_table(tagged)
-    a = sorted(map(tuple, extract_triples(mentions, tagged, lex).collect()))
-    b = sorted(map(tuple, sentence_local_triples(tagged, lex).collect()))
     assert a == b
 
 

@@ -65,21 +65,20 @@ def test_arc_corpus_prf(spark):
     """C6 gate on the EXTENDED corpus (predicates not the exact
     between-phrase): pattern + verb-arc layering must keep triple
     P/R ≥ 0.95 (exact 1.0 by construction)."""
-    from ner_pytorch_spark.operators.spans import mentions_table
     from ner_pytorch_spark.operators.tagger import sentences_table, tag_sentences
-    from ner_pytorch_spark.operators.triples import extract_triples
+    from ner_pytorch_spark.operators.triples import sentence_local_triples
 
     pages = datagen.pages_dataframe(spark, 150, arc_frac=0.6)
     _, _, gold_t = datagen.generate_pages(150, arc_frac=0.6)
     aliases = datagen.alias_rows()
     tagged = tag_sentences(sentences_table(pages), mode="gazetteer",
                            aliases=aliases).persist()
-    mentions = mentions_table(tagged)
     # surface-level comparison keyed by (url, sent_id, pred) with the
     # canonical ids resolved through the alias bank
     surf2id = {r["surface"]: r["canonical_id"] for r in aliases}
-    trips = extract_triples(mentions, tagged, datagen.PREDICATE_LEXICON,
-                            verb_lexicon=datagen.VERB_ARC_LEXICON).collect()
+    trips = sentence_local_triples(
+        tagged, datagen.PREDICATE_LEXICON,
+        verb_lexicon=datagen.VERB_ARC_LEXICON).collect()
     got = {(t.url, t.sent_id, surf2id[t.subj_surface], t.pred,
             surf2id[t.obj_surface]) for t in trips}
     gold = {(g["url"], g["sent_id"], g["subj_id"], g["pred"], g["obj_id"])
@@ -90,7 +89,7 @@ def test_arc_corpus_prf(spark):
     assert p >= 0.95 and r >= 0.95, (p, r)
     # and WITHOUT the arc layer, recall genuinely drops (the arc
     # sentences are invisible to the exact between-match)
-    plain = extract_triples(mentions, tagged, datagen.PREDICATE_LEXICON).collect()
+    plain = sentence_local_triples(tagged, datagen.PREDICATE_LEXICON).collect()
     got_plain = {(t.url, t.sent_id, surf2id[t.subj_surface], t.pred,
                   surf2id[t.obj_surface]) for t in plain}
     assert len(got_plain & gold) < len(gold)
@@ -109,18 +108,16 @@ def test_alias_bank_stable():
 def test_cooccurrence_excludes_arc_claimed_pairs(spark):
     """A pair claimed by the verb-arc layer must NOT also emit a
     cooccurs_with fallback row (one relation, one edge)."""
-    from ner_pytorch_spark.operators.triples import extract_triples
-    from ner_pytorch_spark.operators.spans import mentions_table
     from ner_pytorch_spark.operators.tagger import sentences_table, tag_sentences
+    from ner_pytorch_spark.operators.triples import sentence_local_triples
 
     pages = datagen.pages_dataframe(spark, 80, arc_frac=0.9)
     aliases = datagen.alias_rows()
     tagged = tag_sentences(sentences_table(pages), mode="gazetteer",
                            aliases=aliases).persist()
-    mentions = mentions_table(tagged)
-    trips = extract_triples(mentions, tagged, datagen.PREDICATE_LEXICON,
-                            cooccurrence_window=50,
-                            verb_lexicon=datagen.VERB_ARC_LEXICON).collect()
+    trips = sentence_local_triples(
+        tagged, datagen.PREDICATE_LEXICON, cooccurrence_window=50,
+        verb_lexicon=datagen.VERB_ARC_LEXICON).collect()
     keys = {}
     for t in trips:
         keys.setdefault((t.url, t.sent_id, t.subj_mention_id,

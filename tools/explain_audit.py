@@ -12,6 +12,9 @@ Checks (printed + asserted):
     bucketing via one Arrow stage, candidate join on (table, bucket)
   * verb_arc_triples: zero exchanges (HOF resolution inside the row,
     verb lexicon broadcast)
+  * co-occurrence triples (window=3): the staged (kg_triples_cooc) and
+    fused paths have no hash exchange and no sort-merge join — the
+    fallback is a broadcast anti-join on the lexicon, not on pair keys
   * simhash_pairs: pairs scored inside chunk buckets, never a cartesian
     product; with max_bucket set the bucket cap is in the plan
   * simhash_pairs and forced-dense ngram_jaccard_pairs: on a warm call
@@ -34,6 +37,11 @@ def plan_of(df) -> str:
     jvm = spark.sparkContext._jvm
     return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
+
+
+# formatted explain prints a shuffle as "Exchange (N)" in the tree and its
+# partitioning under "Arguments:", so a hash exchange is matched there
+NO_SHUFFLE = [r"Arguments: hashpartitioning", r"SortMergeJoin"]
 
 
 def check(name, plan, must=(), must_not=()):
@@ -65,7 +73,7 @@ def main():
     plan = plan_of(tr)
     ok &= check("fused_kg_zero_exchange", plan,
                 must=[r"BroadcastHashJoin", r"MapInArrow"],
-                must_not=[r"\bExchange hashpartitioning", r"SortMergeJoin"])
+                must_not=NO_SHUFFLE)
     # the formatted plan's tree: everything above the fused stage's
     # coalesced input is the KG path — no pandas crossing there (the
     # distributed datagen source below it is itself a MapInPandas)
@@ -133,6 +141,13 @@ def main():
     ok &= check("verb_arc_zero_exchange", plan,
                 must=[r"BroadcastHashJoin"],
                 must_not=[r"Exchange hashpartitioning", r"SortMergeJoin"])
+
+    for name, cooc in (
+            ("staged", e.q_kg_triples_cooc(spark, SF)),
+            ("fused", fused_triples(fused, datagen.PREDICATE_LEXICON,
+                                    cooccurrence_window=3))):
+        ok &= check(f"triples_cooc_zero_exchange[{name}]", plan_of(cooc),
+                    must_not=NO_SHUFFLE)
 
     sh = e.q_simhash_pairs(spark, SF)
     plan = plan_of(sh)
