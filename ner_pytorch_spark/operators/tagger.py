@@ -24,10 +24,11 @@ Two modes share one decode pipeline (payload → per-task memo → decode):
 Stage sizing: the fused crossing reads its input through
 :func:`~ner_pytorch_spark.session.arrow_stage_input`, which coalesces an
 input smaller than cores × the AQE advisory size to one partition per
-core — every Python task pays a fixed start-up cost, so a small input
-split into more partitions than cores pays it once per core, not once
-per upstream partition. ``tag_sentences`` keeps its caller's
-partitioning.
+core. Each Python task unpickles its function and starts a cold decode
+memo, so a small input split into more partitions than cores pays that
+once per core, not once per upstream partition (on kg_fused, 4 CPUs:
+12 tasks instead of 4 cost 28% of rows/s). ``tag_sentences`` keeps its
+caller's partitioning.
 
 Featurization parity contracts (unit-tested):
   word ids: lowercase + digit-fold + <UNK> fallback

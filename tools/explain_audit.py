@@ -114,7 +114,8 @@ def main():
     plan = plan_of(topk)
     ok &= check("window_topk_single_shuffle", plan,
                 must=[r"Window"],)
-    n_ex = len(re.findall(r"Exchange hashpartitioning", plan))
+    # a formatted plan prints a shuffle's partitioning as its Arguments line
+    n_ex = len(re.findall(r"Arguments: hashpartitioning", plan))
     print(("OK " if n_ex <= 2 else "FAIL") + f" window_topk_exchanges ({n_ex}; repartition+window)")
     ok &= n_ex <= 2
 
