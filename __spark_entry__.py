@@ -393,7 +393,8 @@ def q_kmv_distinct(spark, sf_dir):
 
 
 def q_doc_components(spark, sf_dir):
-    """Connected components over near-dup edges (unigram jaccard ≥ 0.62)."""
+    """Connected components over near-dup edges (unigram jaccard ≥ 0.62):
+    min-label propagation plus pointer doubling, one checkpoint per round."""
     from ner_pytorch_spark.operators.cc import connected_components
     from ner_pytorch_spark.operators.dedup import ngram_jaccard_pairs
 

@@ -126,7 +126,7 @@ def _indexed_spans() -> Column:
 
 def verb_arc_triples(tagged: DataFrame,
                      verb_lexicon: dict[str, str]) -> DataFrame:
-    """C6 arc-shaped extraction without a parser (zero exchanges).
+    """C6 arc-shaped extraction without a parser (one exchange).
 
     The reference walks UDPipe dependency arcs carrying NER tags
     (/root/reference/dependency_paraphraser/udpipe.py:63-102); this is
@@ -135,8 +135,8 @@ def verb_arc_triples(tagged: DataFrame,
     nearest before the verb, object = the mention whose START is nearest
     after. All resolution happens INSIDE the row with higher-order array
     functions (filter/transform/array_max) — the physical plan is
-    scan → spans UDF → posexplode → broadcast verb join → project,
-    no window, no shuffle.
+    scan → spans UDF → posexplode → broadcast verb join → project, no
+    window; the closing ``dropDuplicates`` is the one hash exchange.
 
     ``verb_lexicon``: verb token → predicate name.
     """
@@ -206,7 +206,8 @@ def parsed_arc_triples(parsed: DataFrame,
     (broadcast join) or its lowercased form. All arc/mention resolution
     is row-local higher-order-function work — the physical plan is
     scan → spans UDF → posexplode → (broadcast join) → explode ×2 →
-    project, zero exchanges, same 100 TB shape as the fallback path.
+    project, then the closing ``dropDuplicates`` as the one hash
+    exchange, the same 100 TB shape as the fallback path.
 
     ``conj_propagate=True`` adds the conjunction distribution the
     reference's tree walk gets by linearizing whole subtrees

@@ -62,14 +62,15 @@ def entity_nodes_from_links(links: DataFrame) -> DataFrame:
     surfaces ↔ canonical ids become an undirected bipartite graph
     ('s:<surface>' / 'c:<id>' nodes); connected components merge
     entities that share any surface; each c-node carries its component
-    label plus deterministic aggregates of its link rows.
+    label plus deterministic aggregates of its link rows. The edges go
+    to :func:`connected_components` as they are: it deduplicates them.
     Output: (canonical_id, entity_component, canonical_surface,
     tag_type, n_mentions).
     """
     surf_edges = links.select(
         F.concat(F.lit("s:"), F.col("surface")).alias("src"),
         F.concat(F.lit("c:"), F.col("canonical_id").cast("string")).alias("dst"),
-    ).distinct()
+    )
     comps = connected_components(surf_edges)
     return (
         comps.filter(F.col("node").startswith("c:"))

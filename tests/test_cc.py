@@ -1,5 +1,7 @@
 """Connected components: chains, isolated pairs, convergence."""
 
+CHAIN60 = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(60)]
+
 
 def test_two_components(spark):
     edges = spark.createDataFrame(
@@ -29,46 +31,9 @@ def test_long_int_ids(spark):
     assert got == {3: 3, 5: 3, 9: 3, 20: 20, 21: 20}
 
 
-def test_star_cc_matches_label_propagation(spark, tmp_path):
-    """The web-scale alternating large/small-star variant produces the
-    SAME (node, component) mapping as label propagation on chains (the
-    high-diameter case it exists for), cycles, and random graphs —
-    including with reliable-storage checkpoints."""
-    import numpy as np
-
-    from ner_pytorch_spark.operators.cc import (connected_components,
-                                                connected_components_star)
-
-    # 60-node chain: diameter 60, star rounds must still converge fast
-    chain = spark.createDataFrame(
-        [(f"n{i:02d}", f"n{i+1:02d}") for i in range(60)],
-        "src string, dst string")
-    a = {r.node: r.component for r in connected_components(chain, max_iter=80).collect()}
-    b = {r.node: r.component for r in connected_components_star(chain).collect()}
-    assert a == b and set(b.values()) == {"n00"}
-
-    # cycle + random graphs, int ids, plus checkpoint-to-storage mode
-    rng = np.random.default_rng(23)
-    cyc = [(i, (i + 1) % 25) for i in range(25)]
-    cases = [cyc]
-    for _ in range(2):
-        n_nodes = int(rng.integers(20, 60))
-        es = [(int(rng.integers(0, n_nodes)), int(rng.integers(0, n_nodes)))
-              for _ in range(int(rng.integers(10, 80)))]
-        cases.append([(x, y) for x, y in es if x != y])
-    for i, es in enumerate(cases):
-        if not es:
-            continue
-        df = spark.createDataFrame(es, "src long, dst long")
-        want = {r.node: r.component for r in connected_components(df).collect()}
-        got = {r.node: r.component for r in connected_components_star(
-            df, checkpoint_dir=str(tmp_path / f"ck{i}") if i == 0 else None
-        ).collect()}
-        assert got == want, f"case {i}"
-
-
 def test_random_graphs_vs_union_find(spark):
-    """Differential: Spark cc == pure union-find on random graphs."""
+    """Differential: Spark cc == pure union-find on a 60-chain, a
+    25-cycle and random graphs."""
     import numpy as np
 
     def union_find_components(edges, nodes):
@@ -97,18 +62,59 @@ def test_random_graphs_vs_union_find(spark):
 
     from ner_pytorch_spark.operators.cc import connected_components
 
-    rng = np.random.default_rng(17)
-    for trial in range(3):
-        n_nodes = int(rng.integers(20, 60))
-        n_edges = int(rng.integers(10, 80))
-        edges = [(int(rng.integers(0, n_nodes)), int(rng.integers(0, n_nodes)))
-                 for _ in range(n_edges)]
-        edges = [(a, b) for a, b in edges if a != b]
-        nodes = sorted({x for e in edges for x in e})
-        if not edges:
-            continue
-        df = spark.createDataFrame(edges, "src long, dst long")
+    # the chain and cycle are the high-diameter cases; (z, z) is a node
+    # with only a self-loop; a row with a null endpoint is dropped whole
+    cases = [("string", CHAIN60 + [("z", "z"), ("w", None)]),
+             ("long", [(i, (i + 1) % 25) for i in range(25)])]
+    for seed in (17, 23):
+        rng = np.random.default_rng(seed)
+        for _ in range(3 if seed == 17 else 2):
+            n_nodes = int(rng.integers(20, 60))
+            edges = [(int(rng.integers(0, n_nodes)),
+                      int(rng.integers(0, n_nodes)))
+                     for _ in range(int(rng.integers(10, 80)))]
+            cases.append(("long", [(a, b) for a, b in edges if a != b]
+                          + [(1000, None)]))
+    for i, (typ, edges) in enumerate(cases):
+        df = spark.createDataFrame(edges, f"src {typ}, dst {typ}")
         got = {r.node: r.component
                for r in connected_components(df).collect()}
-        want = union_find_components(edges, nodes)
-        assert got == want, f"trial {trial}"
+        kept = [(a, b) for a, b in edges if a is not None and b is not None]
+        nodes = sorted({x for e in kept for x in e})
+        assert got == union_find_components(kept, nodes), f"case {i}"
+
+
+def test_round_cap_raises(spark, monkeypatch):
+    """Hitting the round cap is an error, never unconverged labels."""
+    import pytest
+
+    from ner_pytorch_spark.operators import cc
+
+    monkeypatch.setattr(cc, "_MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="_MAX_ROUNDS=2"):
+        cc.connected_components(
+            spark.createDataFrame(CHAIN60, "src string, dst string"))
+
+
+def test_one_checkpoint_per_round(spark, monkeypatch):
+    """Each round is one localCheckpoint whose observed metric decides
+    convergence: the edge checkpoint plus one per round, and no other
+    action. The 60-chain converges in 6 rounds (O(log n))."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from ner_pytorch_spark.operators.cc import connected_components
+
+    chain = spark.createDataFrame(CHAIN60, "src string, dst string")
+    calls = {m: 0 for m in ("localCheckpoint", "observe", "count",
+                            "first", "collect")}
+    for name in calls:
+        def counted(self, *args, _orig=getattr(DataFrame, name),
+                    _name=name, **kw):
+            calls[_name] += 1
+            return _orig(self, *args, **kw)
+        monkeypatch.setattr(DataFrame, name, counted)
+    connected_components(chain)
+    monkeypatch.undo()
+    assert calls["observe"] == 6, calls
+    assert calls["localCheckpoint"] == calls["observe"] + 1, calls
+    assert calls["count"] == calls["first"] == calls["collect"] == 0, calls

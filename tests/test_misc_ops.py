@@ -80,38 +80,6 @@ def test_argmax_decode():
     assert paths == [[2, 1], [3]]
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located join: both sides bucketed+sorted on the join key →
-    the join plan has ZERO Exchange nodes (no shuffle at all)."""
-    import re
-
-    from ner_pytorch_spark.plans.bucketing import read_bucketed, save_bucketed
-
-    orders = spark.createDataFrame(
-        [(i, f"c{i % 7}", float(i)) for i in range(500)],
-        "o_orderkey long, cust string, total double")
-    items = spark.createDataFrame(
-        [(i % 500, j, float(i * j % 97)) for i in range(1000) for j in (0, 1)],
-        "o_orderkey long, line int, price double")
-    save_bucketed(orders, "b_orders", 4, ["o_orderkey"],
-                  path=str(tmp_path / "bo"))
-    save_bucketed(items, "b_items", 4, ["o_orderkey"],
-                  path=str(tmp_path / "bi"))
-    try:
-        # hint("merge"): the tables are tiny so Spark would broadcast —
-        # the scale-relevant plan is the sort-merge join, which bucket
-        # co-location must run with ZERO shuffle (and zero extra Sort)
-        joined = read_bucketed(spark, "b_orders").hint("merge").join(
-            read_bucketed(spark, "b_items"), on="o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert not re.search(r"Exchange", plan), plan
-        assert joined.count() == 2000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_items")
-
-
 def test_kmv_sketch_accuracy_and_exactness(spark):
     """KMV distinct estimate: exact below k; within ~3/sqrt(k) relative
     error above k (deterministic md5 hashing, so the bound is a fixed
