@@ -44,6 +44,115 @@ def stopword_ratio(tokens: Column, lang: str) -> Column:
                   / F.size(tokens)).otherwise(F.lit(0.0))
 
 
+def text_metrics(docs: DataFrame, keep: list[str], n: int = 2,
+                 text_col: str = "text") -> DataFrame:
+    """The ``keep`` columns plus every language-ID, quality and
+    repetition column of each doc, from ONE ``tokens_lower`` projection:
+    row-local, no join, no shuffle.
+
+    → keep…, pred_lang, confidence, n_chars, n_tokens, mean_token_len,
+    punct_ratio, stopword_ratio_en, digit_ratio, quality, dup_line_frac,
+    top_ngram_frac, dup_ngram_frac. :func:`language_id`,
+    :func:`quality_scores` and :func:`repetition_scores` select from
+    this frame; column pruning drops the columns a caller does not
+    select, so each computes only its own.
+
+    Every expression that a later one references more than once gets
+    its own projection step: HOF lambdas defeat codegen subexpression
+    elimination, and CollapseProject keeps a step whose non-cheap
+    columns are referenced more than once, so the tokenize chain, each
+    stopword filter and the gram hashing run once per row (inlining the
+    token array measured 5 evaluations ≈ 7.4 s vs 2.4 s at sf1.0).
+    """
+    langs = sorted(STOPWORDS)
+    text, toks = F.col("_text"), F.col("_toks")
+    tok = docs.select(*keep, F.col(text_col).alias("_text"),
+                      tokens_lower(text_col).alias("_toks"))
+
+    def char_ratio(pattern: str) -> Column:  # share of chars matching
+        n_chars = F.length(text)
+        return F.when(
+            n_chars > 0,
+            (n_chars - F.length(F.regexp_replace(text, pattern, "")))
+            / n_chars).otherwise(F.lit(0.0))
+
+    # Repetition keys are 8-byte xxhash64 values, never the line/gram
+    # string (the decontam/jaccard house contract): every count is exact
+    # at 2^-64 collision odds. A gram is an n-token slice (tokens are
+    # space-free [a-z0-9]+ runs, so slice ↔ joined gram is a bijection),
+    # built by zip_with over the n shifted token arrays.
+    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    grams = F.transform(F.slice(toks, 1, m), lambda t: F.array(t))
+    for k in range(1, n):
+        grams = F.zip_with(grams, F.slice(toks, k + 1, m),
+                           lambda g, t: F.concat(g, F.array(t)))
+    feats = tok.select(
+        *keep, text,
+        *[stopword_ratio(toks, lang).alias(f"_r_{lang}") for lang in langs],
+        F.size(toks).alias("_n_tok"),
+        F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t))
+        .alias("_tok_chars"),
+        char_ratio(r"[^\w\s]").alias("_punct"),
+        char_ratio(r"[0-9]").alias("_digit"),
+        F.transform(
+            F.filter(F.transform(F.split(text, "\n"), lambda ln: F.trim(ln)),
+                     lambda ln: F.length(ln) > 0),
+            lambda ln: F.xxhash64(ln)).alias("_lines"),
+        F.array_sort(F.transform(grams, lambda g: F.xxhash64(g)))
+        .alias("_grams"))
+
+    # run lengths of the sorted gram hashes: the 1-based positions where
+    # a run ends (the next hash differs, or the array ends), then the
+    # gaps between consecutive ends
+    g = F.col("_grams")
+    ends = F.array_compact(F.transform(
+        F.zip_with(g, F.slice(g, 2, F.size(g)),
+                   lambda x, nxt: nxt.isNull() | (x != nxt)),
+        lambda is_end, i: F.when(is_end, i + 1)))
+    runs = feats.select(
+        "*", F.zip_with(ends, F.concat(F.array(F.lit(0)), ends),
+                        lambda e, prev: e - prev).alias("_runs"))
+
+    r = {lang: F.col(f"_r_{lang}") for lang in langs}
+    best = F.greatest(*r.values())
+    pred = F.lit("und")
+    # reverse order so earlier languages win ties (matches SQL CASE order)
+    for lang in reversed(langs):
+        pred = F.when(r[lang] == best, F.lit(lang)).otherwise(pred)
+    n_tokens, sw_en = F.col("_n_tok"), r["en"]
+    punct, digit = F.col("_punct"), F.col("_digit")
+    quality = (
+        F.least(n_tokens / F.lit(20.0), F.lit(1.0)) * 0.3
+        + F.least(sw_en * 4, F.lit(1.0)) * 0.3
+        + (1 - F.least(punct * 4, F.lit(1.0))) * 0.2
+        + (1 - F.least(digit * 4, F.lit(1.0))) * 0.2
+    )
+    lines, run_len, n_grams = F.col("_lines"), F.col("_runs"), F.size(g)
+
+    def rep(frac: Column, total: Column) -> Column:
+        # no lines / fewer than n tokens / null text: nothing to repeat
+        return F.round(F.coalesce(F.when(total > 0, frac), F.lit(0.0)), 6)
+
+    return runs.select(
+        *keep,
+        F.when(best > 0, pred).otherwise(F.lit("und")).alias("pred_lang"),
+        F.round(best, 6).alias("confidence"),
+        F.length(text).alias("n_chars"),
+        n_tokens.alias("n_tokens"),
+        F.round(F.when(n_tokens > 0, F.col("_tok_chars") / n_tokens)
+                .otherwise(F.lit(0.0)), 6).alias("mean_token_len"),
+        F.round(punct, 6).alias("punct_ratio"),
+        F.round(sw_en, 6).alias("stopword_ratio_en"),
+        F.round(digit, 6).alias("digit_ratio"),
+        F.round(quality, 6).alias("quality"),
+        rep(1 - F.size(F.array_distinct(lines)) / F.size(lines),
+            F.size(lines)).alias("dup_line_frac"),
+        rep(F.array_max(run_len) / n_grams, n_grams).alias("top_ngram_frac"),
+        rep(F.aggregate(run_len, F.lit(0),
+                        lambda a, c: a + F.when(c >= 2, c).otherwise(0))
+            / n_grams, n_grams).alias("dup_ngram_frac"))
+
+
 def language_id(docs: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
     """n-gram-free heuristic language ID: argmax stopword ratio.
@@ -51,22 +160,8 @@ def language_id(docs: DataFrame, text_col: str = "text",
     → (doc_id, pred_lang, confidence). Deterministic tie-break by
     language code (ascending) at equal ratios; 'und' when all zero.
     """
-    toks = F.col("_toks")
-    df = docs.select(F.col(id_col).alias("doc_id"),
-                     tokens_lower(text_col).alias("_toks"))
-    ratios = [stopword_ratio(toks, lang).alias(f"r_{lang}")
-              for lang in sorted(STOPWORDS)]
-    df = df.select("doc_id", *ratios)
-    langs = sorted(STOPWORDS)
-    best = F.greatest(*[F.col(f"r_{lang}") for lang in langs])
-    pred = F.lit("und")
-    # reverse order so earlier languages win ties (matches SQL CASE order)
-    for lang in reversed(langs):
-        pred = F.when(F.col(f"r_{lang}") == best, F.lit(lang)).otherwise(pred)
-    return df.select(
-        "doc_id",
-        F.when(best > 0, pred).otherwise(F.lit("und")).alias("pred_lang"),
-        F.round(best, 6).alias("confidence"))
+    return text_metrics(docs, [id_col], text_col=text_col).select(
+        F.col(id_col).alias("doc_id"), "pred_lang", "confidence")
 
 
 def quality_scores(docs: DataFrame, text_col: str = "text",
@@ -78,42 +173,10 @@ def quality_scores(docs: DataFrame, text_col: str = "text",
     deterministic formula ∈ [0,1] combining the features — a filterable
     score, not a learned model.
     """
-    # project the token array ONCE: every reference below re-evaluated
-    # the regexp_replace+split+filter chain otherwise (HOF lambdas defeat
-    # codegen subexpression elimination) — measured 5 evaluations ≈ 7.4 s
-    # vs 2.4 s at sf1.0 under the noop sink. Same trick language_id uses.
-    toks = F.col("_toks")
-    text = F.col(text_col)
-    n_chars = F.length(text)
-    n_tokens = F.size(toks)
-    mean_tok = F.when(n_tokens > 0,
-                      F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t))
-                      / n_tokens).otherwise(F.lit(0.0))
-    punct_ratio = F.when(
-        n_chars > 0,
-        (n_chars - F.length(F.regexp_replace(text, r"[^\w\s]", ""))) / n_chars
-    ).otherwise(F.lit(0.0))
-    digit_ratio = F.when(
-        n_chars > 0,
-        (n_chars - F.length(F.regexp_replace(text, r"[0-9]", ""))) / n_chars
-    ).otherwise(F.lit(0.0))
-    sw_en = stopword_ratio(toks, "en")
-    quality = (
-        F.least(n_tokens / F.lit(20.0), F.lit(1.0)) * 0.3
-        + F.least(sw_en * 4, F.lit(1.0)) * 0.3
-        + (1 - F.least(punct_ratio * 4, F.lit(1.0))) * 0.2
-        + (1 - F.least(digit_ratio * 4, F.lit(1.0))) * 0.2
-    )
-    return docs.withColumn("_toks", tokens_lower(text_col)).select(
-        F.col(id_col).alias("doc_id"),
-        n_chars.alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        F.round(mean_tok, 6).alias("mean_token_len"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(sw_en, 6).alias("stopword_ratio_en"),
-        F.round(digit_ratio, 6).alias("digit_ratio"),
-        F.round(quality, 6).alias("quality"),
-    )
+    return text_metrics(docs, [id_col], text_col=text_col).select(
+        F.col(id_col).alias("doc_id"), "n_chars", "n_tokens",
+        "mean_token_len", "punct_ratio", "stopword_ratio_en",
+        "digit_ratio", "quality")
 
 
 def token_counts(docs: DataFrame, text_col: str = "text",
@@ -150,58 +213,16 @@ def repetition_scores(docs: DataFrame, n: int = 2,
       gram appears ≥ 2 times in the doc.
 
     Docs with no lines / fewer than ``n`` tokens score 0 (nothing to
-    repeat). Fully relational: explode → two keyed aggregations — the
-    per-doc group never leaves its partition pair, no windows. These
-    are the standard repetition filters of large-corpus pipelines
-    (Gopher §A1.1 thresholds plug straight into a filter on this
-    output); not in the reference (CoNLL input needs none of this).
+    repeat). Row-local array expressions (see :func:`text_metrics`): the
+    line hashes' distinct count, and the run lengths of the doc's sorted
+    gram hashes — no explode, aggregation or join. These are the
+    standard repetition filters of large-corpus pipelines (Gopher §A1.1
+    thresholds plug straight into a filter on this output); not in the
+    reference (CoNLL input needs none of this).
     """
-    # aggregation keys are 8-byte xxhash64 values, never the line/gram
-    # STRING (the decontam/jaccard house contract): the counts feeding
-    # every output fraction are identical at 2^-64 collision odds, the
-    # two aggregations exchange ~2.5× fewer bytes, and the gram key
-    # hashes the token SLICE directly — the "a b" join string never
-    # exists (tokens are space-free [a-z0-9]+ runs, so slice ↔ joined
-    # string is a bijection). Measured 5.6 → 4.0 s at sf1.0 scale,
-    # output rows identical.
-    lines = (
-        docs.select(F.col(id_col).alias("doc_id"),
-                    F.explode(F.split(F.col(text_col), "\n")).alias("l"))
-        .select("doc_id", F.trim("l").alias("l"))
-        .filter(F.length("l") > 0)
-        .select("doc_id", F.xxhash64("l").alias("lh")))
-    line_stats = lines.groupBy("doc_id").agg(
-        (1 - F.countDistinct("lh") / F.count(F.lit(1)))
-        .alias("dup_line_frac"))
-
-    toks = docs.select(F.col(id_col).alias("doc_id"),
-                       tokens_lower(text_col).alias("toks"))
-    gram_hashes = F.when(
-        F.size("toks") >= n,
-        F.transform(F.sequence(F.lit(0), F.size("toks") - n),
-                    lambda i: F.xxhash64(F.slice("toks", i + 1, n)))
-    ).otherwise(F.array().cast("array<bigint>"))
-    per_gram = (
-        toks.select("doc_id", F.explode(gram_hashes).alias("g"))
-        .groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("c")))
-    gram_stats = per_gram.groupBy("doc_id").agg(
-        (F.max("c") / F.sum("c")).alias("top_ngram_frac"),
-        (F.sum(F.when(F.col("c") >= 2, F.col("c")).otherwise(0))
-         / F.sum("c")).alias("dup_ngram_frac"))
-
-    base = docs.select(F.col(id_col).alias("doc_id"))
-    return (
-        base.join(line_stats, on="doc_id", how="left")
-        .join(gram_stats, on="doc_id", how="left")
-        .select(
-            "doc_id",
-            F.round(F.coalesce("dup_line_frac", F.lit(0.0)), 6)
-            .alias("dup_line_frac"),
-            F.round(F.coalesce("top_ngram_frac", F.lit(0.0)), 6)
-            .alias("top_ngram_frac"),
-            F.round(F.coalesce("dup_ngram_frac", F.lit(0.0)), 6)
-            .alias("dup_ngram_frac"))
-    )
+    return text_metrics(docs, [id_col], n=n, text_col=text_col).select(
+        F.col(id_col).alias("doc_id"), "dup_line_frac", "top_ngram_frac",
+        "dup_ngram_frac")
 
 
 # --------------------------------------------------------- fingerprint

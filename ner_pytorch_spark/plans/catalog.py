@@ -16,6 +16,11 @@ The catalog abstracts the two backends behind one interface:
   no Iceberg jars, so tests drive the iceberg branch through the API
   seam (recorded writer calls) and the parquet branch for real.
 
+Snapshot bookkeeping runs no Spark job: ``read`` hands Spark the schema
+Spark itself stored in the snapshot's parquet footer (no inference
+job), and ``file_row_counts`` reads per-file row counts from the
+footers (Iceberg: from the ``files`` metadata table).
+
 Resumability contract (tested): resume-from-snapshot output ==
 single-run output, byte-identical.
 """
@@ -24,8 +29,24 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# the schema Spark writes into every parquet footer it produces
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# a data file's write-task partition id: Spark's ``part-00003-<uuid>…``
+# and Iceberg's ``00003-<task>-<uuid>….parquet``
+_FILE_PARTITION = re.compile(r"^(?:part-)?(\d+)-")
+
+
+def _write_partition(path: str) -> int:
+    m = _FILE_PARTITION.match(os.path.basename(path))
+    if m is None:
+        raise ValueError(f"data file name carries no partition id: {path!r}")
+    return int(m.group(1))
 
 
 class SnapshotCatalog:
@@ -85,8 +106,7 @@ class SnapshotCatalog:
             return self.spark.catalog.tableExists(self._ident(table))
         return self.latest_snapshot(table) is not None
 
-    def commit(self, table: str, df: DataFrame,
-               partition_by: list[str] | None = None) -> int:
+    def commit(self, table: str, df: DataFrame) -> int:
         """Write a new immutable snapshot, then atomically publish it.
 
         Iceberg: ``createOrReplace`` — one atomic REPLACE (or CREATE)
@@ -95,20 +115,12 @@ class SnapshotCatalog:
         ``_latest`` pointer.
         """
         if self.use_iceberg:
-            writer = df.writeTo(self._ident(table)).using("iceberg")
-            if partition_by:
-                from pyspark.sql import functions as F
-
-                writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-            writer.createOrReplace()
+            df.writeTo(self._ident(table)).using("iceberg").createOrReplace()
             return self.latest_snapshot(table)
         prev = self.latest_snapshot(table)
         snap = 0 if prev is None else prev + 1
         path = self.snapshot_path(table, snap)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        df.write.mode("overwrite").parquet(path)
         tmp = self._pointer(table) + ".tmp"
         os.makedirs(self._table_dir(table), exist_ok=True)
         with open(tmp, "w") as fh:
@@ -122,10 +134,44 @@ class SnapshotCatalog:
             if snapshot is not None:
                 reader = reader.option("snapshot-id", snapshot)
             return reader.table(self._ident(table))
+        path = self._snapshot_dir(table, snapshot)
+        footer = pq.read_metadata(self._data_files(path)[0]).metadata
+        schema = StructType.fromJson(json.loads(footer[_SPARK_SCHEMA_KEY]))
+        return self.spark.read.schema(schema).parquet(path)
+
+    def file_row_counts(self, table: str,
+                        snapshot: int | None = None) -> list[tuple[int, int]]:
+        """``(partition_id, n_rows)`` per non-empty data file of a
+        committed snapshot (latest if ``snapshot`` is None), without a
+        Spark job. ``partition_id`` is the write task that produced the
+        file, read from the file name.
+
+        Parquet: each file's footer row count. Iceberg: one query on the
+        table's ``files`` metadata table.
+        """
+        if self.use_iceberg:
+            version = "" if snapshot is None else f" VERSION AS OF {snapshot}"
+            rows = self.spark.sql(
+                f"SELECT file_path, record_count FROM {self._ident(table)}"
+                f".files{version}").collect()
+            counts = ((r[0], int(r[1])) for r in rows)
+        else:
+            counts = ((f, pq.read_metadata(f).num_rows) for f in
+                      self._data_files(self._snapshot_dir(table, snapshot)))
+        return [(_write_partition(f), n) for f, n in counts if n > 0]
+
+    def _snapshot_dir(self, table: str, snapshot: int | None) -> str:
         snap = self.latest_snapshot(table) if snapshot is None else snapshot
         if snap is None:
             raise FileNotFoundError(f"no snapshot for table {table!r}")
-        return self.spark.read.parquet(self.snapshot_path(table, snap))
+        return self.snapshot_path(table, snap)
+
+    @staticmethod
+    def _data_files(path: str) -> list[str]:
+        """A parquet snapshot's data files, in write-partition order (an
+        empty snapshot still holds one zero-row file with the schema)."""
+        return sorted(os.path.join(path, f) for f in os.listdir(path)
+                      if f.startswith("part-"))
 
     def read_increment(self, table: str, from_snapshot: int,
                        to_snapshot: int | None = None) -> DataFrame:

@@ -4,10 +4,12 @@ Both multi-stage plans in this package — :class:`~.kg_pipeline.KGPipeline`
 (pages → triples, the north rule) and
 :class:`~.corpus_prep.CorpusPrepPipeline` (raw docs → training-ready
 corpus) — commit every stage through a :class:`~.catalog.SnapshotCatalog`
-and append per-stage metrics plus per-partition lineage rows, so a run
-can resume from the last committed snapshot after a failure and an
-auditor can replay where every row count came from (north rule:
-"resumable from checkpoint with per-partition lineage + metrics").
+and append per-stage metrics plus lineage rows (the rows each write
+partition committed), so a run can resume from the last committed
+snapshot after a failure and an auditor can replay where every row
+count came from (north rule: "resumable from checkpoint with
+per-partition lineage + metrics"). The bookkeeping reads the committed
+snapshot's metadata and runs no Spark job of its own.
 """
 
 from __future__ import annotations
@@ -15,19 +17,8 @@ from __future__ import annotations
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .catalog import SnapshotCatalog
-
-
-def _partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition row counts — the lineage record for one stage."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid").agg(F.count(F.lit(1)).alias("n_rows"))
-        .select(F.lit(stage).alias("stage"),
-                F.col("_pid").alias("partition_id"), "n_rows")
-    )
 
 
 class SnapshotStagedPlan:
@@ -47,30 +38,29 @@ class SnapshotStagedPlan:
     def _stage(self, name: str, resume: bool, build) -> DataFrame:
         """Run one stage unless its snapshot already exists (resume).
 
-        Post-commit bookkeeping costs ONE action: the per-partition
-        lineage rows are collected (small — one row per partition) and
-        the stage's metric row count is their sum, instead of a separate
-        ``count()`` pass over the snapshot. Metric/lineage rows are
-        BUFFERED and written once per run (``_flush_bookkeeping``): the
-        parquet catalog's append re-reads and re-writes the whole table,
-        so one append per stage per table cost ~14 grow-and-rewrite jobs
-        per pipeline run. The snapshots themselves still commit per
-        stage — resumability (catalog.exists) is unaffected; only the
-        audit rows of a crashed run's completed stages are deferred.
+        Post-commit bookkeeping runs zero Spark jobs, so a stage costs
+        exactly the jobs of its build and its snapshot write. The
+        lineage rows are the committed snapshot's rows per written data
+        file, keyed by the write partition (task) that produced the
+        file, and the stage's metric row count is their sum; both come
+        from ``catalog.file_row_counts`` (parquet footers / Iceberg
+        ``files`` table), and the snapshot is re-read with its stored
+        schema (no inference job). Metric/lineage rows are BUFFERED and
+        written once per run (``_flush_bookkeeping``): the parquet
+        catalog's append re-reads and re-writes the whole table, so one
+        append per stage per table cost ~14 grow-and-rewrite jobs per
+        pipeline run. The snapshots themselves still commit per stage —
+        resumability (catalog.exists) is unaffected; only the audit rows
+        of a crashed run's completed stages are deferred.
         """
         if resume and self.catalog.exists(name):
             return self.catalog.read(name)
         t0 = time.time()
-        df = build()
-        self.catalog.commit(name, df)
-        out = self.catalog.read(name)
-        lineage = _partition_lineage(out, name).collect()
-        self._metric(name, sum(r["n_rows"] for r in lineage),
-                     time.time() - t0)
-        self._pending_lineage.extend(
-            (name, int(r["partition_id"]), int(r["n_rows"]))
-            for r in lineage)
-        return out
+        snap = self.catalog.commit(name, build())
+        files = self.catalog.file_row_counts(name, snap)
+        self._metric(name, sum(n for _, n in files), time.time() - t0)
+        self._pending_lineage.extend((name, pid, n) for pid, n in files)
+        return self.catalog.read(name, snap)
 
     def _flush_bookkeeping(self) -> None:
         """Write buffered metric/lineage rows (one append per table) and

@@ -19,12 +19,14 @@ projector, or tree_paraphrase intentionally changes:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.01"
-OUT = "/root/repo/artifacts/golden_kg_adv_para.parquet"
+OUT = os.path.join(ROOT, "artifacts", "golden_kg_adv_para.parquet")
 
 
 def run_once(cores: int):

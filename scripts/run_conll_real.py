@@ -26,10 +26,12 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 DATASET = "/root/reference/dataset"
 
@@ -71,8 +73,10 @@ def main():
                          "--pretrain is forced to 'none' (the checkpoint "
                          "already carries the pretrained/trained word_emb "
                          "and any J1 vocab extension)")
-    ap.add_argument("--out", default="/root/repo/CONLL_REAL.json")
-    ap.add_argument("--save-weights", default="/root/repo/artifacts/conll_weights.npz",
+    ap.add_argument("--out", default=os.path.join(ROOT, "CONLL_REAL.json"))
+    ap.add_argument("--save-weights",
+                    default=os.path.join(ROOT, "artifacts",
+                                         "conll_weights.npz"),
                     help="S6 checkpoint for the trained model ('' = skip); "
                          "vocab maps embedded in the npz — the "
                          "kg_conll_prf driver query resumes from this "

@@ -2,7 +2,22 @@
 seam (no Iceberg jars in this sandbox — writer/reader calls are recorded
 through fakes; a real-catalog smoke test runs when jars are present)."""
 
+import uuid
+
 import pytest
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 # ------------------------------------------------------------- parquet
@@ -26,6 +41,81 @@ def test_parquet_snapshots_and_pointer(spark, tmp_path):
     assert cat.latest_snapshot("t") == 2
     assert sorted(r.v for r in cat.read("t").collect()) == ["a", "b"]
     assert [r.v for r in cat.read("t", snapshot=1).collect()] == ["b"]
+
+
+TYPED = """
+    SELECT CAST(id AS INT) AS i,
+           array(id, id + 1) AS arr,
+           named_struct('x', id, 'y', CAST(id AS STRING)) AS st,
+           map('k', id) AS m,
+           CAST(id / 7 AS DECIMAL(12, 3)) AS dec,
+           TIMESTAMP '2024-02-29 12:34:56' + make_interval(0, 0, 0, 0, 0, 0, id)
+             AS ts,
+           IF(id % 3 = 0, NULL, 'v') AS s
+    FROM range(20)"""
+
+
+def test_footer_schema_read_matches_inference(spark, tmp_path):
+    """``read`` takes the schema from the snapshot's parquet footer; it
+    equals what Spark infers (every field nullable) for non-nullable,
+    nested, decimal and timestamp columns, and for an empty snapshot."""
+    from ner_pytorch_spark.plans.catalog import SnapshotCatalog
+
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    df = spark.sql(TYPED).repartition(3)
+    assert not all(f.nullable for f in df.schema.fields)
+    for table, frame in (("typed", df), ("empty", df.limit(0))):
+        snap = cat.commit(table, frame)
+        got = cat.read(table)
+        inferred = spark.read.parquet(cat.snapshot_path(table, snap))
+        assert got.schema == inferred.schema
+        assert sorted(got.collect()) == sorted(inferred.collect())
+    assert cat.read("empty").count() == 0
+    assert cat.file_row_counts("empty") == []
+
+
+def test_file_row_counts_sum_to_count(spark, tmp_path):
+    from ner_pytorch_spark.plans.catalog import SnapshotCatalog
+
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    df = spark.range(0, 1000, numPartitions=5).filter("id % 3 = 0")
+    snap = cat.commit("t", df)
+    counts = cat.file_row_counts("t", snap)
+    assert [pid for pid, _ in counts] == [0, 1, 2, 3, 4]
+    assert all(n > 0 for _, n in counts)
+    assert sum(n for _, n in counts) == cat.read("t").count() == 334
+    # a partition that writes no rows leaves no lineage row
+    cat.commit("t", spark.range(0, 10, numPartitions=4).filter("id < 2"))
+    assert cat.file_row_counts("t") == [(0, 2)]
+
+
+def test_fresh_catalog_reads_snapshot_without_jobs(spark, tmp_path):
+    """Resume path: a new catalog object over an existing root reads a
+    committed snapshot without running a Spark job (no schema
+    inference) and without a footer-count job."""
+    from ner_pytorch_spark.plans.catalog import SnapshotCatalog
+
+    SnapshotCatalog(spark, str(tmp_path)).commit("t", spark.sql(TYPED))
+    fresh = SnapshotCatalog(spark, str(tmp_path))
+    out = []
+    assert _jobs(spark, lambda: out.append(fresh.read("t"))) == 0
+    assert _jobs(spark, lambda: fresh.file_row_counts("t")) == 0
+    assert out[0].count() == 20
+
+
+def test_stage_runs_only_its_write_jobs(spark, tmp_path):
+    """A staged plan's post-commit bookkeeping (metric row count,
+    lineage rows, re-read of the snapshot) runs zero Spark jobs: the
+    stage costs exactly the jobs of writing its frame."""
+    from ner_pytorch_spark.plans.staged import SnapshotStagedPlan
+
+    df = spark.range(0, 100, numPartitions=4).selectExpr(
+        "id", "CAST(id AS STRING) AS s")
+    write = _jobs(spark, lambda: df.write.parquet(str(tmp_path / "w")))
+    plan = SnapshotStagedPlan(spark, str(tmp_path / "cat"))
+    assert _jobs(spark, lambda: plan._stage("t", False, lambda: df)) == write
+    assert plan._pending_metrics[0][:2] == ("t", 100)
+    assert plan._pending_lineage == [("t", p, 25) for p in range(4)]
 
 
 # -------------------------------------------------------- iceberg seam
@@ -82,6 +172,10 @@ class _FakeSpark:
         class _R:
             def first(self_inner):
                 return (777,)
+
+            def collect(self_inner):  # a ``files`` metadata table
+                return [("s3://b/kg/t/data/00003-7-ab12-00001.parquet", 5),
+                        ("s3://b/kg/t/data/00001-5-cd34-00001.parquet", 0)]
         return _R()
 
     @property
@@ -154,6 +248,11 @@ def test_iceberg_commit_read_append_seam(tmp_path):
     cat.read("t", snapshot=42)
     assert any(n == "read.option" and a == ("snapshot-id", 42) for n, a in log)
     assert any(n.endswith("table") and a == ("local.kg.t",) for n, a in log)
+
+    log.clear()
+    assert cat.file_row_counts("t", snapshot=42) == [(3, 5)]
+    assert ("sql", ("SELECT file_path, record_count FROM "
+                    "local.kg.t.files VERSION AS OF 42",)) in log
 
     log.clear()
     cat.append_rows("t", _FakeDF(log))  # existing table → native append

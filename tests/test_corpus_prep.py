@@ -102,9 +102,12 @@ def test_metrics_lineage_and_resume(spark, tmp_path):
     assert by_stage["final"] == 3
     lineage = pipe.catalog.read("_lineage").collect()
     assert {r["stage"] for r in lineage} == expect_stages
-    # lineage row counts reconcile with the stage metric
-    final_lin = sum(r["n_rows"] for r in lineage if r["stage"] == "final")
-    assert final_lin == by_stage["final"]
+    # every stage's lineage rows reconcile with its metric row and its
+    # committed snapshot
+    for stage in expect_stages:
+        lin = sum(r["n_rows"] for r in lineage if r["stage"] == stage)
+        assert lin == by_stage[stage] == pipe.catalog.read(stage).count(), \
+            stage
 
     # resume: a second run over the SAME catalog reuses every snapshot
     # (metrics are only appended on a real run, so the count is stable)

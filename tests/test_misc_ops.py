@@ -189,10 +189,33 @@ def test_bigram_lm_perplexity(spark):
     assert row.n_scored == 4 and np.isfinite(row.ppl) and row.ppl > 0
 
 
+def _repetition_reference(text, n):
+    """Pure-Python repetition signals, unrounded: Spark's ``trim``
+    strips spaces only, tokens are lowercased [a-z0-9]+ runs."""
+    import re
+    from collections import Counter
+
+    if text is None:
+        return 0.0, 0.0, 0.0
+    lines = [ln.strip(" ") for ln in text.split("\n")]
+    lines = [ln for ln in lines if ln]
+    dup_line = 1 - len(set(lines)) / len(lines) if lines else 0.0
+    toks = re.findall("[a-z0-9]+", text.lower())
+    grams = Counter(tuple(toks[i:i + n]) for i in range(len(toks) - n + 1))
+    total = sum(grams.values())
+    if not total:
+        return dup_line, 0.0, 0.0
+    return (dup_line, max(grams.values()) / total,
+            sum(c for c in grams.values() if c >= 2) / total)
+
+
 def test_repetition_scores(spark):
     """Gopher-style repetition signals on constructed docs: clean text
     scores ~0, line-repeated and phrase-repeated docs score high, and
-    degenerate docs (empty / single-token) coalesce to 0."""
+    degenerate docs (empty / single-token) coalesce to 0. Edge inputs
+    match a pure-Python reference for n = 2 and 3."""
+    import pytest
+
     from ner_pytorch_spark.operators.textstats import repetition_scores
 
     docs = spark.createDataFrame([
@@ -220,3 +243,27 @@ def test_repetition_scores(spark):
     for d in (4, 5):
         assert (got[d].dup_line_frac, got[d].top_ngram_frac,
                 got[d].dup_ngram_frac) == (0.0, 0.0, 0.0)
+
+    texts = [
+        None,                                       # null text
+        "   \n \n\n",                               # whitespace-only
+        "\n\nalpha beta\n\n\nalpha beta\n",         # blank lines
+        "same words\n  same words  \nsame words ",  # spaces around
+        "\tsame words\nsame words",                 # tab is not trimmed
+        "x x x x x x x",                            # identical tokens
+        "x",                                        # < n tokens
+        "one two",                                  # == 2 tokens
+        "a b c a b c a b c d",
+        "The the THE, the! And and the the",
+        "buy now buy now\nbuy now buy now\nfresh fish",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+    for n in (2, 3):
+        got = {r.doc_id: (r.dup_line_frac, r.top_ngram_frac,
+                          r.dup_ngram_frac)
+               for r in repetition_scores(docs, n=n).collect()}
+        assert set(got) == set(range(len(texts)))
+        for i, text in enumerate(texts):
+            want = _repetition_reference(text, n)
+            assert got[i] == pytest.approx(want, abs=5e-7), (n, text)

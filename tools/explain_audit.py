@@ -18,6 +18,8 @@ Checks (printed + asserted):
     fallback is a broadcast anti-join on the lexicon, not on pair keys
   * simhash_pairs: pairs scored inside chunk buckets, never a cartesian
     product; with max_bucket set the bucket cap is in the plan
+  * corpus_prep quality gate: no join and no hash exchange (every
+    metric is row-local over one token array)
   * simhash_pairs and forced-dense ngram_jaccard_pairs: on a warm call
     the scoring stage reads the cached tile table as InMemoryTableScan →
     Sort → MapInArrow, no MapInPandas and no Exchange above the scan
@@ -25,10 +27,12 @@ Checks (printed + asserted):
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.01"
 
@@ -256,6 +260,15 @@ def main():
     ok &= check("corpus_prep_urlcanon_partial_agg", url_plan,
                 must=[r"partial_min|HashAggregate"],
                 must_not=[r"\(\d+\) Window", r"CartesianProduct"])
+
+    # corpus-prep quality gate: every metric is row-local over one token
+    # array, so the gate plans with no join back on doc_id and no shuffle
+    gate_plan = plan_of(cp._quality_gate(
+        spark.read.parquet(f"{SF}/documents.parquet").select(
+            "doc_id", "text")))
+    cp._flush_bookkeeping()
+    ok &= check("quality_gate_join_free", gate_plan,
+                must_not=NO_SHUFFLE + [r"BroadcastHashJoin"])
 
     # html never read from a parquet-backed pages table when the fused
     # path only consumes (url, text) — column pruning reaches the scan
