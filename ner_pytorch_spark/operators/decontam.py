@@ -15,12 +15,14 @@ Both are pure relational plans (no UDFs):
   drops n-grams appearing in more than that many benchmark docs — a
   stop-n-gram cap with the same shape as dedup's ``max_block``
   (ubiquitous n-grams carry no contamination signal).
-* boilerplate — explode lines keyed by (domain, line), count DISTINCT
-  docs per line within the domain, lines above a doc-frequency
-  threshold are boilerplate; removal is a broadcast-free left-anti
-  semi-join back on (domain, line). Two shuffles total (count +
-  join), both on (domain, line-hash) — domain-skew shares the salting
-  story of the KG pipeline's domain repartition.
+* boilerplate — each doc's lines are one array (split on ``\\n``,
+  trimmed, empties dropped). Counting explodes each doc's DISTINCT
+  lines and counts distinct docs per (domain, line) — one shuffle on
+  (domain, line); lines above a doc-frequency threshold are
+  boilerplate. Removal never leaves the doc's row: the boilerplate
+  lines collapse to ONE row per domain (a line set), broadcast onto the
+  docs, and each doc keeps the lines not in its domain's set — no
+  explode of the docs, no re-assembly, no join back on the doc id.
 
 The reference repo has no decontamination/boilerplate stage (it
 consumes CoNLL files); these are engine-side additions for the 100 TB
@@ -29,7 +31,7 @@ web corpus the north rule targets.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plan_cache import PlanCache, plan_key
@@ -44,27 +46,18 @@ from ..plan_cache import PlanCache, plan_key
 # this is the natural unit to persist on a cluster too.
 _BENCH_GRAM_CACHE = PlanCache(capacity=2)
 
-# exploded-line table: strip_boilerplate references it from TWO plan
-# branches (the boilerplate-frequency table and the keep anti-join), and
-# boilerplate_lines is additionally called standalone — same
-# evaluate-once-per-branch story as the gram table above.
-_LINES_CACHE = PlanCache(capacity=2)
-
-
 _WS = r"\s+"
 
 
-def _line_explode(docs: DataFrame, text_col: str, id_col: str,
-                  domain_col: str) -> DataFrame:
-    return _LINES_CACHE.get_or_build(
-        (plan_key(docs), text_col, id_col, domain_col),
-        lambda: docs.select(
-            id_col, domain_col,
-            F.posexplode(F.split(F.col(text_col), "\n"))
-            .alias("line_no", "line"))
-        .withColumn("line", F.trim("line"))
-        .filter(F.length("line") > 0)
-    )
+def _lines(text_col: str) -> Column:
+    """A doc's non-empty trimmed lines, in order (``None`` text → ``None``).
+
+    The trim is a lambda: ``F.transform(arr, F.trim)`` would bind trim's
+    second parameter (the strip characters) to the element index.
+    """
+    return F.filter(
+        F.transform(F.split(F.col(text_col), "\n"), lambda l: F.trim(l)),
+        lambda l: F.length(l) > 0)
 
 
 def doc_ngram_hashes(docs: DataFrame, n: int = 8, text_col: str = "text",
@@ -158,11 +151,16 @@ def boilerplate_lines(docs: DataFrame, min_doc_frac: float = 0.2,
     doc_frac): non-empty trimmed lines appearing in ≥ ``min_docs``
     distinct docs AND ≥ ``min_doc_frac`` of the domain's docs (nav
     bars, footers, cookie banners — the lines a crawl repeats
-    per-site). Counting is distinct-docs-per-(domain, line); the
-    per-domain doc totals ride a broadcast of one row per domain.
+    per-site). Each doc contributes its distinct lines once; counting
+    is distinct ids per (domain, line), so re-fetches sharing an id
+    count once. The per-domain doc totals ride a broadcast of one row
+    per domain; a ``None`` domain matches no total, so it has no
+    boilerplate.
     """
-    lines = _line_explode(docs, text_col, id_col, domain_col)
-    per_line = (lines.groupBy(domain_col, "line")
+    per_line = (docs.select(id_col, domain_col,
+                            F.explode(F.array_distinct(_lines(text_col)))
+                            .alias("line"))
+                .groupBy(domain_col, "line")
                 .agg(F.countDistinct(id_col).alias("n_docs")))
     totals = F.broadcast(
         docs.groupBy(domain_col)
@@ -181,28 +179,24 @@ def strip_boilerplate(docs: DataFrame, min_doc_frac: float = 0.2,
                       min_docs: int = 2, text_col: str = "text",
                       id_col: str = "doc_id",
                       domain_col: str = "source") -> DataFrame:
-    """Docs with boilerplate lines removed: every surviving line
-    re-joined with ``\\n`` in original order. Plan: line explode →
-    left-anti join on (domain, line) against the boilerplate table →
-    re-assemble via collect_list over a window-free groupBy with
-    position sort (array_sort on (line_no, line) structs — no window,
-    no skewed single partition). Docs whose every line was boilerplate
-    keep an empty text.
+    """Docs (every row, columns unchanged) plus ``clean_text``: the
+    doc's non-empty trimmed lines that are not boilerplate in its
+    domain, joined with ``\\n`` in original order (a repeated kept line
+    keeps every copy). Plan: the boilerplate table collapses to one
+    line set per domain, broadcast onto the docs; the strip is a
+    row-local ``filter`` over the doc's line array, so rows sharing an
+    id (re-fetched pages) never see each other's lines. Docs whose
+    every line was boilerplate, and ``None`` texts, get ``""``.
     """
-    bp = boilerplate_lines(docs, min_doc_frac, min_docs, text_col,
-                           id_col, domain_col).select(domain_col, "line")
-    lines = _line_explode(docs, text_col, id_col, domain_col)
-    kept = lines.join(bp, on=[domain_col, "line"], how="left_anti")
-    assembled = (
-        kept.groupBy(id_col)
-        .agg(F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(
-                    F.struct(F.col("line_no"), F.col("line")))),
-                lambda s: s["line"]),
-            "\n").alias("clean_text"))
-    )
+    bp = (boilerplate_lines(docs, min_doc_frac, min_docs, text_col,
+                            id_col, domain_col)
+          .groupBy(domain_col).agg(F.collect_set("line").alias("_bp")))
+    bp_set = F.coalesce(F.col("_bp"), F.array().cast("array<string>"))
+    kept = F.filter(_lines(text_col),
+                    lambda l: ~F.array_contains(bp_set, l))
     return (
-        docs.join(assembled, on=id_col, how="left")
-        .withColumn("clean_text", F.coalesce("clean_text", F.lit("")))
+        docs.join(F.broadcast(bp), on=domain_col, how="left")
+        .select(*docs.columns,
+                F.coalesce(F.array_join(kept, "\n"), F.lit(""))
+                .alias("clean_text"))
     )

@@ -27,10 +27,13 @@ snapshot instead of recrawling three stages).
       → final         (doc_id, canonical_url, n_chars, n_tokens,
                       quality) — the training-ready manifest
 
-Scale shape (what survives a 1000-executor run): url dedup is ONE
-hash-shuffle on canonical_url; boilerplate counting broadcasts one row
-per domain; the quality gate is row-local JVM column arithmetic (no
-join, no shuffle); exact dedup shuffles on md5(text); near-dup uses
+Scale shape (what survives a 1000-executor run): url dedup and exact
+dedup are each ONE map-side-combined min_by aggregate (keyed by
+canonical_url and by md5(text)) with no join back; boilerplate counting
+is one shuffle on (domain, line) plus a broadcast of one row per
+domain, and the strip broadcasts one line set per domain onto the docs
+and filters each doc inside its row; the quality gate is row-local JVM
+column arithmetic (no join, no shuffle); near-dup uses
 shingle-equi-join blocking with a stop-shingle cap (never all-pairs);
 decontam is an n-gram equi-join with a benchmark-df cap + left-anti.
 Every stage is a snapshot commit with metrics + per-file lineage rows,
@@ -44,14 +47,29 @@ operators.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.urlnorm import normalize_url, url_domain
 from ..operators.decontam import decontaminate, strip_boilerplate
-from ..operators.dedup import exact_duplicates, ngram_jaccard_pairs
+from ..operators.dedup import ngram_jaccard_pairs
 from ..operators.textstats import text_metrics
 from .staged import SnapshotStagedPlan
+
+
+def _keep_min_id(docs: DataFrame, key: Column) -> DataFrame:
+    """One row per ``key``: the row with the smallest doc_id, columns in
+    their original order.
+
+    min_by over a struct of the whole row, not a row_number window or a
+    join back on doc_id: it partial-aggregates map-side, so one row per
+    key and partition crosses the one hash shuffle and a key held by a
+    million docs combines down before it moves. (Spark plans it as a
+    SortAggregate: min_by's buffer holds a variable-width value.)
+    """
+    return (docs.groupBy(key)
+            .agg(F.min_by(F.struct(*docs.columns), "doc_id").alias("_row"))
+            .select("_row.*"))
 
 
 class CorpusPrepPipeline(SnapshotStagedPlan):
@@ -88,20 +106,12 @@ class CorpusPrepPipeline(SnapshotStagedPlan):
 
     # ---------------------------------------------------------- stages
     def _url_canon(self, docs: DataFrame) -> DataFrame:
-        """One doc per canonical URL (min doc_id wins).
-
-        min_by aggregation, not a row_number window: it partial-
-        aggregates map-side (one hash shuffle of one row per
-        canonical_url, no in-partition sort), so a hot URL crawled a
-        million times combines down before it moves.
-        """
-        canon = docs.withColumn("canonical_url",
-                                normalize_url(F.col("url")))
-        payload = [c for c in canon.columns
-                   if c not in ("doc_id", "url", "canonical_url")]
-        return canon.groupBy("canonical_url").agg(
-            F.min("doc_id").alias("doc_id"),
-            *[F.min_by(c, "doc_id").alias(c) for c in payload])
+        """One doc per canonical URL (min doc_id wins); ``url`` is
+        dropped before the aggregate, so only the kept columns move."""
+        canon = docs.select(
+            normalize_url(F.col("url")).alias("canonical_url"),
+            *[c for c in docs.columns if c != "url"])
+        return _keep_min_id(canon, F.col("canonical_url"))
 
     def _clean_text(self, docs: DataFrame) -> DataFrame:
         """Domain-scoped boilerplate strip; schema preserved."""
@@ -141,18 +151,15 @@ class CorpusPrepPipeline(SnapshotStagedPlan):
             & (F.col("top_ngram_frac") <= self.max_top_ngram_frac))
 
     def _exact_dedup(self, docs: DataFrame) -> DataFrame:
-        drop = (exact_duplicates(docs)
-                .select(F.explode("dup_ids").alias("doc_id"),
-                        "canonical_id")
-                .filter(F.col("doc_id") != F.col("canonical_id"))
-                .select("doc_id"))
-        return docs.join(drop, on="doc_id", how="left_anti")
+        """Byte-identical texts collapse to the min doc_id: one
+        aggregate keyed by md5(text), no join."""
+        return _keep_min_id(docs, F.md5(F.col("text")))
 
     def _near_dedup(self, docs: DataFrame) -> DataFrame:
         drop = (ngram_jaccard_pairs(
                     docs, n=self.jaccard_n,
                     threshold=self.jaccard_threshold)
-                .select(F.col("doc_b").alias("doc_id")).distinct())
+                .select(F.col("doc_b").alias("doc_id")))
         return docs.join(drop, on="doc_id", how="left_anti")
 
     # ------------------------------------------------------------- run

@@ -107,7 +107,7 @@ def test_strip_boilerplate_preserves_order(spark, bp_docs):
     assert out[0] == "unique body line 0"       # footer + nav stripped
     assert out[5] == "unique body line 5"
     assert out[100] == f"b body 0\n{footer}"    # domain B keeps footer
-    # multi-line body keeps original line order after reassembly
+    # multi-line body keeps its original line order
     multi = spark.createDataFrame(
         [(1, "z line\na line\n" + footer, "a.com"),
          (2, "keep\n" + footer, "a.com")], DOCS_DDL)
@@ -124,3 +124,88 @@ def test_strip_boilerplate_all_boilerplate_doc(spark):
     got = {r.doc_id: r.clean_text
            for r in strip_boilerplate(docs, min_doc_frac=0.5).collect()}
     assert got == {1: "", 2: "", 3: "extra"}
+
+
+def test_strip_boilerplate_refetched_pages_keep_their_own_lines(spark):
+    # one url fetched twice (different crawl times) plus a second page:
+    # each fetch keeps only its own non-boilerplate lines
+    pages = spark.createDataFrame(
+        [("http://a.com/p", "first fetch line\nfooter", "a.com"),
+         ("http://a.com/p", "second fetch line\nfooter", "a.com"),
+         ("http://a.com/q", "q body\nfooter", "a.com")],
+        "url string, text string, source string")
+    got = sorted((r.url, r.clean_text) for r in strip_boilerplate(
+        pages, min_doc_frac=0.5, min_docs=2, id_col="url").collect())
+    assert got == [("http://a.com/p", "first fetch line"),
+                   ("http://a.com/p", "second fetch line"),
+                   ("http://a.com/q", "q body")]
+
+
+ADV_DOCS = [
+    # a.com: nav on 1-3 (space-padded on 1 and 3), footer on 1, 2, 3, 5
+    (1, "  nav bar  \nbody one 1\nfooter 2026\n\n   \nbody one 1", "a.com"),
+    (2, "nav bar\nbody two 22\nfooter 2026", "a.com"),
+    (3, "nav bar \n\nfooter 2026\nfooter 2026", "a.com"),
+    (4, None, "a.com"),
+    (5, "body five 5\n\ttabbed \nfooter 2026\n", "a.com"),
+    # b.com: no line in two docs
+    (10, "b one", "b.com"),
+    (11, "b two 2\nb two 2", "b.com"),
+    (12, "b three 3\n \n", "b.com"),
+    # no domain: a shared line is never boilerplate
+    (20, "shared line\nx 1", None),
+    (21, "shared line\ny 2", None),
+    (22, "shared line", None),
+]
+
+
+def _ref_lines(text):
+    # Spark's trim strips the space character only
+    if text is None:
+        return []
+    return [s for s in (ln.strip(" ") for ln in text.split("\n")) if s]
+
+
+def _ref_boilerplate(docs, min_doc_frac, min_docs):
+    ids_by_domain, ids_by_line = {}, {}
+    for doc_id, text, dom in docs:
+        ids_by_domain.setdefault(dom, set()).add(doc_id)
+        for ln in _ref_lines(text):
+            ids_by_line.setdefault((dom, ln), set()).add(doc_id)
+    out = {}
+    for (dom, ln), ids in ids_by_line.items():
+        if dom is None:
+            continue
+        frac = len(ids) / len(ids_by_domain[dom])
+        if len(ids) >= min_docs and frac >= min_doc_frac:
+            out[(dom, ln)] = (len(ids), frac)
+    return out
+
+
+@pytest.mark.parametrize("min_doc_frac,min_docs", [(0.5, 2), (0.0, 1)])
+def test_boilerplate_adversarial_matches_reference(spark, min_doc_frac,
+                                                   min_docs):
+    docs = spark.createDataFrame(ADV_DOCS, DOCS_DDL)
+    ref = _ref_boilerplate(ADV_DOCS, min_doc_frac, min_docs)
+    got = {(r.source, r.line): (r.n_docs, r.doc_frac)
+           for r in boilerplate_lines(docs, min_doc_frac,
+                                      min_docs).collect()}
+    assert got.keys() == ref.keys()
+    for key, (n, frac) in ref.items():
+        assert got[key][0] == n and got[key][1] == pytest.approx(frac,
+                                                                 abs=1e-6)
+    if min_docs == 2:
+        assert set(ref) == {("a.com", "nav bar"), ("a.com", "footer 2026")}
+
+    out = strip_boilerplate(docs, min_doc_frac, min_docs)
+    assert out.columns == docs.columns + ["clean_text"]
+    clean = {r.doc_id: r.clean_text for r in out.collect()}
+    assert clean == {
+        doc_id: "\n".join(ln for ln in _ref_lines(text)
+                          if (dom, ln) not in ref)
+        for doc_id, text, dom in ADV_DOCS}
+    if min_docs == 2:
+        assert clean[1] == "body one 1\nbody one 1"
+        assert clean[4] == ""
+        assert clean[5] == "body five 5\n\ttabbed"
+        assert clean[20] == "shared line\nx 1"

@@ -33,7 +33,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
     import __spark_entry__ as e
     from ner_pytorch_spark.session import get_spark
 
-    spark = get_spark(cores=16)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -18,6 +18,9 @@ Checks (printed + asserted):
     fallback is a broadcast anti-join on the lexicon, not on pair keys
   * simhash_pairs: pairs scored inside chunk buckets, never a cartesian
     product; with max_bucket set the bucket cap is in the plan
+  * boilerplate strip: row-local, one broadcast line set per domain
+    (no anti-join on lines, no window, no sort-merge join back)
+  * corpus_prep exact dedup: one aggregate on md5(text), no join
   * corpus_prep quality gate: no join and no hash exchange (every
     metric is row-local over one token array)
   * simhash_pairs and forced-dense ngram_jaccard_pairs: on a warm call
@@ -226,8 +229,9 @@ def main():
                 must_not=[r"CartesianProduct", r"BroadcastNestedLoop"])
 
     # boilerplate: per-domain totals ride a broadcast join (one tiny row
-    # per domain), and the strip reassembly has NO window (the
-    # array_sort formulation avoids a per-doc window shuffle)
+    # per domain), and the strip is row-local: one line set per domain
+    # broadcast onto the docs, no anti-join on lines, no window and no
+    # partitioned join back on the doc id
     plan = plan_of(e.q_boilerplate_df(spark, SF))
     ok &= check("boilerplate_broadcast_totals", plan,
                 must=[r"BroadcastHashJoin"],
@@ -235,9 +239,10 @@ def main():
     from ner_pytorch_spark.operators.decontam import strip_boilerplate
 
     plan = plan_of(strip_boilerplate(e._read(spark, SF, "documents")))
-    ok &= check("boilerplate_strip_no_window", plan,
-                must=[r"LeftAnti"],
-                must_not=[r"\(\d+\) Window", r"CartesianProduct"])
+    ok &= check("boilerplate_strip_row_local", plan,
+                must=[r"BroadcastHashJoin"],
+                must_not=[r"LeftAnti", r"SortMergeJoin", r"\(\d+\) Window",
+                          r"CartesianProduct"])
 
     # minhash LSH after the round-4 rework: the shingle table is an
     # InMemoryRelation (computed once, not per branch) and the bucket
@@ -260,6 +265,14 @@ def main():
     ok &= check("corpus_prep_urlcanon_partial_agg", url_plan,
                 must=[r"partial_min|HashAggregate"],
                 must_not=[r"\(\d+\) Window", r"CartesianProduct"])
+
+    # corpus-prep exact dedup: one min_by aggregate keyed by md5(text),
+    # combined map-side, and no join of any kind back onto the docs
+    exact_plan = plan_of(cp._exact_dedup(
+        e._read(spark, SF, "documents").select("doc_id", "text")))
+    ok &= check("corpus_prep_exact_dedup_one_agg", exact_plan,
+                must=[r"partial_min_by"],
+                must_not=[r"\w+Join\b", r"CartesianProduct"])
 
     # corpus-prep quality gate: every metric is row-local over one token
     # array, so the gate plans with no join back on doc_id and no shuffle
