@@ -6,23 +6,25 @@ the CCNet/trafilatura cleanup shape).
 
 Both are pure relational plans (no UDFs):
 
-* decontamination — explode DISTINCT word n-grams per doc on both
-  sides, hash each n-gram to int64 (``xxhash64`` — the join key is 8
-  bytes, never the string), equi-join train×benchmark on the hash,
-  aggregate per training doc. At 100 TB the join is linear in
+* decontamination — hash each doc's word n-grams
+  (:func:`~.textstats.word_ngrams`) to int64 (``xxhash64`` — the join
+  key is 8 bytes, never the string) and explode the DISTINCT hashes of
+  the doc's row on both sides (no shuffle), equi-join train×benchmark on
+  the hash, aggregate per training doc. At 100 TB the join is linear in
   Σ df_train(g)·df_bench(g); ubiquitous n-grams (boilerplate runs,
   stopword chains) are the quadratic hot keys, so ``max_bench_df``
   drops n-grams appearing in more than that many benchmark docs — a
   stop-n-gram cap with the same shape as dedup's ``max_block``
   (ubiquitous n-grams carry no contamination signal).
-* boilerplate — each doc's lines are one array (split on ``\\n``,
-  trimmed, empties dropped). Counting explodes each doc's DISTINCT
-  lines and counts distinct docs per (domain, line) — one shuffle on
-  (domain, line); lines above a doc-frequency threshold are
-  boilerplate. Removal never leaves the doc's row: the boilerplate
-  lines collapse to ONE row per domain (a line set), broadcast onto the
-  docs, and each doc keeps the lines not in its domain's set — no
-  explode of the docs, no re-assembly, no join back on the doc id.
+* boilerplate — each doc's lines are one array
+  (:func:`~.textstats.doc_lines`: split on ``\\n``, trimmed, empties
+  dropped). Counting explodes each doc's DISTINCT lines and counts
+  distinct docs per (domain, line) — one shuffle on (domain, line);
+  lines above a doc-frequency threshold are boilerplate. Removal never
+  leaves the doc's row: the boilerplate lines collapse to ONE row per
+  domain (a line set), broadcast onto the docs, and each doc keeps the
+  lines not in its domain's set — no explode of the docs, no
+  re-assembly, no join back on the doc id.
 
 The reference repo has no decontamination/boilerplate stage (it
 consumes CoNLL files); these are engine-side additions for the 100 TB
@@ -31,10 +33,11 @@ web corpus the north rule targets.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plan_cache import PlanCache, plan_key
+from .textstats import doc_lines, word_ngrams
 
 # benchmark-side per-doc gram table: referenced by BOTH the stop-n-gram
 # cap branch (df ≤ max_bench_df) and the overlap equi-join — Spark
@@ -49,51 +52,30 @@ _BENCH_GRAM_CACHE = PlanCache(capacity=2)
 _WS = r"\s+"
 
 
-def _lines(text_col: str) -> Column:
-    """A doc's non-empty trimmed lines, in order (``None`` text → ``None``).
-
-    The trim is a lambda: ``F.transform(arr, F.trim)`` would bind trim's
-    second parameter (the strip characters) to the element index.
-    """
-    return F.filter(
-        F.transform(F.split(F.col(text_col), "\n"), lambda l: F.trim(l)),
-        lambda l: F.length(l) > 0)
-
-
 def doc_ngram_hashes(docs: DataFrame, n: int = 8, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
     """→ (id_col, gram_hash) — DISTINCT word-n-gram hashes per doc.
 
-    Tokens = lowercased ``\\s+`` split (the dedup family's contract);
-    the n-gram string is the space-join of n consecutive tokens, hashed
-    to int64 JVM-side. Distinct-per-doc BEFORE the join keeps the
-    overlap metric "number of shared distinct n-grams", invariant to
-    in-doc repetition.
-
-    Construction is the word_shingles zip_with fold over a PROJECTED
-    token column: the earlier transform(sequence, slice(toks…)) form
-    embedded the split() EXPRESSION inside the per-position lambda, so
-    the regex tokenization re-ran once per n-gram position — O(len²)
-    regex work per doc (measured 18.4 s vs 2.4 s for the 3-gram table
-    over 30k ~300-token docs; outputs row-identical).
+    Tokens = the lowercased, space-trimmed text split on ``\\s+`` (the
+    DuckDB oracle replays this; dedup's shingles use
+    :func:`~.textstats.tokens_lower` instead). The n-gram string is the
+    space-join of n consecutive tokens (:func:`~.textstats.word_ngrams`
+    over a projected token column, so the split runs once per doc),
+    hashed to int64 JVM-side. Docs with fewer than n tokens, and
+    ``None`` texts, have no grams. Distinct-per-doc keeps the overlap
+    metric "number of shared distinct n-grams", invariant to in-doc
+    repetition; it is an ``array_distinct`` inside the doc's row, so it
+    costs no shuffle. That makes the output distinct per (id, gram_hash)
+    only when each id has one row, which every caller in the package
+    has.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), _WS)
-    with_toks = docs.select(F.col(id_col), toks.alias("_toks"))
-    m = F.size("_toks") - n + 1
-    acc = F.slice("_toks", 1, m)
-    for i in range(1, n):
-        acc = F.zip_with(acc, F.slice("_toks", 1 + i, m),
-                         lambda a, b: F.concat(a, F.lit(" "), b))
-    # short texts (size < n) must yield an EMPTY gram set (slice with a
-    # non-positive length would error / the old sequence(0, stop<0) form
-    # descended)
-    grams = F.when(F.size("_toks") >= n, acc).otherwise(
-        F.array().cast("array<string>"))
-    return (
-        with_toks.select(F.col(id_col), F.explode(grams).alias("gram"))
-        .select(id_col, F.xxhash64("gram").alias("gram_hash"))
-        .distinct()
-    )
+    with_toks = docs.select(
+        F.col(id_col),
+        F.split(F.lower(F.trim(F.col(text_col))), _WS).alias("_toks"))
+    hashes = F.transform(word_ngrams(F.col("_toks"), n),
+                         lambda g: F.xxhash64(g))
+    return with_toks.select(
+        F.col(id_col), F.explode(F.array_distinct(hashes)).alias("gram_hash"))
 
 
 def benchmark_overlap(train: DataFrame, benchmark: DataFrame, n: int = 8,
@@ -158,7 +140,7 @@ def boilerplate_lines(docs: DataFrame, min_doc_frac: float = 0.2,
     boilerplate.
     """
     per_line = (docs.select(id_col, domain_col,
-                            F.explode(F.array_distinct(_lines(text_col)))
+                            F.explode(F.array_distinct(doc_lines(F.col(text_col))))
                             .alias("line"))
                 .groupBy(domain_col, "line")
                 .agg(F.countDistinct(id_col).alias("n_docs")))
@@ -192,7 +174,7 @@ def strip_boilerplate(docs: DataFrame, min_doc_frac: float = 0.2,
                             id_col, domain_col)
           .groupBy(domain_col).agg(F.collect_set("line").alias("_bp")))
     bp_set = F.coalesce(F.col("_bp"), F.array().cast("array<string>"))
-    kept = F.filter(_lines(text_col),
+    kept = F.filter(doc_lines(F.col(text_col)),
                     lambda l: ~F.array_contains(bp_set, l))
     return (
         docs.join(F.broadcast(bp), on=domain_col, how="left")

@@ -7,8 +7,10 @@ text, …)``-shaped tables:
 
 * exact          — md5(text) hash-groupBy; one shuffle on the digest
 * word n-gram Jaccard — shingle self-join; bounded by shared-shingle
-  blocking (equi-join on shingle), never a cross join; dense corpora
-  score shingle bitmaps instead (see :func:`ngram_jaccard_pairs`)
+  blocking (equi-join on shingle), never a cross join; a corpus whose
+  non-stop vocabulary is small and shared by most docs is scored as
+  shingle bitmaps instead, chosen by a memoized size policy (see
+  :func:`ngram_jaccard_pairs`)
 * MinHash + LSH  — md5-based min-hash signatures (engine-agnostic, so
   DuckDB can oracle them), banded into buckets, candidate pairs from
   bucket equi-join, verified with exact Jaccard
@@ -47,7 +49,7 @@ from pyspark.sql.types import LongType
 # the natural unit to persist anyway.
 from ..plan_cache import PlanCache, plan_key, register
 from . import pairtiles
-from .textstats import tokens_lower
+from .textstats import tokens_lower, word_ngrams
 
 _SH_CACHE = PlanCache(capacity=4)
 # minhash_lsh_pairs' per-doc table (signature + capped shingle set):
@@ -84,8 +86,9 @@ class _MetaMemo(dict):
 
 
 # per-corpus facts collected once, keyed like the plan caches: the Jaccard
-# policy stats (3 numbers) with the dense kernel's bit-index broadcast
-# (≤_DENSE_MAX_SHINGLES int64), and simhash_pairs' hot-bucket broadcast
+# policy's doc count with, when it chose the dense kernel, the bit-index
+# broadcast (≤_DENSE_MAX_SHINGLES int64), and simhash_pairs' hot-bucket
+# broadcast
 _META = register(_MetaMemo())
 
 
@@ -120,30 +123,18 @@ def word_shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
     """→ (doc_id, shingle) distinct word n-grams; JVM-side only.
 
-    Shingle = n consecutive :func:`tokens_lower` tokens joined by a space.
-    Documents shorter than n tokens yield their full token join (one
-    shingle) so they still participate.
-
-    Built from n shifted slices folded with zip_with — O(n·len) per doc
-    (a per-position slice would be O(len²), measured 10× slower at
-    300-token docs).
+    Shingle = n consecutive :func:`tokens_lower` tokens joined by a space
+    (:func:`~.textstats.word_ngrams`). Documents shorter than n tokens
+    yield their full token join (one shingle) so they still participate;
+    empty and ``None`` texts yield none.
     """
     toks = docs.select(F.col(id_col).alias("doc_id"),
                        tokens_lower(text_col).alias("toks"))
-
-    def ngrams(col):
-        m = F.size(col) - n + 1  # number of n-grams
-        acc = F.slice(col, 1, m)
-        for i in range(1, n):
-            acc = F.zip_with(acc, F.slice(col, 1 + i, m),
-                             lambda a, b: F.concat(a, F.lit(" "), b))
-        return acc
-
     sh = toks.select(
         "doc_id",
         F.when(
             F.size("toks") < n, F.array(F.array_join("toks", " "))
-        ).otherwise(ngrams(F.col("toks"))).alias("shingles"),
+        ).otherwise(word_ngrams(F.col("toks"), n)).alias("shingles"),
     )
     # per-doc dedup happens in-place on the array (array_distinct) so
     # the distinct contract costs no shuffle — the old row-level
@@ -158,7 +149,7 @@ def word_shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
 def ngram_jaccard_pairs(
     docs: DataFrame, n: int = 3, threshold: float = 0.8,
     text_col: str = "text", id_col: str = "doc_id",
-    max_block: int = 1000, dense: str | bool = "auto",
+    max_block: int = 1000,
 ) -> DataFrame:
     """Near-dup pairs by exact word-n-gram Jaccard ≥ threshold.
 
@@ -168,34 +159,33 @@ def ngram_jaccard_pairs(
     the sole evidence for a high-Jaccard pair in practice).
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b.
 
-    ``dense``: the relational plan degenerates on DENSE corpora — when
-    the distinct-shingle vocabulary is small and shingle df stays under
-    the stop cap, almost every doc pair shares a shingle and the
-    blocking join enumerates ~all-pairs as (pair, shingle) ROWS (36.5M
-    rows / 10.3M candidate pairs of 12.5M possible measured at sf0.1),
-    then hash-aggregates them — ~340 ns/row. In that regime the same
-    candidate set is scored 50-100× cheaper as salt-tiled numpy bitmap
-    popcounts (:mod:`.pairtiles`, shared with simhash_pairs): each
-    doc's non-stop shingle set becomes a ≤``_DENSE_MAX_SHINGLES``-bit
-    bitmap and |A∩B| is a W-word AND+popcount. "auto" (default) picks
-    the dense kernel only when a tiny stats aggregate over the
-    shingle-df table proves the regime: vocabulary fits a bitmap, the
-    doc count is bounded, and the relational path would already do ≥
+    Two kernels score that candidate set. The relational plan
+    degenerates on DENSE corpora — when the distinct-shingle vocabulary
+    is small and shingle df stays under the stop cap, almost every doc
+    pair shares a shingle and the blocking join enumerates ~all-pairs as
+    (pair, shingle) ROWS (36.5M rows / 10.3M candidate pairs of 12.5M
+    possible measured at sf0.1), then hash-aggregates them — ~340
+    ns/row. In that regime the same candidate set is scored 50-100×
+    cheaper as salt-tiled numpy bitmap popcounts (:mod:`.pairtiles`,
+    shared with simhash_pairs): each doc's non-stop shingle set becomes
+    a ≤``_DENSE_MAX_SHINGLES``-bit bitmap and |A∩B| is a W-word
+    AND+popcount. The policy (:func:`_jaccard_policy`) picks the dense
+    kernel only when the non-stop vocabulary fits a bitmap, the doc
+    count is bounded, and the relational path would already do ≥
     ``_DENSE_MIN_DENSITY`` × all-pairs work — at real corpus scale the
-    vocabulary is large and df exceeds the stop cap, so the policy
-    keeps the scale-safe blocking join. True forces the dense kernel
-    (ValueError when either bound is exceeded), False the blocking join.
+    vocabulary is large and df exceeds the stop cap, so it keeps the
+    scale-safe blocking join. Its numbers come from one collect of at
+    most ``_DENSE_MAX_SHINGLES`` + 1 rows plus a doc count when the
+    vocabulary fits, once per (corpus plan, n, columns, max_block).
     Both paths emit bit-identical rows (same candidate set, same
     long-typed n_common/sizes, the SAME Spark division/round
     expression).
     """
     sh = _cached_shingles(docs, n, text_col, id_col)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    # full shingle-df table: the stop set filters it; the dense-path
-    # policy aggregates it (3 numbers — no per-shingle data leaves the
-    # cluster unless the vocabulary is proven tiny).
+    # full shingle-df table: the stop set filters it; the policy reads
+    # its non-stop rows (a bounded collect, see _jaccard_policy)
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    nonstop = F.col("df") <= max_block
     # both paths take the non-stop shingles as 8-byte xxhash64 keys: the
     # stop set is tiny and AQE-broadcast (an anti-join, no by-shingle
     # re-shuffle of the corpus relation), and the blocking join compares
@@ -206,45 +196,17 @@ def ngram_jaccard_pairs(
     blocked_h = (sh.join(freq.filter(F.col("df") > max_block), on="shingle",
                          how="left_anti")
                  .select("doc_id", F.xxhash64("shingle").alias("sh")))
-    if dense == "auto" or dense is True:
-        # the policy numbers and the bit-index vocabulary are pure
-        # functions of (corpus plan, n, cols, max_block) — memoized so a
-        # warm call (bench best-of-2, repeated pipeline invocations over
-        # one corpus) spends zero driver actions re-deriving them
-        meta_key = ("jaccard", plan_key(docs), n, text_col, id_col,
-                    max_block)
-        meta = _META.get(meta_key)
-        if meta is None:
-            st = freq.agg(
-                F.count(F.when(nonstop, 1)).alias("n_nonstop"),
-                F.sum(F.when(nonstop, F.col("df") * (F.col("df") - 1) / 2)
-                      ).alias("work"),
-            ).collect()[0]
-            meta = {"n_nonstop": st["n_nonstop"] or 0,
-                    "work": float(st["work"] or 0.0), "n_docs": None}
-            _META.put(meta_key, meta)
-        n_nonstop, work = meta["n_nonstop"], meta["work"]
-        # the dense kernel collects the bit-index vocabulary to the driver
-        # and tiles every doc: forcing it past either bound is an error,
-        # not an unbounded collect
-        if dense is True and n_nonstop > _DENSE_MAX_SHINGLES:
-            raise ValueError(
-                f"dense=True: {n_nonstop} non-stop shingles exceed "
-                f"_DENSE_MAX_SHINGLES={_DENSE_MAX_SHINGLES}")
-        if 0 < n_nonstop <= _DENSE_MAX_SHINGLES:
-            if meta["n_docs"] is None:
-                meta["n_docs"] = sizes.count()
-            n_docs = meta["n_docs"]
-            if dense is True and n_docs > _DENSE_MAX_DOCS:
-                raise ValueError(
-                    f"dense=True: {n_docs} docs exceed "
-                    f"_DENSE_MAX_DOCS={_DENSE_MAX_DOCS}")
-            all_pairs = n_docs * (n_docs - 1) / 2
-            if dense is True or (2 <= n_docs <= _DENSE_MAX_DOCS and
-                                 work >= _DENSE_MIN_DENSITY * all_pairs):
-                return _jaccard_out(_jaccard_dense(
-                    blocked_h, sizes, freq, nonstop, threshold, meta,
-                    meta_key), threshold)
+    # the policy is a pure function of (corpus plan, n, cols, max_block) —
+    # memoized so a warm call (bench best-of-2, repeated pipeline
+    # invocations over one corpus) runs no driver action
+    meta_key = ("jaccard", plan_key(docs), n, text_col, id_col, max_block)
+    if meta_key not in _META:
+        _META.put(meta_key, _jaccard_policy(
+            freq.filter(F.col("df") <= max_block), sizes))
+    meta = _META[meta_key]
+    if meta["bc"] is not None:
+        return _jaccard_out(_jaccard_dense(blocked_h, sizes, meta, meta_key,
+                                           threshold), threshold)
     a = blocked_h.select(F.col("doc_id").alias("doc_a"), "sh")
     b = blocked_h.select(F.col("doc_id").alias("doc_b"), "sh")
     common = (
@@ -281,23 +243,38 @@ _DENSE_MAX_DOCS = 200_000
 _DENSE_MIN_DENSITY = 0.1
 
 
-def _jaccard_dense(blocked_h: DataFrame, sizes: DataFrame, freq: DataFrame,
-                   nonstop, threshold: float, meta: dict,
-                   meta_key) -> DataFrame:
+def _jaccard_policy(nonstop_freq: DataFrame, sizes: DataFrame) -> dict:
+    """One corpus's ``_META`` entry ``{n_docs, bc}``; ``bc`` (the sorted
+    non-stop shingle hashes, broadcast with their bitmap word count) is
+    set only when the dense kernel is chosen.
+
+    One collect of at most ``_DENSE_MAX_SHINGLES`` + 1 (hash, df) rows
+    gives the non-stop count, the relational work Σ df·(df−1)/2 and the
+    bit index; the doc count runs only when the vocabulary fits.
+    """
+    rows = (nonstop_freq.select(F.xxhash64("shingle"), "df")
+            .limit(_DENSE_MAX_SHINGLES + 1).collect())
+    meta = {"n_docs": None, "bc": None}
+    if not 0 < len(rows) <= _DENSE_MAX_SHINGLES:
+        return meta
+    meta["n_docs"] = n_docs = sizes.count()
+    work = sum(df * (df - 1) // 2 for _, df in rows)
+    if (2 <= n_docs <= _DENSE_MAX_DOCS
+            and work >= _DENSE_MIN_DENSITY * n_docs * (n_docs - 1) / 2):
+        bit_vals = np.sort(np.array([h for h, _ in rows], dtype=np.int64))
+        meta["bc"] = sizes.sparkSession.sparkContext.broadcast(
+            (bit_vals, (len(bit_vals) + 63) // 64))
+    return meta
+
+
+def _jaccard_dense(blocked_h: DataFrame, sizes: DataFrame, meta: dict,
+                   meta_key, threshold: float) -> DataFrame:
     """Dense-corpus kernel → (doc_a, doc_b, n_common, n_a, n_b): each
-    doc's non-stop shingles as a bitmap over the sorted non-stop hash
-    vocabulary (a bounded collect: the caller proved it fits
-    ``_DENSE_MAX_SHINGLES`` bits), scored by :func:`pairtiles.bitmap_pairs`.
-    n_common counts common non-stop shingles and n_a/n_b stay the FULL
-    counts — exactly the relational path's semantics."""
+    doc's non-stop shingles as a bitmap over the policy's broadcast bit
+    index, scored by :func:`pairtiles.bitmap_pairs`. n_common counts
+    common non-stop shingles and n_a/n_b stay the FULL counts — exactly
+    the relational path's semantics."""
     sc = blocked_h.sparkSession.sparkContext
-    # the bit-index vocabulary rides the memoized policy entry as one
-    # broadcast, so warm calls skip the collect and the re-broadcast
-    if meta.get("bc") is None:
-        bit_vals = np.sort(np.array(
-            [r[0] for r in freq.filter(nonstop)
-             .select(F.xxhash64("shingle")).collect()], dtype=np.int64))
-        meta["bc"] = sc.broadcast((bit_vals, (len(bit_vals) + 63) // 64))
     # class count: ceil(N/_TILE) bounds a tile's work; the cores floor
     # (r(r+1)/2 tiles ≥ 2×parallelism ⇒ r ≥ √(4·parallelism)) occupies
     # the cores on a small corpus (measured at sf0.1/5k docs: r=3 → 6
@@ -323,14 +300,7 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 16, n: int = 3,
     md5), deterministic, and a valid min-wise hash family for Jaccard
     estimation. One shuffle: groupBy(doc_id, seed).
     """
-    return minhash_signatures_from_shingles(
-        word_shingles(docs, n, text_col, id_col), n_hashes)
-
-
-def minhash_signatures_from_shingles(sh: DataFrame,
-                                     n_hashes: int = 16) -> DataFrame:
-    """Signature computation over a prepared (doc_id, shingle) table —
-    the driver-checked (doc_id, seed, minhash) long format."""
+    sh = word_shingles(docs, n, text_col, id_col)
     seeds = sh.sparkSession.range(n_hashes).select(
         F.col("id").cast("int").alias("seed"))
     return (
@@ -340,22 +310,6 @@ def minhash_signatures_from_shingles(sh: DataFrame,
         .groupBy("doc_id", "seed")
         .agg(F.min("h").alias("minhash"))
     )
-
-
-def _lsh_buckets(sh: DataFrame, n_hashes: int, bands: int) -> DataFrame:
-    """(doc_id, band, bucket_key) in ONE shuffle.
-
-    The long-format path costs two shuffles and a 16× row blowup
-    (explode seeds → groupBy(doc_id, seed) → groupBy(doc_id, band));
-    here each of the ``n_hashes`` min-hashes is its own aggregate
-    column over the shingle rows (map-side partial min, one shuffle of
-    n_docs rows), and band keys are pure projections — ``stack`` long-
-    forms the bands without any exchange. Bucket keys are seed-tagged
-    concats, so (band, key) equality is exactly "all rows of the band
-    agree" — the same candidate set as the long path (tested equal).
-    """
-    sig_wide = sh.groupBy("doc_id").agg(*_minhash_aggs(n_hashes))
-    return _band_stack(sig_wide, n_hashes, bands)
 
 
 def _minhash_aggs(n_hashes: int) -> list:
@@ -546,8 +500,9 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     than ``max_bucket`` members are dropped from blocking (the
     ``max_block`` stop-shingle house pattern; such pairs are exact-dup
     shaped and belong to :func:`exact_duplicates`, which handles them in
-    one linear groupBy). Dropped buckets are observable via
-    :func:`hot_buckets`. ``None`` disables the guard (fully lossless).
+    one linear groupBy). The dropped buckets are collected once per
+    corpus into the memoized hot-bucket broadcast (``_META``). ``None``
+    disables the guard (fully lossless).
     """
     n_chunks = max_hamming + 1
     if n_chunks > 64:
@@ -617,11 +572,3 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
     return pairtiles.hamming_pairs(rows, meta_key, max_hamming, bounds,
                                    _META[meta_key]["bc"])
 
-
-def hot_buckets(keyed: DataFrame, keys: list[str], cap: int) -> DataFrame:
-    """Blocking keys whose frequency exceeds ``cap`` — the rows a
-    ``max_bucket``/``max_block`` guard drops. Callers log/inspect this
-    (one extra aggregate) instead of the guard forcing an action inside
-    the lazy pair plan. → (*keys, df) ordered by df desc."""
-    return (keyed.groupBy(*keys).agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > cap).orderBy(F.desc("df")))

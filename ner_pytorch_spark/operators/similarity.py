@@ -478,9 +478,8 @@ def lsh_topk(
     equi-join quadratic. Buckets over the cap are dropped from blocking
     (recall there is already served by the vector's other ``n_tables``-1
     tables, and a bucket holding >max_bucket near-identical vectors is
-    dedup territory, not top-k). Dropped buckets are observable via
-    :func:`ner_pytorch_spark.operators.dedup.hot_buckets`. ``None``
-    disables the guard.
+    dedup territory, not top-k). The plan does not report which buckets
+    it dropped. ``None`` disables the guard.
     """
     from pyspark.sql.types import ArrayType
 

@@ -4,6 +4,12 @@ scoring, token counting, document fingerprinting.
 All primary paths are native Column expressions (JVM, codegen); the
 rolling-hash fingerprint is the one pandas UDF (no native 64-bit poly
 hash). Oracle-checkable: every native op has a direct ANSI-SQL twin.
+
+The corpus-hygiene operators share two row-local building blocks from
+here: :func:`word_ngrams` (a doc's word n-grams, used by dedup
+shingling, decontamination grams and the repetition scores) and
+:func:`doc_lines` (a doc's trimmed non-empty lines, used by the
+repetition scores and both boilerplate operators).
 """
 
 from __future__ import annotations
@@ -35,6 +41,33 @@ def tokens_lower(text_col: str = "text") -> Column:
     # its (frozen) equivalent formulation.
     return F.regexp_extract_all(F.lower(F.col(text_col)),
                                 F.lit("[a-z0-9]+"), 0)
+
+
+def word_ngrams(toks: Column, n: int) -> Column:
+    """The space-joined word ``n``-grams of token array ``toks``, in
+    order; empty below ``n`` tokens, ``None`` for a ``None`` array.
+
+    ``n`` shifted slices folded with ``zip_with``: O(n·len) per doc (a
+    per-position slice is O(len²), measured 10× slower at 300-token
+    docs). ``toks`` should be a projected column, not an expression, or
+    each slice re-evaluates it.
+    """
+    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    grams = F.slice(toks, 1, m)
+    for k in range(1, n):
+        grams = F.zip_with(grams, F.slice(toks, k + 1, m),
+                           lambda g, t: F.concat(g, F.lit(" "), t))
+    return grams
+
+
+def doc_lines(text: Column) -> Column:
+    """A doc's non-empty trimmed lines, in order (``None`` text → ``None``).
+
+    The trim is a lambda: ``F.transform(arr, F.trim)`` would bind trim's
+    second parameter (the strip characters) to the element index.
+    """
+    return F.filter(F.transform(F.split(text, "\n"), lambda ln: F.trim(ln)),
+                    lambda ln: F.length(ln) > 0)
 
 
 def stopword_ratio(tokens: Column, lang: str) -> Column:
@@ -78,14 +111,7 @@ def text_metrics(docs: DataFrame, keep: list[str], n: int = 2,
 
     # Repetition keys are 8-byte xxhash64 values, never the line/gram
     # string (the decontam/jaccard house contract): every count is exact
-    # at 2^-64 collision odds. A gram is an n-token slice (tokens are
-    # space-free [a-z0-9]+ runs, so slice ↔ joined gram is a bijection),
-    # built by zip_with over the n shifted token arrays.
-    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    grams = F.transform(F.slice(toks, 1, m), lambda t: F.array(t))
-    for k in range(1, n):
-        grams = F.zip_with(grams, F.slice(toks, k + 1, m),
-                           lambda g, t: F.concat(g, F.array(t)))
+    # at 2^-64 collision odds.
     feats = tok.select(
         *keep, text,
         *[stopword_ratio(toks, lang).alias(f"_r_{lang}") for lang in langs],
@@ -94,12 +120,10 @@ def text_metrics(docs: DataFrame, keep: list[str], n: int = 2,
         .alias("_tok_chars"),
         char_ratio(r"[^\w\s]").alias("_punct"),
         char_ratio(r"[0-9]").alias("_digit"),
-        F.transform(
-            F.filter(F.transform(F.split(text, "\n"), lambda ln: F.trim(ln)),
-                     lambda ln: F.length(ln) > 0),
-            lambda ln: F.xxhash64(ln)).alias("_lines"),
-        F.array_sort(F.transform(grams, lambda g: F.xxhash64(g)))
-        .alias("_grams"))
+        F.transform(doc_lines(text), lambda ln: F.xxhash64(ln))
+        .alias("_lines"),
+        F.array_sort(F.transform(word_ngrams(toks, n),
+                                 lambda g: F.xxhash64(g))).alias("_grams"))
 
     # run lengths of the sorted gram hashes: the 1-based positions where
     # a run ends (the next hash differs, or the array ends), then the

@@ -71,12 +71,12 @@ def test_minhash_lsh_finds_near_dups(docs):
 
 
 def test_lsh_wide_buckets_match_long_path(spark, docs):
-    """The one-shuffle wide-aggregate bucket builder produces the SAME
-    candidate set as the explode→groupBy long formulation it replaced
-    (bucket keys are seed-tagged, so key equality ⟺ per-band minhash
-    equality in both)."""
+    """The one-shuffle wide-aggregate bucket builder that
+    minhash_lsh_pairs runs produces the SAME candidate set as the
+    explode→groupBy long formulation it replaced (bucket keys are
+    seed-tagged, so key equality ⟺ per-band minhash equality in both)."""
     from ner_pytorch_spark.operators.dedup import (
-        _lsh_buckets, minhash_signatures, word_shingles)
+        _band_stack, _minhash_aggs, minhash_signatures, word_shingles)
 
     n_hashes, bands, rpb = 16, 4, 4
     sig = minhash_signatures(docs)
@@ -94,7 +94,8 @@ def test_lsh_wide_buckets_match_long_path(spark, docs):
                 .filter(F.col("doc_a") < F.col("doc_b"))
                 .select("doc_a", "doc_b").distinct().collect()}
 
-    wide = _lsh_buckets(word_shingles(docs), n_hashes, bands)
+    wide = _band_stack(word_shingles(docs).groupBy("doc_id")
+                       .agg(*_minhash_aggs(n_hashes)), n_hashes, bands)
     assert cands(wide, "bucket_key") == cands(long_buckets, "k")
 
 
@@ -212,15 +213,6 @@ def test_simhash_max_bucket_guard(spark):
     assert len(g) == 1 and g[0].n_dups == n
 
 
-def test_hot_buckets_reports_dropped_keys(spark):
-    from ner_pytorch_spark.operators.dedup import hot_buckets
-
-    keyed = spark.createDataFrame(
-        [("a", i) for i in range(10)] + [("b", 0)], "k string, v long")
-    hot = hot_buckets(keyed, ["k"], cap=5).collect()
-    assert [(r.k, r.df) for r in hot] == [("a", 10)]
-
-
 def test_shingle_cache_keyed_by_plan(spark, docs):
     """Interleaving two corpora keeps both persisted shingle tables
     (the round-4 single-slot global thrashed on this pattern)."""
@@ -239,31 +231,57 @@ def test_shingle_cache_keyed_by_plan(spark, docs):
     assert len(_SH_CACHE._slots) <= _SH_CACHE.capacity
 
 
+def _dense_corpus(spark):
+    """60 docs over 3 hot words (in every doc, df = 60) and 20 cold ones
+    (df ≈ 24 each), plus the adversarial docs."""
+    import random
+
+    rng = random.Random(13)
+    hot = ["h0", "h1", "h2"]
+    cold = [f"w{i}" for i in range(20)]
+    rows = [(i, " ".join(hot
+                         + [rng.choice(cold) for _ in range(8)]))
+            for i in range(60)]
+    rows += [(60 + i, t) for i, t in enumerate(ADVERSARIAL)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+# each Jaccard kernel forced through the policy's bounds: no vocabulary
+# fits a 0-bit bitmap, and any work passes a 0 density floor
+_FORCE = {"relational": ("_DENSE_MAX_SHINGLES", 0),
+          "dense": ("_DENSE_MIN_DENSITY", 0)}
+
+
+def _forced_jaccard(docs, path, **kw):
+    """ngram_jaccard_pairs(docs, n=1) on ``path``; the policy memo stores
+    the decision, so every cache is emptied before the call."""
+    from ner_pytorch_spark import plan_cache
+    from ner_pytorch_spark.operators import dedup
+
+    plan_cache.clear_caches()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, *_FORCE[path])
+        return dedup.ngram_jaccard_pairs(docs, n=1, **kw)
+
+
 def test_jaccard_dense_matches_relational(spark, monkeypatch):
     """The dense bitmap kernel is value-identical to the relational
     blocking join, including stop-shingle cap semantics (n_common counts
     only non-stop commons; sizes stay FULL), on the adversarial docs and
     with tiles spanning many 5-row Arrow batches."""
-    import random
+    from ner_pytorch_spark.operators import pairtiles
 
-    from ner_pytorch_spark.operators import dedup, pairtiles
+    docs = _dense_corpus(spark)
 
-    rng = random.Random(13)
-    hot = ["h0", "h1", "h2"]               # in every doc → df = 60
-    cold = [f"w{i}" for i in range(20)]    # df ≈ 24 each
-    rows = [(i, " ".join(hot
-                         + [rng.choice(cold) for _ in range(8)]))
-            for i in range(60)]
-    rows += [(60 + i, t) for i, t in enumerate(ADVERSARIAL)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    def pairs(path, **kw):
+        return sorted(map(tuple, _forced_jaccard(docs, path, **kw).collect()))
 
-    def pairs(**kw):
-        return sorted(map(tuple, dedup.ngram_jaccard_pairs(
-            docs, n=1, **kw).collect()))
-
-    plan = dedup.ngram_jaccard_pairs(docs, n=1, dense=True) \
+    plan = _forced_jaccard(docs, "dense") \
         ._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan and "MapInPandas" not in plan
+    plan = _forced_jaccard(docs, "relational") \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in plan
     # cap off, then cap=40: hot words stopped (df 60 > 40), cold kept —
     # n_common loses the hot words while sizes n_a/n_b keep them; the
     # last pass forces tiles of a few docs
@@ -271,14 +289,42 @@ def test_jaccard_dense_matches_relational(spark, monkeypatch):
         for max_block, thr, tile in ((1000, 0.3, 2048), (40, 0.1, 2048),
                                      (1000, 0.3, 4)):
             monkeypatch.setattr(pairtiles, "_TILE", tile)
-            rel = pairs(threshold=thr, max_block=max_block, dense=False)
-            den = pairs(threshold=thr, max_block=max_block, dense=True)
+            rel = pairs("relational", threshold=thr, max_block=max_block)
+            den = pairs("dense", threshold=thr, max_block=max_block)
             assert rel == den and len(den) > 0
             assert {(63, 64, 1.0), (67, 78, 1.0)} <= set(den)  # identical
 
 
+def test_jaccard_policy_cold_two_actions_warm_none(spark, monkeypatch):
+    """The policy's numbers and the dense kernel's bit index come from
+    one bounded collect plus the doc count: a cold call that picks the
+    dense kernel runs exactly 2 driver actions, a warm call none."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from ner_pytorch_spark import plan_cache
+    from ner_pytorch_spark.operators import dedup
+
+    docs = _dense_corpus(spark)
+    plan_cache.clear_caches()
+    calls = []
+    for name in ("collect", "count", "first"):
+        def counted(self, *args, _orig=getattr(DataFrame, name),
+                    _name=name, **kw):
+            calls.append(_name)
+            return _orig(self, *args, **kw)
+        monkeypatch.setattr(DataFrame, name, counted)
+    dedup.ngram_jaccard_pairs(docs, n=1, threshold=0.3)
+    cold = sorted(calls)
+    calls.clear()
+    warm = dedup.ngram_jaccard_pairs(docs, n=1, threshold=0.3)
+    monkeypatch.undo()
+    assert cold == ["collect", "count"] and calls == [], (cold, calls)
+    plan = warm._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan   # the default policy chose dense
+
+
 def test_jaccard_dense_policy_stays_relational_when_sparse(spark):
-    """auto-policy: a sparse corpus (every doc its own vocabulary) must
+    """The policy on a sparse corpus (every doc its own vocabulary) must
     keep the scale-safe blocking join — the plan shows the shingle
     equi-join, no Python map node of the dense kernel."""
     from ner_pytorch_spark.operators import dedup
@@ -288,26 +334,11 @@ def test_jaccard_dense_policy_stays_relational_when_sparse(spark):
     rows = [(i, " ".join(f"tok{i}x{j}" for j in range(30)))
             for i in range(50)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    df = dedup.ngram_jaccard_pairs(docs, n=1, threshold=0.5, dense="auto")
+    df = dedup.ngram_jaccard_pairs(docs, n=1, threshold=0.5)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # relational path chosen
     assert "MapInPandas" not in plan and "MapInArrow" not in plan
     assert df.count() == 0
-
-
-def test_jaccard_dense_forced_past_bounds_raises(spark, docs, monkeypatch):
-    """dense=True respects the dense kernel's size bounds: past either
-    one it raises, naming the bound, instead of collecting the
-    vocabulary to the driver."""
-    from ner_pytorch_spark.operators import dedup
-
-    monkeypatch.setattr(dedup, "_DENSE_MAX_SHINGLES", 2)
-    with pytest.raises(ValueError, match="_DENSE_MAX_SHINGLES"):
-        ngram_jaccard_pairs(docs, n=1, dense=True)
-    monkeypatch.setattr(dedup, "_DENSE_MAX_SHINGLES", 4096)
-    monkeypatch.setattr(dedup, "_DENSE_MAX_DOCS", 2)
-    with pytest.raises(ValueError, match="_DENSE_MAX_DOCS"):
-        ngram_jaccard_pairs(docs, n=1, dense=True)
 
 
 def test_clear_caches_empties_every_module_cache(spark, docs, monkeypatch):
@@ -328,7 +359,7 @@ def test_clear_caches_empties_every_module_cache(spark, docs, monkeypatch):
         return unpersist(self, blocking)
 
     monkeypatch.setattr(Broadcast, "unpersist", spy)
-    ngram_jaccard_pairs(docs, n=1, dense=True)
+    _forced_jaccard(docs, "dense")
     simhash_pairs(docs, max_hamming=3, max_bucket=1)
     bcs = [(k[0], m["bc"]) for k, m in dedup._META.items() if m.get("bc")]
     assert any(kind == "jaccard" for kind, _ in bcs)

@@ -1,6 +1,8 @@
 """O1 length batching, C5 tag-run merge, M9 argmax decode."""
 
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
 
 def test_repartition_by_length(spark):
@@ -214,7 +216,6 @@ def test_repetition_scores(spark):
     scores ~0, line-repeated and phrase-repeated docs score high, and
     degenerate docs (empty / single-token) coalesce to 0. Edge inputs
     match a pure-Python reference for n = 2 and 3."""
-    import pytest
 
     from ner_pytorch_spark.operators.textstats import repetition_scores
 
@@ -267,3 +268,88 @@ def test_repetition_scores(spark):
         for i, text in enumerate(texts):
             want = _repetition_reference(text, n)
             assert got[i] == pytest.approx(want, abs=5e-7), (n, text)
+
+
+_NGRAM_WORDS = ("alpha", "beta", "gamma")
+
+
+def _ngram_texts(n):
+    """Adversarial n-gram inputs, keyed by what each one exercises."""
+    return {
+        "none": None,
+        "empty": "",
+        "whitespace": "  \t \n ",
+        "short": " ".join(_NGRAM_WORDS[:n - 1]),   # n - 1 tokens
+        "exact": " ".join(_NGRAM_WORDS[:n]),       # n tokens
+        "repeated": "Go on go on GO on stop",
+        "tabs_spaces": "one\ttwo   three\t\tone  two",
+    }
+
+
+@pytest.mark.parametrize("n", [1, 2, 3])
+def test_ngrams_adversarial_match_reference(spark, n):
+    """The one n-gram builder behind word_shingles, doc_ngram_hashes and
+    repetition_scores equals a pure-Python reference on null, empty,
+    whitespace-only, short, exactly-n, repeated-gram and tab/multi-space
+    texts. word_shingles tokenizes [a-z0-9]+ runs of the lowercased text
+    and gives a doc under n tokens one shingle; doc_ngram_hashes splits
+    the space-trimmed lowercased text on ``\\s+`` (so a text that is
+    empty after the trim is one empty token) and gives a doc under n
+    tokens no grams."""
+    import re
+
+    from ner_pytorch_spark.operators.decontam import doc_ngram_hashes
+    from ner_pytorch_spark.operators.dedup import word_shingles
+    from ner_pytorch_spark.operators.textstats import repetition_scores
+
+    texts = _ngram_texts(n)
+    ids = {name: i for i, name in enumerate(texts)}
+    docs = spark.createDataFrame([(ids[k], t) for k, t in texts.items()],
+                                 "doc_id long, text string")
+
+    def grams(toks):
+        return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+    def shingles_ref(text):
+        if text is None:
+            return set()
+        toks = re.findall("[a-z0-9]+", text.lower())
+        return {" ".join(toks)} - {""} if len(toks) < n else set(grams(toks))
+
+    def hash_grams_ref(text):
+        if text is None:
+            return set()
+        return set(grams(re.split(r"\s+", text.strip(" ").lower())))
+
+    got_sh = {}
+    for r in word_shingles(docs, n=n).collect():
+        got_sh.setdefault(r.doc_id, []).append(r.shingle)
+    # gram strings hashed by the same JVM xxhash64 the operator uses
+    ref_grams = [(ids[k], g) for k, t in texts.items()
+                 for g in hash_grams_ref(t)]
+    want_h = {}
+    for r in spark.createDataFrame(ref_grams, "doc_id long, g string") \
+            .select("doc_id", F.xxhash64("g").alias("h")).collect():
+        want_h.setdefault(r.doc_id, set()).add(r.h)
+    got_h = {}
+    for r in doc_ngram_hashes(docs, n=n).collect():
+        got_h.setdefault(r.doc_id, []).append(r.gram_hash)
+    rep = {r.doc_id: (r.top_ngram_frac, r.dup_ngram_frac)
+           for r in repetition_scores(docs, n=n).collect()}
+
+    for name, text in texts.items():
+        i = ids[name]
+        sh = got_sh.get(i, [])
+        assert len(sh) == len(set(sh)) and set(sh) == shingles_ref(text), \
+            (n, name, sh)
+        hs = got_h.get(i, [])
+        assert len(hs) == len(set(hs)), (n, name, hs)   # one per gram
+        assert set(hs) == want_h.get(i, set()), (n, name)
+        _, top, dup = _repetition_reference(text, n)
+        assert rep[i] == pytest.approx((top, dup), abs=5e-7), (n, name)
+    # the cases bite: a short doc has no gram hashes, only one shingle,
+    # and the repeated gram collapses to one hash
+    if n > 1:
+        assert ids["short"] not in got_h and len(got_sh[ids["short"]]) == 1
+    assert len(got_h[ids["repeated"]]) < len(
+        grams(texts["repeated"].lower().split()))

@@ -23,7 +23,9 @@ Checks (printed + asserted):
   * corpus_prep exact dedup: one aggregate on md5(text), no join
   * corpus_prep quality gate: no join and no hash exchange (every
     metric is row-local over one token array)
-  * simhash_pairs and forced-dense ngram_jaccard_pairs: on a warm call
+  * decontam n-gram hashes: distinct per doc inside the row, no shuffle
+  * simhash_pairs and ngram_jaccard_pairs (the policy picks the dense
+    kernel for sf0.01's 916 non-stop bigrams over 500 docs): on a warm call
     the scoring stage reads the cached tile table as InMemoryTableScan →
     Sort → MapInArrow, no MapInPandas and no Exchange above the scan
 """
@@ -173,8 +175,7 @@ def main():
     for name, pairs in (
             ("simhash", lambda: e.q_simhash_pairs(spark, SF)),
             ("jaccard_dense", lambda: ngram_jaccard_pairs(
-                e._read(spark, SF, "documents"), n=2, threshold=0.12,
-                dense=True))):
+                e._read(spark, SF, "documents"), n=2, threshold=0.12))):
         pairs().count()
         tree = plan_of(pairs()).split("\n\n", 1)[0]
         ok &= check(f"{name}_warm_arrow_tiles",
@@ -223,6 +224,12 @@ def main():
     ok &= check("decontam_equijoin", plan,
                 must=[r"xxhash64"],
                 must_not=[r"CartesianProduct", r"BroadcastNestedLoop"])
+    # the per-doc distinct n-gram hashes are an array_distinct inside
+    # the doc's row: no row-level distinct, so no hash exchange
+    from ner_pytorch_spark.operators.decontam import doc_ngram_hashes
+
+    plan = plan_of(doc_ngram_hashes(e._read(spark, SF, "documents"), n=3))
+    ok &= check("decontam_grams_row_local", plan, must_not=NO_SHUFFLE)
     plan = plan_of(e.q_decontam_clean(spark, SF))
     ok &= check("decontam_clean_antijoin", plan,
                 must=[r"LeftAnti"],
