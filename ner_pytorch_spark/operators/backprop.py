@@ -21,23 +21,20 @@ Everything is checked against central finite differences on tiny dims
 (tests/test_backprop.py) — the strongest correctness statement a
 hand-written autodiff can make.
 
-Distribution reuses the trainer topology that already ships
-(operators/train.py): per-partition local SGD epochs + example-weighted
-iterative parameter mixing (McDonald et al. 2010) — per epoch each
-partition emits ONE weight-delta row; the corpus never moves.
+Distribution reuses the trainer topology of operators/train.py:
+per-partition local SGD epochs + example-weighted iterative parameter
+mixing (McDonald et al. 2010), one :func:`.rounds.partition_results`
+round per epoch — each partition returns ONE weight delta; the corpus
+never moves.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
-                               StructField, StructType)
 
 from .encoder import TaggerWeights
+from .rounds import partition_results
 from .tagset import ENTITY_TYPES, iobes_tags
 
 
@@ -474,7 +471,7 @@ def _set_arrays(w: TaggerWeights, arrays: dict[str, np.ndarray]) -> TaggerWeight
         transitions=arrays["transitions"], meta=dict(w.meta))
 
 
-def sgd_partition_pass(pdf, weights: TaggerWeights, vocab, chars, unk,
+def sgd_partition_pass(table, weights: TaggerWeights, vocab, chars, unk,
                        tag_ids, lr, clip, batch_size, dropout, seed,
                        adv_alpha: float = 0.0, adv_ratio: float = 0.0,
                        momentum: float = 0.0):
@@ -493,8 +490,9 @@ def sgd_partition_pass(pdf, weights: TaggerWeights, vocab, chars, unk,
     Returns (n_sentences, nll_sum, arrays)."""
     from .tagger import featurize_sentence
 
-    rng = np.random.default_rng([seed, len(pdf)])
-    rows = list(zip(pdf["tokens"].tolist(), pdf["gold_tags"].tolist()))
+    rng = np.random.default_rng([seed, table.num_rows])
+    rows = list(zip(table.column("tokens").to_pylist(),
+                    table.column("gold_tags").to_pylist()))
     order = rng.permutation(len(rows))
     vel: dict[str, np.ndarray] = {}
     arrays = {k: (None if v is None else v.copy())
@@ -506,7 +504,7 @@ def sgd_partition_pass(pdf, weights: TaggerWeights, vocab, chars, unk,
         chunk.sort(key=lambda r: len(r[0]))
         wi, ci, caps, tgs = [], [], [], []
         for tokens, gold in chunk:
-            a, b, c = featurize_sentence(list(tokens), vocab, chars, unk)
+            a, b, c = featurize_sentence(tokens, vocab, chars, unk)
             wi.append(a)
             ci.append(b)
             caps.append(c)
@@ -532,35 +530,22 @@ def sgd_partition_pass(pdf, weights: TaggerWeights, vocab, chars, unk,
     return len(rows), nll_total, arrays
 
 
-_BP_SCHEMA = StructType(
-    [StructField("n_sentences", LongType()),
-     StructField("nll", DoubleType())]
-    + [StructField(f"d_{k}", ArrayType(DoubleType())) for k in _GRAD_KEYS])
-
-
 def _mean_dev_nll(dev: DataFrame, weights: TaggerWeights, vocab, char_vocab,
                   unk, tag_ids) -> float:
-    """Held-out mean CRF NLL, forward-only: one (nll_sum, n) row per
-    partition (no gradients, no weight traffic back) — the early-stop
-    monitor (pytorchtools.py val_loss)."""
+    """Held-out mean CRF NLL, forward-only: one (nll_sum, n) pair per
+    partition from one :func:`.rounds.partition_results` round, one
+    forward per Arrow batch (no gradients, no weight traffic back) — the
+    early-stop monitor (pytorchtools.py val_loss)."""
     from .crf import forward_score, path_score
     from .encoder import neural_emissions
     from .tagger import featurize_sentence
 
-    sc = dev.sparkSession.sparkContext
-    bc = sc.broadcast({"w": weights, "vocab": vocab, "chars": char_vocab})
-    schema = StructType([StructField("nll", DoubleType()),
-                         StructField("n", LongType())])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        v = bc.value
+    def local(v, table):
         w = v["w"]
         total, n = 0.0, 0
-        for pdf in batches:
-            tok_lists = [list(t) for t in pdf["tokens"]]
-            tag_lists = [list(t) for t in pdf["gold_tags"]]
-            if not tok_lists:
-                continue
+        for rb in table.to_batches():
+            tok_lists = rb.column("tokens").to_pylist()
+            tag_lists = rb.column("gold_tags").to_pylist()
             feats = [featurize_sentence(t, v["vocab"], v["chars"], unk)
                      for t in tok_lists]
             em, lengths = neural_emissions(
@@ -574,13 +559,13 @@ def _mean_dev_nll(dev: DataFrame, weights: TaggerWeights, vocab, char_vocab,
             gold_s = path_score(em, gold, lengths, w.transitions)
             total += float((logz - gold_s).sum())
             n += len(tok_lists)
-        if n:
-            yield pd.DataFrame({"nll": [total], "n": [n]})
+        return total, n
 
-    rows = dev.select("tokens", "gold_tags").mapInPandas(run, schema).collect()
-    bc.unpersist(blocking=False)
-    tn = sum(r["n"] for r in rows) or 1
-    return sum(r["nll"] for r in rows) / tn
+    rows = partition_results(
+        dev.select("tokens", "gold_tags"),
+        {"w": weights, "vocab": vocab, "chars": char_vocab}, local)
+    tn = sum(r[1] for r in rows) or 1
+    return sum(r[0] for r in rows) / tn
 
 
 def train_bilstm_crf(
@@ -603,11 +588,12 @@ def train_bilstm_crf(
     dev: DataFrame | None = None,
     patience: int | None = None,
 ) -> tuple[TaggerWeights, list[dict]]:
-    """Distributed full-model SGD: per epoch each partition runs a local
-    SGD pass from the broadcast weights and emits ONE delta row; deltas
-    mix weighted by example counts (iterative parameter mixing — the
-    same topology as the shipped perceptron trainer, now over every
-    trainable array). Shuffle traffic per epoch = n_partitions rows.
+    """Distributed full-model SGD: per epoch, one
+    :func:`.rounds.partition_results` round in which each partition runs
+    a local SGD pass from the broadcast weights and returns ONE delta;
+    deltas mix weighted by example counts (iterative parameter mixing —
+    the same topology as the perceptron trainer, over every trainable
+    array). Traffic per epoch = n_partitions deltas.
 
     ``adv_alpha > 0`` enables M10 adversarial training: each batch
     takes a second forward on gradient-perturbed char embeddings and
@@ -636,56 +622,39 @@ def train_bilstm_crf(
       just records ``dev_nll`` per epoch.
 
     Returns (trained weights float32, per-epoch metrics)."""
-    sc = sentences.sparkSession.sparkContext
     tags = iobes_tags(entity_types)
     tag_ids = {t: i for i, t in enumerate(tags)}
     unk = vocab.get("<UNK>", 0)
     cur = _to_f64(weights)
-    shapes = {k: (None if v is None else v.shape)
-              for k, v in _get_arrays(cur).items()}
     metrics: list[dict] = []
     data = sentences.select("tokens", "gold_tags")
 
     best: tuple[float, int, dict] | None = None   # (dev_nll, epoch, arrays)
     stale = 0
     for epoch in range(epochs):
-        bc = sc.broadcast({"w": cur, "vocab": vocab, "chars": char_vocab})
         ratio_e = (adv_ratio if not adv_warmup_epochs else
                    adv_ratio * min(1.0, (epoch + 1) / adv_warmup_epochs))
         lr_e = lr / (1.0 + lr_decay * epoch)
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            v = bc.value
-            lst = list(batches)
-            if not lst:
-                return
-            pdf = pd.concat(lst, ignore_index=True)
-            if len(pdf) == 0:
-                return
+        def local(v, table):
             n, nll, arrays = sgd_partition_pass(
-                pdf, v["w"], v["vocab"], v["chars"], unk, tag_ids,
+                table, v["w"], v["vocab"], v["chars"], unk, tag_ids,
                 lr_e, clip, batch_size, dropout, seed + epoch,
                 adv_alpha=adv_alpha, adv_ratio=ratio_e, momentum=momentum)
             base = _get_arrays(v["w"])
-            row = {"n_sentences": [n], "nll": [nll]}
-            for k in _GRAD_KEYS:
-                d = (arrays[k] - base[k]).ravel() if base[k] is not None \
-                    else np.zeros(0)
-                row[f"d_{k}"] = [d]
-            yield pd.DataFrame(row)
+            return n, nll, {k: arrays[k] - base[k] for k in _GRAD_KEYS
+                            if base[k] is not None}
 
-        rows = data.mapInPandas(run, _BP_SCHEMA).collect()
-        bc.unpersist(blocking=False)
-        total = sum(r["n_sentences"] for r in rows) or 1
-        nll_mean = sum(r["nll"] for r in rows) / total
+        rows = partition_results(
+            data, {"w": cur, "vocab": vocab, "chars": char_vocab}, local)
+        total = sum(r[0] for r in rows) or 1
+        nll_mean = sum(r[1] for r in rows) / total
         arrays = {k: (None if v is None else v.copy())
                   for k, v in _get_arrays(cur).items()}
-        for r in rows:
-            frac = r["n_sentences"] / total
-            for k in _GRAD_KEYS:
-                if arrays.get(k) is not None and len(r[f"d_{k}"]):
-                    arrays[k] += frac * np.asarray(
-                        r[f"d_{k}"]).reshape(shapes[k])
+        for n, _, deltas in rows:
+            frac = n / total
+            for k, d in deltas.items():
+                arrays[k] += frac * d
         cur = _set_arrays(cur, arrays)
         cur.meta.update({"trained": True, "epochs": epoch + 1})
         row = {"epoch": epoch, "n_sentences": int(total),

@@ -32,9 +32,10 @@ plugs its parse into the same socket.
 
 Spark shape: everything is row-local — ONE ``mapInPandas`` stage, no
 shuffle, no driver collect. The projector trains by partition-local
-numpy GD + example-weighted parameter mixing (one delta row per
-partition per epoch — the house trainer topology), so the corpus never
-moves at 100 TB.
+numpy GD + example-weighted parameter mixing (one
+:func:`.rounds.partition_results` round per epoch, one result per
+partition — the house trainer topology), so the corpus never moves at
+100 TB.
 """
 
 from __future__ import annotations
@@ -51,6 +52,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, IntegerType, StringType,
                                StructField, StructType)
+
+from .rounds import partition_results
 
 _PUNCT = set("!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~")
 _CONTRACTION = re.compile(r"'\w+")
@@ -276,11 +279,12 @@ def train_projector(parsed: DataFrame, tags_col: str = "pred_tags",
     semantics): labels come from each sentence's GOLD linear order
     (y = l before r), features from the contracted super-token tree.
 
-    Topology: per epoch each partition runs local full-batch GD from the
-    broadcast weights and emits ONE (weights, n_pairs) row; the driver
-    mixes example-weighted — iterative parameter mixing, the same shape
-    as the perceptron/backprop trainers. Shuffle per epoch =
-    n_partitions rows; the corpus never moves.
+    Topology: per epoch, one :func:`.rounds.partition_results` round —
+    each partition runs local full-batch GD from the broadcast weights
+    and returns ONE (weights, n_pairs) pair; the driver mixes
+    example-weighted — iterative parameter mixing, the same shape as
+    the perceptron/backprop trainers. Traffic per epoch = n_partitions
+    results; the corpus never moves.
     """
     # bounded: label-set sized. SORTED — a bare distinct().collect()
     # returns shuffle order, which varies with spark.sql.shuffle
@@ -293,35 +297,30 @@ def train_projector(parsed: DataFrame, tags_col: str = "pred_tags",
         .distinct().collect(),
         key=lambda r: (r["d"], r["p"]))
     proj = OrderProjector([r["d"] for r in vocab], [r["p"] for r in vocab])
-    sc = parsed.sparkSession.sparkContext
     cols = parsed.select("tokens", tags_col, arcs_col)
+
+    def part(w0, table):
+        keys, ys = [], []
+        for toks, tags, arcs in zip(*(c.to_pylist() for c in table.columns)):
+            texts, tstr, groups, _ = merge_entity_tokens(toks, tags)
+            arcs_t = [(a["id"], a["head"], a["deprel"], a["upos"])
+                      for a in arcs]
+            ch, dep, pos = contract_tree(arcs_t, groups)
+            for key, y, _ in family_pairs(ch, dep, pos):
+                keys.append(key)
+                ys.append(y)
+        if not keys:
+            return None
+        return proj.fit_local(keys, ys, lr=lr, iters=iters, w0=w0), len(ys)
 
     w = proj.w
     for _ in range(epochs):
-        bc = sc.broadcast(w)
-
-        def part(rows_iter, _b=bc, _pr=proj):
-            keys, ys = [], []
-            for row in rows_iter:
-                toks, tags, arcs = row[0], row[1], row[2]
-                texts, tstr, groups, _ = merge_entity_tokens(
-                    list(toks), list(tags))
-                arcs_t = [(a[0], a[1], a[2], a[3]) for a in arcs]
-                ch, dep, pos = contract_tree(arcs_t, groups)
-                for key, y, _ in family_pairs(ch, dep, pos):
-                    keys.append(key)
-                    ys.append(y)
-            if not keys:
-                return iter(())
-            wl = _pr.fit_local(keys, ys, lr=lr, iters=iters, w0=_b.value)
-            return iter([(wl.tolist(), len(ys))])
-
-        deltas = cols.rdd.mapPartitions(part).collect()
-        bc.destroy()
+        deltas = [r for r in partition_results(cols, w, part)
+                  if r is not None]
         if not deltas:
             break
         tot = sum(n for _, n in deltas)
-        w = np.sum([np.array(wl) * (n / tot) for wl, n in deltas], axis=0)
+        w = np.sum([wl * (n / tot) for wl, n in deltas], axis=0)
     proj.w = w
     return proj
 

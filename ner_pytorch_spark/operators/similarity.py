@@ -24,7 +24,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
@@ -35,6 +34,7 @@ from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
 # codebook bytes) so interleaved IVF queries over different corpora or
 # codebooks each keep their persisted assignment; LRU-bounded
 from ..plan_cache import PlanCache, plan_key
+from .rounds import partition_results
 
 _IVF_CACHE = PlanCache(capacity=2)
 
@@ -183,25 +183,51 @@ def kmeans_codebook(embeddings: DataFrame, n_cells: int,
                     id_col: str = "vec_id", emb_col: str = "embedding",
                     sample: int = 4096, iters: int = 10,
                     seed: int = 42) -> np.ndarray:
-    """Deterministic spherical k-means codebook for IVF.
+    """Deterministic spherical k-means codebook for IVF — a distributed
+    Lloyd loop that holds only the ``[n_cells, d]`` codebook on the
+    driver.
 
-    A hash-ordered sample (≤ ``sample`` rows — bounded driver memory at
-    any corpus size) is collected once; Lloyd iterations run driver-side
-    in numpy (cosine assignment, mean update, re-normalize; empty cells
-    keep their previous centroid). Deterministic given (data, seed) but
-    NOT engine-replayable (float centroids) — the oracle path stays the
-    smallest-id codebook; this is the cell-balance upgrade for real
-    clustered embeddings.
+    Initialization: ``n_cells`` rows of a hash-ordered sample (≤
+    ``sample`` rows, bounded driver memory at any corpus size) picked
+    by a ``seed``-ed permutation. Each iteration is one
+    :func:`.rounds.partition_results` round over the FULL corpus: every
+    partition assigns its vectors to the broadcast centroids by cosine
+    (one matmul per Arrow batch) and returns its per-cell sums and
+    counts; the driver adds them, and each non-empty cell moves to its
+    re-normalized mean (empty cells keep their centroid). Deterministic
+    given (data, partitioning, seed) but NOT engine-replayable (float
+    centroids) — the oracle path stays the smallest-id codebook; this
+    is the cell-balance upgrade for real clustered embeddings.
     """
     x = _codebook_sample(embeddings, id_col, emb_col, sample)
     rng = np.random.default_rng(seed)
     cents = x[rng.permutation(len(x))[:n_cells]].copy()
+    d = cents.shape[1]
+
+    def partials(c, table):
+        sums = np.zeros((n_cells, d))
+        counts = np.zeros(n_cells, dtype=np.int64)
+        for rb in table.to_batches():
+            # zero-copy [B, dim] reshape of the list column's values
+            q = (rb.column(0).flatten().to_numpy(zero_copy_only=False)
+                 .reshape(rb.num_rows, -1).astype(np.float64))
+            q /= np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
+            assign = (q @ c.T).argmax(axis=1)
+            np.add.at(sums, assign, q)
+            np.add.at(counts, assign, 1)
+        return sums, counts
+
+    data = embeddings.select(emb_col)
     for _ in range(iters):
-        assign = (x @ cents.T).argmax(axis=1)
+        sums = np.zeros((n_cells, d))
+        counts = np.zeros(n_cells, dtype=np.int64)
+        for part_sums, part_counts in partition_results(data, cents,
+                                                        partials):
+            sums += part_sums
+            counts += part_counts
         for ci in range(n_cells):
-            m = assign == ci
-            if m.any():
-                v = x[m].sum(axis=0) / m.sum()
+            if counts[ci]:
+                v = sums[ci] / counts[ci]
                 n = np.linalg.norm(v)
                 if n > 1e-12:
                     cents[ci] = v / n
@@ -220,89 +246,11 @@ def _codebook_sample(embeddings: DataFrame, id_col: str, emb_col: str,
     return x
 
 
-def kmeans_codebook_distributed(embeddings: DataFrame, n_cells: int,
-                                id_col: str = "vec_id",
-                                emb_col: str = "embedding",
-                                sample: int = 4096, iters: int = 10,
-                                seed: int = 42) -> np.ndarray:
-    """Cluster-scale Lloyd loop: the driver holds ONLY the ``[n_cells,
-    d]`` codebook; per iteration each partition computes cosine
-    assignments against the broadcast centroids in one Arrow matmul and
-    emits ONE partial-sums row (``n_cells`` flattened sums + counts) —
-    the parameter-mixing delta-row topology, shuffle-free. Centroid
-    update (sum/count, re-normalize, empty cells keep their centroid)
-    happens driver-side on the reduced partials.
-
-    Initialization is IDENTICAL to :func:`kmeans_codebook` (same
-    hash-ordered sample, same seeded permutation), so on inputs that
-    fit the sample the two produce the same codebook (tested at
-    n_cells=64); past sample size this one keeps iterating over the
-    FULL corpus where the driver version clips to its sample.
-    """
-    sc = embeddings.sparkSession.sparkContext
-    x0 = _codebook_sample(embeddings, id_col, emb_col, sample)
-    rng = np.random.default_rng(seed)
-    cents = x0[rng.permutation(len(x0))[:n_cells]].copy()
-    d = cents.shape[1]
-    schema = StructType([
-        StructField("sums", ArrayType(DoubleType())),
-        StructField("counts", ArrayType(LongType())),
-    ])
-    data = embeddings.select(emb_col)
-    for _ in range(iters):
-        bc = sc.broadcast(cents)
-
-        def partials(batches):
-            # mapInArrow: zero-copy [B, dim] reshape per batch instead
-            # of boxing one ndarray per row through pandas
-            import pyarrow as pa
-
-            c = bc.value
-            sums = np.zeros((n_cells, d))
-            counts = np.zeros(n_cells, dtype=np.int64)
-            seen = False
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                seen = True
-                q = (rb.column(0).flatten().to_numpy(zero_copy_only=False)
-                     .reshape(rb.num_rows, -1).astype(np.float64))
-                q /= np.maximum(np.linalg.norm(q, axis=1, keepdims=True),
-                                1e-12)
-                assign = (q @ c.T).argmax(axis=1)
-                np.add.at(sums, assign, q)
-                np.add.at(counts, assign, 1)
-            if seen:
-                offs_d = pa.array(np.array([0, n_cells * d], dtype=np.int32))
-                offs_c = pa.array(np.array([0, n_cells], dtype=np.int32))
-                yield pa.RecordBatch.from_arrays(
-                    [pa.ListArray.from_arrays(
-                        offs_d, pa.array(sums.ravel(), pa.float64())),
-                     pa.ListArray.from_arrays(
-                        offs_c, pa.array(counts, pa.int64()))],
-                    names=["sums", "counts"])
-
-        rows = data.mapInArrow(partials, schema).collect()
-        bc.unpersist(blocking=False)
-        sums = np.zeros((n_cells, d))
-        counts = np.zeros(n_cells, dtype=np.int64)
-        for r in rows:
-            sums += np.asarray(r["sums"]).reshape(n_cells, d)
-            counts += np.asarray(r["counts"])
-        for ci in range(n_cells):
-            if counts[ci]:
-                v = sums[ci] / counts[ci]
-                n = np.linalg.norm(v)
-                if n > 1e-12:
-                    cents[ci] = v / n
-    return cents
-
-
 def ivf_topk(
     embeddings: DataFrame, k: int = 5, n_cells: int = 16, n_probe: int = 4,
     id_col: str = "vec_id", emb_col: str = "embedding",
     max_cell: int | None = 100_000,
-    codebook: str | np.ndarray = "minid",
+    codebook: str = "minid",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the faiss-IVF shape.
 
@@ -324,26 +272,20 @@ def ivf_topk(
     candidate SET is unchanged (tested) but no join block exceeds
     ~``max_cell`` index rows. ``None`` disables the guard.
 
-    ``codebook``: ``"minid"`` (deterministic, oracle-replayable),
+    ``codebook``: ``"minid"`` (deterministic, oracle-replayable) or
     ``"kmeans"`` (:func:`kmeans_codebook` — better cell balance on
-    clustered data), ``"kmeans-distributed"``
-    (:func:`kmeans_codebook_distributed` — full-corpus Lloyd with
-    delta-row partials, for large ``n_cells``/corpora), or a pre-built
-    ``[n_cells, d]`` array.
+    clustered data, full-corpus Lloyd iterations); any other value
+    raises ``ValueError``.
     """
-    from pyspark.sql.types import ArrayType
-
-    if isinstance(codebook, np.ndarray):
-        cents = np.asarray(codebook, dtype=np.float64)
-    elif codebook == "kmeans":
+    if codebook == "kmeans":
         cents = kmeans_codebook(embeddings, n_cells, id_col, emb_col)
-    elif codebook == "kmeans-distributed":
-        cents = kmeans_codebook_distributed(embeddings, n_cells,
-                                            id_col, emb_col)
-    else:
+    elif codebook == "minid":
         rows = (embeddings.select(id_col, emb_col)
                 .orderBy(id_col).limit(n_cells).collect())
         cents = np.array([r[1] for r in rows], dtype=np.float64)
+    else:
+        raise ValueError(
+            f"codebook must be 'minid' or 'kmeans', got {codebook!r}")
     cents /= np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
     bc = embeddings.sparkSession.sparkContext.broadcast(cents)
 
@@ -481,8 +423,6 @@ def lsh_topk(
     dedup territory, not top-k). The plan does not report which buckets
     it dropped. ``None`` disables the guard.
     """
-    from pyspark.sql.types import ArrayType
-
     in_schema = {f.name: f.dataType for f in embeddings.schema.fields}
     bucket_schema = StructType([
         StructField("vec_id", in_schema[id_col]),

@@ -1,19 +1,21 @@
 """Distributed CRF-head training: structured perceptron + parameter mixing.
 
-The reference trains the full BiLSTM-CRF by backprop SGD
-(/root/reference/train.py:400-537). No autograd ships in this sandbox,
-so the engine trains what it can compute exactly with its numpy forward:
-the CRF HEAD — emission projection (M6) and transition matrix (M7/M8) —
-over the FROZEN encoder representation (M1-M5), using the structured
-perceptron (Collins 2002): decode with current weights, and on a wrong
-path add the gold path's features and subtract the predicted path's.
+The reference trains the full BiLSTM-CRF by backprop SGD (its
+train.py:400-537), and so does ``backprop.py``. This module is the
+cheaper trainer next to it: it learns only the CRF HEAD — emission
+projection (M6) and transition matrix (M7/M8) — over the FROZEN encoder
+representation (M1-M5), computed exactly by the numpy forward, using
+the structured perceptron (Collins 2002): decode with current weights,
+and on a wrong path add the gold path's features and subtract the
+predicted path's.
 
 Distribution is iterative parameter mixing (McDonald, Hall & Mann,
-NAACL 2010): every epoch each partition runs local perceptron updates
-starting from the broadcast weights, emits ONE delta row, and the driver
-mixes the deltas weighted by per-partition example counts, rebroadcasts,
-repeats. Shuffle traffic per epoch = n_partitions delta rows, never the
-corpus; the corpus itself never leaves the executors.
+NAACL 2010) through :func:`.rounds.partition_results`: every epoch each
+partition runs local perceptron updates starting from the broadcast
+weights and returns ONE delta, and the driver mixes the deltas weighted
+by per-partition example counts, rebroadcasts, repeats. Traffic per
+epoch = n_partitions deltas, never the corpus; the corpus itself never
+leaves the executors.
 
 This closes the trained-checkpoint seam end-to-end IN-ENGINE: the
 trained bundle round-trips through ``TaggerWeights.to_npz/from_npz``
@@ -23,16 +25,14 @@ and is gated by held-out chunk F1 in tests.
 
 from __future__ import annotations
 
-from typing import Iterator
+import dataclasses
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
-                               StructType)
 
 from .crf import viterbi_decode
 from .encoder import TaggerWeights, hidden_features
+from .rounds import partition_results
 from .tagset import ENTITY_TYPES, iobes_tags
 
 def reservoir_weights(
@@ -72,16 +72,7 @@ def reservoir_weights(
     return w
 
 
-_DELTA_SCHEMA = StructType([
-    StructField("n_sentences", LongType()),
-    StructField("n_mistakes", LongType()),
-    StructField("d_proj_w", ArrayType(DoubleType())),
-    StructField("d_proj_b", ArrayType(DoubleType())),
-    StructField("d_trans", ArrayType(DoubleType())),
-])
-
-
-def _local_perceptron(pdf: pd.DataFrame, weights: TaggerWeights,
+def _local_perceptron(table, weights: TaggerWeights,
                       vocab: dict, chars: dict, unk: int,
                       tag_ids: dict[str, int], lr: float,
                       seed: int, unk_dropout: float = 0.0
@@ -112,13 +103,13 @@ def _local_perceptron(pdf: pd.DataFrame, weights: TaggerWeights,
     d_b = np.zeros_like(b)
     d_t = np.zeros_like(trans)
 
-    toks = pdf["tokens"].tolist()
-    golds = pdf["gold_tags"].tolist()
+    toks = table.column("tokens").to_pylist()
+    golds = table.column("gold_tags").to_pylist()
     rng = np.random.default_rng([seed, len(toks)])
     order = rng.permutation(len(toks))
     n_mistakes = 0
     for idx in order:
-        tokens, gold = list(toks[idx]), list(golds[idx])
+        tokens, gold = toks[idx], golds[idx]
         wi, ci, caps = featurize_sentence(tokens, vocab, chars, unk)
         if unk_dropout:
             wi = [unk if rng.random() < unk_dropout else i for i in wi]
@@ -171,9 +162,10 @@ def train_crf_head(
     """→ (trained TaggerWeights, per-epoch metrics rows).
 
     The encoder (word/char embeddings, char-CNN, BiLSTM) stays FROZEN;
-    proj_w/proj_b/transitions are learned. Per epoch: broadcast current
-    head → each partition runs a local perceptron pass → deltas are
-    mixed weighted by partition sentence counts → new head. Deterministic
+    proj_w/proj_b/transitions are learned. Per epoch, one
+    :func:`.rounds.partition_results` round: broadcast current head →
+    each partition runs a local perceptron pass → deltas are mixed
+    weighted by partition sentence counts → new head. Deterministic
     given (corpus, partitioning, seed).
 
     ``average=True`` returns the AVERAGED head — the mean of the mixed
@@ -184,7 +176,6 @@ def train_crf_head(
     gate trains with the default (un-averaged) head plus unk_dropout,
     which measured stronger on the OOV block.
     """
-    sc = sentences.sparkSession.sparkContext
     tags = iobes_tags(entity_types)
     tag_ids = {t: i for i, t in enumerate(tags)}
     unk = vocab.get("<UNK>", 0)
@@ -197,45 +188,25 @@ def train_crf_head(
     n_avg = 0
 
     for epoch in range(epochs):
-        bc = sc.broadcast({"w": cur, "vocab": vocab, "chars": char_vocab})
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            v = bc.value
-            lst = list(batches)
-            if not lst:  # empty partitions get an EMPTY iterator —
-                return   # pd.concat([]) would raise
-            pdf = pd.concat(lst, ignore_index=True)
-            if len(pdf) == 0:
-                return
-            n, m, d_w, d_b, d_t = _local_perceptron(
-                pdf, v["w"], v["vocab"], v["chars"], unk, tag_ids, lr,
+        def local(v, table):
+            return _local_perceptron(
+                table, v["w"], v["vocab"], v["chars"], unk, tag_ids, lr,
                 seed + epoch, unk_dropout)
-            yield pd.DataFrame({
-                "n_sentences": [n], "n_mistakes": [m],
-                "d_proj_w": [d_w.ravel()], "d_proj_b": [d_b.ravel()],
-                "d_trans": [d_t.ravel()],
-            })
 
-        rows = data.mapInPandas(run, _DELTA_SCHEMA).collect()
-        # the epoch's broadcast is consumed by the collect above — free
-        # it, or many-epoch runs accumulate stale head copies on the
-        # driver and every executor
-        bc.unpersist(blocking=False)
-        total = sum(r["n_sentences"] for r in rows) or 1
-        mistakes = sum(r["n_mistakes"] for r in rows)
+        rows = partition_results(
+            data, {"w": cur, "vocab": vocab, "chars": char_vocab}, local)
+        total = sum(r[0] for r in rows) or 1
+        mistakes = sum(r[1] for r in rows)
         mix_w = np.zeros_like(cur.proj_w, dtype=np.float64)
         mix_b = np.zeros_like(cur.proj_b, dtype=np.float64)
         mix_t = np.zeros_like(cur.transitions, dtype=np.float64)
-        for r in rows:
-            frac = r["n_sentences"] / total
-            mix_w += frac * np.asarray(r["d_proj_w"]).reshape(mix_w.shape)
-            mix_b += frac * np.asarray(r["d_proj_b"]).reshape(mix_b.shape)
-            mix_t += frac * np.asarray(r["d_trans"]).reshape(mix_t.shape)
-        new = TaggerWeights(
-            word_emb=cur.word_emb, char_emb=cur.char_emb,
-            char_mode=cur.char_mode, cnn_w=cur.cnn_w, cnn_b=cur.cnn_b,
-            char_lstm_fw=cur.char_lstm_fw, char_lstm_bw=cur.char_lstm_bw,
-            cap_emb=cur.cap_emb, lstm_fw=cur.lstm_fw, lstm_bw=cur.lstm_bw,
+        for n, _, d_w, d_b, d_t in rows:
+            frac = n / total
+            mix_w += frac * d_w
+            mix_b += frac * d_b
+            mix_t += frac * d_t
+        new = dataclasses.replace(
+            cur,
             proj_w=(cur.proj_w + mix_w).astype(np.float32),
             proj_b=(cur.proj_b + mix_b).astype(np.float32),
             transitions=(cur.transitions + mix_t).astype(np.float32),
@@ -252,11 +223,8 @@ def train_crf_head(
         if mistakes == 0:
             break
     if average and n_avg:
-        cur = TaggerWeights(
-            word_emb=cur.word_emb, char_emb=cur.char_emb,
-            char_mode=cur.char_mode, cnn_w=cur.cnn_w, cnn_b=cur.cnn_b,
-            char_lstm_fw=cur.char_lstm_fw, char_lstm_bw=cur.char_lstm_bw,
-            cap_emb=cur.cap_emb, lstm_fw=cur.lstm_fw, lstm_bw=cur.lstm_bw,
+        cur = dataclasses.replace(
+            cur,
             proj_w=(avg_w / n_avg).astype(np.float32),
             proj_b=(avg_b / n_avg).astype(np.float32),
             transitions=(avg_t / n_avg).astype(np.float32),

@@ -51,8 +51,7 @@ def build_vocab(
     # raw token instead of once per token instance (2.7M instances vs
     # ~1k distincts at sf1.0 — measured 4.3 s → 1.0 s). Counting commutes
     # with the normalization mapping, so (token, freq) is identical.
-    freqs = (df.select(F.explode(tokens_col).alias("token"))
-             .groupBy("token").agg(F.count(F.lit(1)).alias("freq")))
+    freqs = token_frequencies(df, tokens_col)
     norm = F.col("token")
     if lowercase:
         norm = F.lower(norm)
@@ -79,8 +78,7 @@ def char_vocab(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     # Σ|token| over distinct tokens (~10k rows); char counts are the
     # freq-weighted sums, identical by commutativity (3.5 s → 0.9 s).
     chars = (
-        df.select(F.explode(tokens_col).alias("token"))
-        .groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
+        token_frequencies(df, tokens_col)
         .select(F.explode(F.split("token", "")).alias("ch"), "freq")
         .filter(F.col("ch") != "")
         .groupBy("ch").agg(F.sum("freq").alias("freq"))

@@ -1,4 +1,5 @@
-"""O1 length batching, C5 tag-run merge, M9 argmax decode."""
+"""O1 length batching, C5 tag-run merge, M9 argmax decode, and the
+per-partition round every distributed trainer runs."""
 
 import numpy as np
 import pytest
@@ -353,3 +354,74 @@ def test_ngrams_adversarial_match_reference(spark, n):
         assert ids["short"] not in got_h and len(got_sh[ids["short"]]) == 1
     assert len(got_h[ids["repeated"]]) < len(
         grams(texts["repeated"].lower().split()))
+
+
+def test_partition_results_order_batches_and_empty_partitions(spark):
+    """One result per non-empty partition, in partition order; the
+    table's chunks are the partition's Arrow batches; a partition or a
+    DataFrame with no rows never reaches ``local``."""
+    from ner_pytorch_spark.operators.rounds import partition_results
+
+    def ids(payload, table):
+        return payload, table.column("id").to_pylist()
+
+    assert partition_results(spark.range(0, 12, 1, 3), "p", ids) == [
+        ("p", [0, 1, 2, 3]), ("p", [4, 5, 6, 7]), ("p", [8, 9, 10, 11])]
+    # 6 partitions, 3 rows: the 3 empty partitions contribute nothing
+    assert partition_results(spark.range(0, 3, 1, 6), None, ids) == [
+        (None, [0]), (None, [1]), (None, [2])]
+
+    def never(payload, table):
+        raise AssertionError("local ran on an empty partition")
+
+    assert partition_results(spark.range(0), None, never) == []
+    assert partition_results(
+        spark.range(0, 10, 1, 2).filter("id > 100"), None, never) == []
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        sizes = partition_results(
+            spark.range(0, 20, 1, 2), None,
+            lambda _, t: [rb.num_rows for rb in t.to_batches()])
+    finally:
+        spark.conf.set(key, old)
+    assert sizes == [[3, 3, 3, 1], [3, 3, 3, 1]]
+
+
+def test_partition_results_unpersists_broadcast(spark, monkeypatch):
+    """Each round broadcasts its payload once and unpersists it when the
+    round ends, also when ``local`` raises."""
+    from pyspark import SparkContext
+
+    from ner_pytorch_spark.operators.rounds import partition_results
+
+    calls = []
+    broadcast = SparkContext.broadcast
+
+    def spy(self, value):
+        bc = broadcast(self, value)
+        unpersist = bc.unpersist
+
+        def recorded(blocking=False):
+            calls.append(("unpersist", value))
+            unpersist(blocking)
+
+        bc.unpersist = recorded
+        calls.append(("broadcast", value))
+        return bc
+
+    monkeypatch.setattr(SparkContext, "broadcast", spy)
+    df = spark.range(0, 8, 1, 2)
+    assert partition_results(df, 7, lambda p, t: p * t.num_rows) == [28, 28]
+    assert calls == [("broadcast", 7), ("unpersist", 7)]
+
+    def boom(payload, table):
+        raise ValueError("boom")
+
+    calls.clear()
+    with pytest.raises(Exception) as err:
+        partition_results(df, 9, boom)
+    assert "boom" in str(err.value)
+    assert calls == [("broadcast", 9), ("unpersist", 9)]

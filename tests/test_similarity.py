@@ -131,14 +131,14 @@ def test_ivf_kmeans_codebook_balances_cells(spark):
     assert r_kmeans >= 0.9, r_kmeans
 
 
-def test_kmeans_distributed_matches_driver_codebook(spark):
-    """The delta-row distributed Lloyd loop (driver holds only the
-    [n_cells, d] codebook; per-iteration traffic = one partial-sums row
-    per partition) reproduces the driver-side codebook on a
-    sample-sized input at n_cells=64 — same init, same assignments,
-    same means up to float summation order."""
-    from ner_pytorch_spark.operators.similarity import (
-        ivf_topk, kmeans_codebook, kmeans_codebook_distributed)
+def test_kmeans_codebook_matches_numpy_lloyd(spark):
+    """The distributed Lloyd loop (driver holds only the [n_cells, d]
+    codebook; per iteration one partial-sums result per partition)
+    equals a driver-side numpy Lloyd loop from the same hash-ordered
+    sample and seeded init, at n_cells=64 over 8 partitions — same
+    assignments, same means up to float summation order."""
+    from ner_pytorch_spark.operators.similarity import (_codebook_sample,
+                                                        kmeans_codebook)
 
     rng = np.random.default_rng(23)
     centers = rng.standard_normal((64, 8)) * 4     # well-separated
@@ -149,15 +149,35 @@ def test_kmeans_distributed_matches_driver_codebook(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>").repartition(8)
 
-    a = kmeans_codebook(df, n_cells=64, sample=4096, seed=3)
-    b = kmeans_codebook_distributed(df, n_cells=64, sample=4096, seed=3)
-    assert b.shape == (64, 8)
-    np.testing.assert_allclose(a, b, rtol=1e-9, atol=1e-12)
+    x = _codebook_sample(df, "vec_id", "embedding", 4096)
+    assert len(x) == 512                          # the whole input
+    want = x[np.random.default_rng(3).permutation(len(x))[:64]].copy()
+    for _ in range(10):
+        assign = (x @ want.T).argmax(axis=1)
+        for ci in range(64):
+            m = assign == ci
+            if m.any():
+                v = x[m].sum(axis=0) / m.sum()
+                if np.linalg.norm(v) > 1e-12:
+                    want[ci] = v / np.linalg.norm(v)
 
-    # and the IVF seam accepts it by name
-    res = ivf_topk(df, k=2, n_cells=8, n_probe=8,
-                   codebook="kmeans-distributed")
-    assert res.count() == 512 * 2
+    got = kmeans_codebook(df, n_cells=64, sample=4096, seed=3)
+    assert got.shape == (64, 8)
+    np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-12)
+
+
+def test_ivf_codebook_rejects_unknown_names(spark):
+    """Only "minid" and "kmeans" name a codebook; a typo raises instead
+    of silently building the min-id index."""
+    from ner_pytorch_spark.operators.similarity import ivf_topk
+
+    df = spark.createDataFrame([(i, [float(i), 1.0]) for i in range(8)],
+                               "vec_id long, embedding array<float>")
+    for bad in ("kmeans_distributed", "kmeans-distributed", "KMeans", ""):
+        with pytest.raises(ValueError, match="minid"):
+            ivf_topk(df, k=2, n_cells=2, codebook=bad)
+    assert ivf_topk(df, k=2, n_cells=2, n_probe=2,
+                    codebook="kmeans").count() == 8 * 2
 
 
 def test_cosine_self_excluded(emb_df):
