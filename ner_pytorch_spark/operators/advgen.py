@@ -33,7 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
                                StringType, StructField, StructType)
 
 from .linking import candidate_links
@@ -244,10 +244,9 @@ def crf_nll_scores(
     tags_col: str = "adv_tags",
 ) -> DataFrame:
     """Model loss per variant: CRF NLL = logZ − gold-path score under
-    broadcast numpy weights (crf.py:47-65 semantics, inference-side)."""
-    from .crf import forward_score, path_score
-    from .encoder import neural_emissions
-    from .tagger import featurize_sentence
+    broadcast numpy weights (crf.py:47-65 semantics, inference-side),
+    one :func:`.backprop.crf_nll_rows` forward per Arrow batch."""
+    from .backprop import crf_nll_rows
     from .tagset import iobes_tags
 
     spark = adv.sparkSession
@@ -260,29 +259,19 @@ def crf_nll_scores(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v = bc.value
-        w = v["w"]
         for pdf in batches:
-            tok_lists = [list(t) for t in pdf[tokens_col]]
-            tag_lists = [list(t) for t in pdf[tags_col]]
-            if not tok_lists:
+            if pdf.empty:
                 continue
-            feats = [featurize_sentence(t, v["vocab"], v["chars"], v["unk"])
-                     for t in tok_lists]
-            em, lengths = neural_emissions(
-                w, [f[0] for f in feats], [f[1] for f in feats],
-                [f[2] for f in feats])
-            L = em.shape[1]
-            gold = np.zeros((len(tok_lists), L), dtype=np.int64)
-            for b, tl in enumerate(tag_lists):
-                gold[b, :len(tl)] = [v["tag_ids"].get(t, 0) for t in tl]
-            logz = forward_score(em, lengths, w.transitions)
-            gold_s = path_score(em, gold, lengths, w.transitions)
+            loss = crf_nll_rows(
+                v["w"], [list(t) for t in pdf[tokens_col]],
+                [list(t) for t in pdf[tags_col]], v["vocab"], v["chars"],
+                v["unk"], v["tag_ids"])
             out = pdf[["url", "sent_id"]].copy()
             if "variant_id" in pdf.columns:
                 out["variant_id"] = pdf["variant_id"]
             else:
                 out["variant_id"] = 0
-            out["loss"] = (logz - gold_s).astype(float)
+            out["loss"] = loss.astype(float)
             yield out
 
     schema = StructType([

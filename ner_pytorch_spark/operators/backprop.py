@@ -9,23 +9,29 @@ Blocks (gradients for every trainable array in TaggerWeights):
 * CRF NLL: ∂/∂emissions = posterior marginals − gold one-hots, and
   ∂/∂transitions = expected − gold transition counts, via the
   forward-backward algorithm in log space (model.py neg_log_likelihood
-  → crf.py forward/score semantics);
+  → crf.py forward/score semantics; the gold-path score is
+  :func:`.crf.path_score`);
 * emission projection (M6): plain dense GEMM grads;
 * word BiLSTM (M5): BPTT through the masked LSTM recurrences — the
   train-path forward keeps per-step caches and mirrors the inference
   kernel's where(alive) padding semantics exactly (parity-tested);
-* char-CNN (M2): max-pool argmax routing + the K-shifted-GEMM conv
-  transpose; char/word/cap embeddings: scatter-add sparse grads.
+* char-CNN (M2): the inference conv body (:func:`.encoder._char_conv`)
+  plus the max-pool argmax route, and the K-shifted-GEMM conv
+  transpose; char/word/cap embeddings: scatter-add sparse grads at the
+  indices the shared input builder (:func:`.encoder._encoder_input`)
+  scattered them to.
 
 Everything is checked against central finite differences on tiny dims
 (tests/test_backprop.py) — the strongest correctness statement a
-hand-written autodiff can make.
+hand-written autodiff can make. Weights are copied, mixed and cast
+through :meth:`.encoder.TaggerWeights.arrays` / ``with_arrays``.
 
 Distribution reuses the trainer topology of operators/train.py:
 per-partition local SGD epochs + example-weighted iterative parameter
 mixing (McDonald et al. 2010), one :func:`.rounds.partition_results`
 round per epoch — each partition returns ONE weight delta; the corpus
-never moves.
+never moves. :func:`crf_nll_rows` is the one forward-only loss scorer:
+the dev-NLL monitor and :func:`.advgen.crf_nll_scores` both call it.
 """
 
 from __future__ import annotations
@@ -33,13 +39,11 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
-from .encoder import TaggerWeights
+from .crf import forward_score, path_score
+from .encoder import (TaggerWeights, _char_conv, _encoder_input, _sigmoid,
+                      neural_emissions)
 from .rounds import partition_results
 from .tagset import ENTITY_TYPES, iobes_tags
-
-
-def _sigmoid(x):
-    return 1.0 / (1.0 + np.exp(-x))
 
 
 # ------------------------------------------------------------------ LSTM
@@ -134,41 +138,16 @@ def char_cnn_cache(char_ids, char_emb, w, b, pert=None):
     matrix AFTER lookup — the adversarial perturbation point
     (/root/reference/model.py:118-120 adds the scaled normalized
     gradient to ``chars_embeds`` before the conv)."""
-    out_ch, K, c_dim = w.shape
-    n = len(char_ids)
-    reps = np.zeros((n, out_ch))
-    if n == 0:
+    reps = np.zeros((len(char_ids), w.shape[0]))
+    out = _char_conv(char_ids, char_emb, w, b, pert)
+    if out is None:
         return reps, None
-    pad = K - 1
-    lens = np.array([len(ids) for ids in char_ids], dtype=np.int64)
-    maxlen = int(lens.max()) if n else 0
-    if maxlen == 0:
-        return reps, None
-    C = char_emb.shape[0]
-    emb_aug = np.vstack([char_emb, np.zeros((1, c_dim))])
-    ids_mat = np.full((n, maxlen + 2 * pad), C, dtype=np.int64)
-    for idx, ids in enumerate(char_ids):
-        if ids:
-            ids_mat[idx, pad:pad + len(ids)] = ids
-    e = emb_aug[ids_mat]                               # [n, T0, c_dim]
-    if pert is not None:
-        e = e + pert
-    T0 = e.shape[1]
-    T1 = maxlen + pad
-    conv = np.broadcast_to(b, (n, T1, out_ch)).copy()
-    flat = e.reshape(n * T0, c_dim)
-    for k in range(K):
-        p_k = (flat @ w[:, k, :].T).reshape(n, T0, out_ch)
-        conv += p_k[:, k:k + T1]
-    t_idx = np.arange(T1)[None, :]
-    valid = t_idx < (lens + pad)[:, None]
-    conv = np.where(valid[:, :, None], conv, -np.inf)
-    amax = conv.argmax(axis=1)                         # [n, out_ch]
-    pooled = conv.max(axis=1)
+    conv, lens, ids_mat, e = out
     nonempty = lens > 0
-    reps[nonempty] = pooled[nonempty]
-    cache = {"ids_mat": ids_mat, "e": e, "amax": amax, "nonempty": nonempty,
-             "w": w, "C": C, "T1": T1}
+    reps[nonempty] = conv.max(axis=1)[nonempty]
+    cache = {"ids_mat": ids_mat, "e": e, "amax": conv.argmax(axis=1),
+             "nonempty": nonempty, "w": w, "C": char_emb.shape[0],
+             "T1": conv.shape[1]}
     return reps, cache
 
 
@@ -223,6 +202,8 @@ def crf_nll_and_grads(emissions, tags, lengths, transitions):
         m = a.max(axis=axis, keepdims=True)
         return np.squeeze(m, axis) + np.log(np.exp(a - m).sum(axis=axis))
 
+    gold = path_score(emissions, tags, lengths, transitions)
+
     for bi in range(B):                 # small training batches; clarity
         n = int(lengths[bi])
         em = emissions[bi, :n]
@@ -236,12 +217,7 @@ def crf_nll_and_grads(emissions, tags, lengths, transitions):
         for t in range(n - 2, -1, -1):
             beta[t] = lse(trans + (em[t + 1] + beta[t + 1])[None, :], axis=1)
         logZ = lse(alpha[n - 1] + transitions[:T, stop], axis=0)
-        # gold score
-        gold = transitions[start, seq[0]] + em[0, seq[0]]
-        for t in range(1, n):
-            gold += transitions[seq[t - 1], seq[t]] + em[t, seq[t]]
-        gold += transitions[seq[n - 1], stop]
-        nll += logZ - gold
+        nll += logZ - gold[bi]
         # unary marginals
         marg = np.exp(alpha + beta - logZ)              # [n, T]
         d_em[bi, :n] = marg
@@ -260,12 +236,6 @@ def crf_nll_and_grads(emissions, tags, lengths, transitions):
 
 
 # -------------------------------------------------- full loss + gradients
-
-_GRAD_KEYS = ("word_emb", "char_emb", "cnn_w", "cnn_b", "cap_emb",
-              "lstm_fw_0", "lstm_fw_1", "lstm_fw_2",
-              "lstm_bw_0", "lstm_bw_1", "lstm_bw_2",
-              "proj_w", "proj_b", "transitions")
-
 
 def loss_and_grads(weights: TaggerWeights, word_ids, char_ids, cap_ids,
                    tag_ids, dropout: float = 0.0, rng=None,
@@ -286,30 +256,15 @@ def loss_and_grads(weights: TaggerWeights, word_ids, char_ids, cap_ids,
     array the adversarial direction is built from (zeros-shaped ``None``
     when the batch has no chars).
     """
-    B = len(word_ids)
-    lengths = np.array([len(s) for s in word_ids], dtype=np.int64)
-    L = max(1, int(lengths.max()) if B else 1)
-    w_dim = weights.word_emb.shape[1]
     flat_chars = [cw for sent in char_ids for cw in sent]
     char_rep_flat, cnn_cache = char_cnn_cache(
         flat_chars, weights.char_emb, weights.cnn_w, weights.cnn_b,
         pert=char_pert)
+    x, lengths, (rows, cols, flat_words, flat_caps) = _encoder_input(
+        weights, word_ids, char_rep_flat, cap_ids, np.float64)
+    B, L, _ = x.shape
+    w_dim = weights.word_emb.shape[1]
     c_dim = char_rep_flat.shape[1]
-    cap_dim = weights.cap_emb.shape[1] if weights.cap_emb is not None else 0
-    D = w_dim + c_dim + cap_dim
-    x = np.zeros((B, L, D))
-    total = int(lengths.sum())
-    rows = np.repeat(np.arange(B), lengths)
-    cols = np.concatenate([np.arange(n) for n in lengths]) if B else \
-        np.empty(0, dtype=np.int64)
-    flat_words = np.fromiter((i for s in word_ids for i in s),
-                             dtype=np.int64, count=total)
-    x[rows, cols, :w_dim] = weights.word_emb[flat_words]
-    x[rows, cols, w_dim:w_dim + c_dim] = char_rep_flat
-    if cap_dim:
-        flat_caps = np.fromiter((i for s in cap_ids for i in s),
-                                dtype=np.int64, count=total)
-        x[rows, cols, w_dim + c_dim:] = weights.cap_emb[flat_caps]
 
     drop_mask = None
     if dropout and rng is not None:
@@ -358,7 +313,7 @@ def loss_and_grads(weights: TaggerWeights, word_ids, char_ids, cap_ids,
         d_cnn_w = np.zeros_like(weights.cnn_w, dtype=np.float64)
         d_cnn_b = np.zeros_like(weights.cnn_b, dtype=np.float64)
     d_cap = None
-    if cap_dim:
+    if flat_caps is not None:
         d_cap = np.zeros_like(weights.cap_emb, dtype=np.float64)
         np.add.at(d_cap, flat_caps, dx[rows, cols, w_dim + c_dim:])
 
@@ -432,45 +387,6 @@ def adversarial_loss_and_grads(weights: TaggerWeights, word_ids, char_ids,
 
 # --------------------------------------------------------------- training
 
-def _to_f64(w: TaggerWeights) -> TaggerWeights:
-    def c(a):
-        return None if a is None else np.asarray(a, dtype=np.float64)
-
-    def ct(t):
-        return None if t is None else tuple(c(a) for a in t)
-
-    return TaggerWeights(
-        word_emb=c(w.word_emb), char_emb=c(w.char_emb), char_mode=w.char_mode,
-        cnn_w=c(w.cnn_w), cnn_b=c(w.cnn_b),
-        char_lstm_fw=ct(w.char_lstm_fw), char_lstm_bw=ct(w.char_lstm_bw),
-        cap_emb=c(w.cap_emb), lstm_fw=ct(w.lstm_fw), lstm_bw=ct(w.lstm_bw),
-        proj_w=c(w.proj_w), proj_b=c(w.proj_b),
-        transitions=c(w.transitions), meta=dict(w.meta))
-
-
-def _get_arrays(w: TaggerWeights) -> dict[str, np.ndarray]:
-    out = {"word_emb": w.word_emb, "char_emb": w.char_emb,
-           "cnn_w": w.cnn_w, "cnn_b": w.cnn_b, "cap_emb": w.cap_emb,
-           "proj_w": w.proj_w, "proj_b": w.proj_b,
-           "transitions": w.transitions}
-    for i in range(3):
-        out[f"lstm_fw_{i}"] = w.lstm_fw[i]
-        out[f"lstm_bw_{i}"] = w.lstm_bw[i]
-    return out
-
-
-def _set_arrays(w: TaggerWeights, arrays: dict[str, np.ndarray]) -> TaggerWeights:
-    return TaggerWeights(
-        word_emb=arrays["word_emb"], char_emb=arrays["char_emb"],
-        char_mode=w.char_mode, cnn_w=arrays["cnn_w"], cnn_b=arrays["cnn_b"],
-        char_lstm_fw=w.char_lstm_fw, char_lstm_bw=w.char_lstm_bw,
-        cap_emb=arrays["cap_emb"],
-        lstm_fw=tuple(arrays[f"lstm_fw_{i}"] for i in range(3)),
-        lstm_bw=tuple(arrays[f"lstm_bw_{i}"] for i in range(3)),
-        proj_w=arrays["proj_w"], proj_b=arrays["proj_b"],
-        transitions=arrays["transitions"], meta=dict(w.meta))
-
-
 def sgd_partition_pass(table, weights: TaggerWeights, vocab, chars, unk,
                        tag_ids, lr, clip, batch_size, dropout, seed,
                        adv_alpha: float = 0.0, adv_ratio: float = 0.0,
@@ -495,9 +411,8 @@ def sgd_partition_pass(table, weights: TaggerWeights, vocab, chars, unk,
                     table.column("gold_tags").to_pylist()))
     order = rng.permutation(len(rows))
     vel: dict[str, np.ndarray] = {}
-    arrays = {k: (None if v is None else v.copy())
-              for k, v in _get_arrays(weights).items()}
-    cur = _set_arrays(weights, arrays)
+    arrays = {k: v.copy() for k, v in weights.arrays().items()}
+    cur = weights.with_arrays(arrays)
     nll_total = 0.0
     for s in range(0, len(order), batch_size):
         chunk = [rows[i] for i in order[s:s + batch_size]]
@@ -530,35 +445,41 @@ def sgd_partition_pass(table, weights: TaggerWeights, vocab, chars, unk,
     return len(rows), nll_total, arrays
 
 
+def crf_nll_rows(weights: TaggerWeights, tok_lists, tag_lists, vocab,
+                 char_vocab, unk, tag_ids) -> np.ndarray:
+    """Per-sentence CRF NLL ``logZ − gold-path score`` under the
+    inference forward (:func:`.encoder.neural_emissions`, float32
+    emissions), one batched forward for all of ``tok_lists``. Tags
+    missing from ``tag_ids`` score as tag 0. The loss both the dev-NLL
+    monitor and :func:`.advgen.crf_nll_scores` report."""
+    from .tagger import featurize_sentence
+
+    feats = [featurize_sentence(t, vocab, char_vocab, unk) for t in tok_lists]
+    em, lengths = neural_emissions(
+        weights, [f[0] for f in feats], [f[1] for f in feats],
+        [f[2] for f in feats])
+    gold = np.zeros(em.shape[:2], dtype=np.int64)
+    for b, tl in enumerate(tag_lists):
+        gold[b, :len(tl)] = [tag_ids.get(t, 0) for t in tl]
+    return (forward_score(em, lengths, weights.transitions)
+            - path_score(em, gold, lengths, weights.transitions))
+
+
 def _mean_dev_nll(dev: DataFrame, weights: TaggerWeights, vocab, char_vocab,
                   unk, tag_ids) -> float:
     """Held-out mean CRF NLL, forward-only: one (nll_sum, n) pair per
     partition from one :func:`.rounds.partition_results` round, one
-    forward per Arrow batch (no gradients, no weight traffic back) — the
-    early-stop monitor (pytorchtools.py val_loss)."""
-    from .crf import forward_score, path_score
-    from .encoder import neural_emissions
-    from .tagger import featurize_sentence
-
+    :func:`crf_nll_rows` forward per Arrow batch (no gradients, no
+    weight traffic back) — the early-stop monitor (pytorchtools.py
+    val_loss)."""
     def local(v, table):
-        w = v["w"]
         total, n = 0.0, 0
         for rb in table.to_batches():
-            tok_lists = rb.column("tokens").to_pylist()
-            tag_lists = rb.column("gold_tags").to_pylist()
-            feats = [featurize_sentence(t, v["vocab"], v["chars"], unk)
-                     for t in tok_lists]
-            em, lengths = neural_emissions(
-                w, [f[0] for f in feats], [f[1] for f in feats],
-                [f[2] for f in feats])
-            L = em.shape[1]
-            gold = np.zeros((len(tok_lists), L), dtype=np.int64)
-            for b, tl in enumerate(tag_lists):
-                gold[b, :len(tl)] = [tag_ids.get(t, 0) for t in tl]
-            logz = forward_score(em, lengths, w.transitions)
-            gold_s = path_score(em, gold, lengths, w.transitions)
-            total += float((logz - gold_s).sum())
-            n += len(tok_lists)
+            total += float(crf_nll_rows(
+                v["w"], rb.column("tokens").to_pylist(),
+                rb.column("gold_tags").to_pylist(), v["vocab"], v["chars"],
+                unk, tag_ids).sum())
+            n += rb.num_rows
         return total, n
 
     rows = partition_results(
@@ -625,7 +546,7 @@ def train_bilstm_crf(
     tags = iobes_tags(entity_types)
     tag_ids = {t: i for i, t in enumerate(tags)}
     unk = vocab.get("<UNK>", 0)
-    cur = _to_f64(weights)
+    cur = weights.astype(np.float64)
     metrics: list[dict] = []
     data = sentences.select("tokens", "gold_tags")
 
@@ -641,21 +562,19 @@ def train_bilstm_crf(
                 table, v["w"], v["vocab"], v["chars"], unk, tag_ids,
                 lr_e, clip, batch_size, dropout, seed + epoch,
                 adv_alpha=adv_alpha, adv_ratio=ratio_e, momentum=momentum)
-            base = _get_arrays(v["w"])
-            return n, nll, {k: arrays[k] - base[k] for k in _GRAD_KEYS
-                            if base[k] is not None}
+            return n, nll, {k: arrays[k] - a
+                            for k, a in v["w"].arrays().items()}
 
         rows = partition_results(
             data, {"w": cur, "vocab": vocab, "chars": char_vocab}, local)
         total = sum(r[0] for r in rows) or 1
         nll_mean = sum(r[1] for r in rows) / total
-        arrays = {k: (None if v is None else v.copy())
-                  for k, v in _get_arrays(cur).items()}
+        arrays = {k: v.copy() for k, v in cur.arrays().items()}
         for n, _, deltas in rows:
             frac = n / total
             for k, d in deltas.items():
                 arrays[k] += frac * d
-        cur = _set_arrays(cur, arrays)
+        cur = cur.with_arrays(arrays)
         cur.meta.update({"trained": True, "epochs": epoch + 1})
         row = {"epoch": epoch, "n_sentences": int(total),
                "nll_mean": round(float(nll_mean), 6),
@@ -666,8 +585,7 @@ def train_bilstm_crf(
             row["dev_nll"] = round(dev_nll, 6)
             if best is None or dev_nll < best[0]:
                 best = (dev_nll, epoch,
-                        {k: (None if v is None else v.copy())
-                         for k, v in _get_arrays(cur).items()})
+                        {k: v.copy() for k, v in cur.arrays().items()})
                 stale = 0
             else:
                 stale += 1
@@ -675,19 +593,7 @@ def train_bilstm_crf(
         if patience is not None and stale >= patience:
             break
     if dev is not None and patience is not None and best is not None:
-        cur = _set_arrays(cur, best[2])
+        cur = cur.with_arrays(best[2])
         cur.meta.update({"trained": True, "best_epoch": best[1]})
 
-    def f32(a):
-        return None if a is None else a.astype(np.float32)
-
-    out = TaggerWeights(
-        word_emb=f32(cur.word_emb), char_emb=f32(cur.char_emb),
-        char_mode=cur.char_mode, cnn_w=f32(cur.cnn_w), cnn_b=f32(cur.cnn_b),
-        char_lstm_fw=weights.char_lstm_fw, char_lstm_bw=weights.char_lstm_bw,
-        cap_emb=f32(cur.cap_emb),
-        lstm_fw=tuple(f32(a) for a in cur.lstm_fw),
-        lstm_bw=tuple(f32(a) for a in cur.lstm_bw),
-        proj_w=f32(cur.proj_w), proj_b=f32(cur.proj_b),
-        transitions=f32(cur.transitions), meta=dict(cur.meta))
-    return out, metrics
+    return cur.astype(np.float32), metrics

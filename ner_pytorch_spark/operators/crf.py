@@ -13,7 +13,8 @@ IMPOSSIBLE at the boundaries exactly like the reference's augmented
 matrix).
 
 Correctness gate: differential test vs brute-force path enumeration on
-≤6 tokens × ≤5 tags with random weights (tests/test_crf.py).
+≤6 tokens × ≤5 tags with random weights (tests/test_crf.py, against
+the exhaustive decoder in tests/crf_oracle.py).
 """
 
 from __future__ import annotations
@@ -120,25 +121,3 @@ def path_score(
         out[b] = s
     return out
 
-
-def brute_force_decode(
-    emissions: np.ndarray, lengths: np.ndarray, transitions: np.ndarray
-) -> list[list[int]]:
-    """Exponential-time oracle for tests: enumerate every path."""
-    import itertools
-
-    B, L, T = emissions.shape
-    start, stop = T, T + 1
-    paths = []
-    for b in range(B):
-        n = int(lengths[b])
-        best, best_s = None, -np.inf
-        for path in itertools.product(range(T), repeat=n):
-            s = transitions[start, path[0]] + emissions[b, 0, path[0]]
-            for t in range(1, n):
-                s += transitions[path[t - 1], path[t]] + emissions[b, t, path[t]]
-            s += transitions[path[n - 1], stop]
-            if s > best_s:
-                best, best_s = list(path), s
-        paths.append(best)
-    return paths

@@ -10,13 +10,22 @@ Operators covered (SURVEY §2.7): M1 char-embedding lookup, M2 char-CNN
 M5 word BiLSTM, M6 emission projection. Dropout (model.py:77) is a
 train-time op and is identity at inference.
 
+The pieces the backprop trainer (:mod:`.backprop`) shares with this
+forward live here once: the char-CNN body :func:`_char_conv` (the
+trainer adds the max-pool argmax route on top), the M4 input builder
+:func:`_encoder_input` (float32 here, float64 in training) and the flat
+weight-array map :meth:`TaggerWeights.arrays` / :meth:`~TaggerWeights.
+with_arrays` that checkpoints, casts and parameter mixing go through.
+The word-LSTM kernels stay two: this one permutes the gates, hoists the
+input GEMM and updates in place; the training one keeps per-step caches.
+
 LSTM gate math follows the standard formulation (PyTorch gate order
 i,f,g,o) — validated against fixed-weight goldens in tests/test_encoder.py.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import numpy as np
 
@@ -81,6 +90,49 @@ def lstm_forward(
     return out
 
 
+def _char_conv(char_ids, char_emb, w, b, pert=None):
+    """Embed → conv(kernel K, pad K-1) over every word's chars, the
+    shared body of :func:`char_cnn` and the training forward.
+
+    ``pert`` (optional, [n, T0, c_dim]) is added to the embedded chars
+    — the adversarial perturbation point. Returns ``(conv [n, T1,
+    out_ch] with windows past each word at -inf, lens, ids_mat, e)``,
+    or None when no word has a char.
+    """
+    out_ch, K, c_dim = w.shape
+    n = len(char_ids)
+    pad = K - 1
+    lens = np.array([len(ids) for ids in char_ids], dtype=np.int64)
+    maxlen = int(lens.max()) if n else 0
+    if maxlen == 0:
+        return None
+    # vectorized across ALL words: pad char ids into one [n, maxlen+2*pad]
+    # matrix (padding rows embed to zero via a sentinel zero-vector row)
+    C = char_emb.shape[0]
+    emb_aug = np.vstack([char_emb, np.zeros((1, c_dim), dtype=char_emb.dtype)])
+    ids_mat = np.full((n, maxlen + 2 * pad), C, dtype=np.int64)
+    for idx, ids in enumerate(char_ids):
+        if ids:
+            ids_mat[idx, pad:pad + len(ids)] = ids
+    e = emb_aug[ids_mat]                                   # [n, T0, c_dim]
+    if pert is not None:
+        e = e + pert
+    T0 = e.shape[1]
+    T1 = maxlen + pad                                      # number of windows
+    # conv as K shifted GEMMs on the contiguous embedding block — avoids
+    # materializing the [n, T1, K*c_dim] sliding-window copy (measured
+    # ~1.3× on the char stage): conv[:, t] = Σ_k e[:, t+k] @ w[:, k].T
+    flat = e.reshape(n * T0, c_dim)
+    conv = np.broadcast_to(b, (n, T1, out_ch)).copy()
+    for k in range(K):
+        p_k = (flat @ w[:, k, :].T).reshape(n, T0, out_ch)
+        conv += p_k[:, k:k + T1]
+    # valid windows for word of length m: first m + pad positions
+    t_idx = np.arange(T1)[None, :]
+    valid = t_idx < (lens + pad)[:, None]                  # [n, T1]
+    return np.where(valid[:, :, None], conv, -np.inf), lens, ids_mat, e
+
+
 def char_cnn(
     char_ids: list[list[int]],  # per word: char id sequence (may be empty)
     char_emb: np.ndarray,       # [C, c_dim]
@@ -95,42 +147,12 @@ def char_cnn(
     the explicit length-0 guard called out in SURVEY §7.
     Returns [n_words, out_ch].
     """
-    out_ch, K, c_dim = w.shape
-    n = len(char_ids)
-    reps = np.zeros((n, out_ch), dtype=char_emb.dtype)
-    if n == 0:
-        return reps
-    pad = K - 1
-    lens = np.array([len(ids) for ids in char_ids], dtype=np.int64)
-    maxlen = int(lens.max()) if n else 0
-    if maxlen == 0:
-        return reps
-    # vectorized across ALL words: pad char ids into one [n, maxlen+2*pad]
-    # matrix (padding rows embed to zero via a sentinel zero-vector row)
-    C = char_emb.shape[0]
-    emb_aug = np.vstack([char_emb, np.zeros((1, c_dim), dtype=char_emb.dtype)])
-    ids_mat = np.full((n, maxlen + 2 * pad), C, dtype=np.int64)
-    for idx, ids in enumerate(char_ids):
-        if ids:
-            ids_mat[idx, pad:pad + len(ids)] = ids
-    e = emb_aug[ids_mat]                                   # [n, T0, c_dim]
-    T0 = e.shape[1]
-    T1 = maxlen + pad                                      # number of windows
-    # conv as K shifted GEMMs on the contiguous embedding block — avoids
-    # materializing the [n, T1, K*c_dim] sliding-window copy (measured
-    # ~1.3× on the char stage): conv[:, t] = Σ_k e[:, t+k] @ w[:, k].T
-    flat = e.reshape(n * T0, c_dim)
-    conv = np.broadcast_to(b, (n, T1, out_ch)).copy()
-    for k in range(K):
-        p_k = (flat @ w[:, k, :].T).reshape(n, T0, out_ch)
-        conv += p_k[:, k:k + T1]
-    # valid windows for word of length m: first m + pad positions
-    t_idx = np.arange(T1)[None, :]
-    valid = t_idx < (lens + pad)[:, None]                  # [n, T1]
-    conv = np.where(valid[:, :, None], conv, -np.inf)
-    pooled = conv.max(axis=1)                              # [n, out_ch]
-    nonempty = lens > 0
-    reps[nonempty] = pooled[nonempty]
+    reps = np.zeros((len(char_ids), w.shape[0]), dtype=char_emb.dtype)
+    out = _char_conv(char_ids, char_emb, w, b)
+    if out is not None:
+        conv, lens = out[:2]
+        nonempty = lens > 0
+        reps[nonempty] = conv.max(axis=1)[nonempty]
     return reps
 
 
@@ -162,6 +184,24 @@ def char_bilstm(
     return reps
 
 
+# every weight array of a TaggerWeights, under the names to_npz stores
+# them by: plain arrays, then the (w_ih, w_hh, b) LSTM triples as
+# ``<name>_0`` … ``<name>_2``
+_ARRAY_FIELDS = ("word_emb", "char_emb", "cnn_w", "cnn_b", "cap_emb",
+                 "proj_w", "proj_b", "transitions")
+_TRIPLE_FIELDS = ("char_lstm_fw", "char_lstm_bw", "lstm_fw", "lstm_bw")
+
+
+def _fields_from_arrays(flat) -> dict:
+    """Inverse of :meth:`TaggerWeights.arrays`: dataclass field values
+    from a flat name → array mapping (absent names → None)."""
+    out = {k: flat.get(k) for k in _ARRAY_FIELDS}
+    for name in _TRIPLE_FIELDS:
+        out[name] = (tuple(flat[f"{name}_{i}"] for i in range(3))
+                     if f"{name}_0" in flat else None)
+    return out
+
+
 @dataclass
 class TaggerWeights:
     """Broadcastable weight bundle for the full inference forward."""
@@ -189,6 +229,29 @@ class TaggerWeights:
     @property
     def num_tags(self) -> int:
         return self.transitions.shape[0] - 2
+
+    def arrays(self) -> dict[str, np.ndarray]:
+        """Every weight array by its npz name (``lstm_fw_0`` …), absent
+        (None) ones left out. The values are the live arrays, not copies:
+        writing into one writes into these weights."""
+        flat = {k: getattr(self, k) for k in _ARRAY_FIELDS
+                if getattr(self, k) is not None}
+        for name in _TRIPLE_FIELDS:
+            for i, a in enumerate(getattr(self, name) or ()):
+                flat[f"{name}_{i}"] = a
+        return flat
+
+    def with_arrays(self, flat: dict[str, np.ndarray]) -> "TaggerWeights":
+        """A copy holding the arrays of ``flat`` (named as by
+        :meth:`arrays`; a name not in it becomes None) and a copy of
+        ``meta``."""
+        return replace(self, meta=dict(self.meta), **_fields_from_arrays(flat))
+
+    def astype(self, dtype) -> "TaggerWeights":
+        """:meth:`with_arrays` of every array cast to ``dtype`` (arrays
+        already of that dtype are shared, not copied)."""
+        return self.with_arrays({k: np.asarray(a, dtype=dtype)
+                                 for k, a in self.arrays().items()})
 
     @staticmethod
     def random_init(
@@ -250,17 +313,7 @@ class TaggerWeights:
         import json
         import zlib
 
-        flat: dict[str, np.ndarray] = {}
-        for k in ("word_emb", "char_emb", "cnn_w", "cnn_b", "cap_emb",
-                  "proj_w", "proj_b", "transitions"):
-            v = getattr(self, k)
-            if v is not None:
-                flat[k] = v
-        for name in ("char_lstm_fw", "char_lstm_bw", "lstm_fw", "lstm_bw"):
-            v = getattr(self, name)
-            if v is not None:
-                for i, part in enumerate(v):
-                    flat[f"{name}_{i}"] = part
+        flat = self.arrays()
         flat["char_mode"] = np.array(self.char_mode)
         # persist the trained flag: an untrained bundle round-tripped
         # through save/load must keep decoding with the grammar prior
@@ -289,18 +342,8 @@ class TaggerWeights:
     @staticmethod
     def from_npz(path: str) -> "TaggerWeights":
         z = np.load(path, allow_pickle=False)
-        char_mode = str(z["char_mode"])
-
-        def triple(name):
-            return tuple(z[f"{name}_{i}"] for i in range(3)) if f"{name}_0" in z else None
-
         return TaggerWeights(
-            word_emb=z["word_emb"], char_emb=z["char_emb"], char_mode=char_mode,
-            cnn_w=z.get("cnn_w"), cnn_b=z.get("cnn_b"),
-            char_lstm_fw=triple("char_lstm_fw"), char_lstm_bw=triple("char_lstm_bw"),
-            cap_emb=z.get("cap_emb"),
-            lstm_fw=triple("lstm_fw"), lstm_bw=triple("lstm_bw"),
-            proj_w=z["proj_w"], proj_b=z["proj_b"], transitions=z["transitions"],
+            char_mode=str(z["char_mode"]), **_fields_from_arrays(z),
             # trained flag round-trips from the npz; trained checkpoints
             # decode with the learned transitions alone (the reference
             # decodes with learned transitions only,
@@ -309,6 +352,42 @@ class TaggerWeights:
             # are external trained checkpoints → True.
             meta={"trained": bool(z["trained"]) if "trained" in z else True},
         )
+
+
+def _encoder_input(weights: TaggerWeights, word_ids: list[list[int]],
+                  char_rep: np.ndarray, cap_ids: list[list[int]], dtype):
+    """M4 concat: the [word ‖ char ‖ cap] input x [B, L, D] in ``dtype``,
+    zero past each sentence's length.
+
+    ``char_rep`` holds one char representation per word, flattened
+    across the batch (the reference's batching, processor.py:10-15).
+    Returns ``(x, lengths, (rows, cols, flat_words, flat_caps))`` — the
+    scatter indices are what the training backward gathers its input
+    gradients with (``flat_caps`` is None without a cap embedding).
+    """
+    B = len(word_ids)
+    lengths = np.array([len(s) for s in word_ids], dtype=np.int64)
+    L = max(1, int(lengths.max()) if B else 1)
+    w_dim = weights.word_emb.shape[1]
+    c_dim = char_rep.shape[1]
+    cap_dim = weights.cap_emb.shape[1] if weights.cap_emb is not None else 0
+    x = np.zeros((B, L, w_dim + c_dim + cap_dim), dtype=dtype)
+    # vectorized scatter: one embedding gather over the flattened batch,
+    # then fancy-index assignment at (sentence, position) pairs
+    total = int(lengths.sum())
+    rows = np.repeat(np.arange(B), lengths)
+    cols = np.concatenate([np.arange(n) for n in lengths]) \
+        if B else np.empty(0, dtype=np.int64)
+    flat_words = np.fromiter(
+        (i for s in word_ids for i in s), dtype=np.int64, count=total)
+    x[rows, cols, :w_dim] = weights.word_emb[flat_words]
+    x[rows, cols, w_dim:w_dim + c_dim] = char_rep
+    flat_caps = None
+    if cap_dim:
+        flat_caps = np.fromiter(
+            (i for s in cap_ids for i in s), dtype=np.int64, count=total)
+        x[rows, cols, w_dim + c_dim:] = weights.cap_emb[flat_caps]
+    return x, lengths, (rows, cols, flat_words, flat_caps)
 
 
 def hidden_features(
@@ -321,45 +400,17 @@ def hidden_features(
 
     Returns (h [B, L, 2H], lengths [B]) — the representation the
     emission projection (M6) and the perceptron CRF-head trainer
-    (:mod:`ner_pytorch_spark.operators.train`) both consume.
-
-    Chars are flattened across the batch (one row per word) exactly like
-    the reference's batching (processor.py:10-15), then scattered back.
+    (:mod:`ner_pytorch_spark.operators.train`) both consume. The input
+    is float32 whatever the weights' dtype.
     """
-    B = len(word_ids)
-    lengths = np.array([len(s) for s in word_ids], dtype=np.int64)
-    L = max(1, int(lengths.max()) if B else 1)
-
-    # ---- char representations, flattened across batch
     flat_chars: list[list[int]] = [cw for sent in char_ids for cw in sent]
     if weights.char_mode == "CNN":
-        char_rep_flat = char_cnn(flat_chars, weights.char_emb, weights.cnn_w, weights.cnn_b)
+        char_rep = char_cnn(flat_chars, weights.char_emb, weights.cnn_w, weights.cnn_b)
     else:
-        char_rep_flat = char_bilstm(flat_chars, weights.char_emb,
-                                    weights.char_lstm_fw, weights.char_lstm_bw)
-    c_dim = char_rep_flat.shape[1] if char_rep_flat.size else 0
-
-    w_dim = weights.word_emb.shape[1]
-    cap_dim = weights.cap_emb.shape[1] if weights.cap_emb is not None else 0
-    D = w_dim + c_dim + cap_dim
-    x = np.zeros((B, L, D), dtype=np.float32)
-    # vectorized scatter: one embedding gather over the flattened batch,
-    # then fancy-index assignment at (sentence, position) pairs
-    total = int(lengths.sum())
-    if total:
-        flat_words = np.fromiter(
-            (i for s in word_ids for i in s), dtype=np.int64, count=total)
-        rows = np.repeat(np.arange(B), lengths)
-        cols = np.concatenate([np.arange(n) for n in lengths]) \
-            if B else np.empty(0, dtype=np.int64)
-        x[rows, cols, :w_dim] = weights.word_emb[flat_words]
-        if c_dim:
-            x[rows, cols, w_dim:w_dim + c_dim] = char_rep_flat
-        if cap_dim:
-            flat_caps = np.fromiter(
-                (i for s in cap_ids for i in s), dtype=np.int64, count=total)
-            x[rows, cols, w_dim + c_dim:] = weights.cap_emb[flat_caps]
-
+        char_rep = char_bilstm(flat_chars, weights.char_emb,
+                               weights.char_lstm_fw, weights.char_lstm_bw)
+    x, lengths, _ = _encoder_input(weights, word_ids, char_rep, cap_ids,
+                                  np.float32)
     h_f = lstm_forward(x, lengths, *weights.lstm_fw)
     h_b = lstm_forward(x, lengths, *weights.lstm_bw, reverse=True)
     return np.concatenate([h_f, h_b], axis=2), lengths  # [B, L, 2H]

@@ -39,6 +39,19 @@ from .rounds import partition_results
 _IVF_CACHE = PlanCache(capacity=2)
 
 
+def _matrix(col) -> np.ndarray:
+    """A list<float> Arrow column as a float64 [rows, dim] matrix: the
+    flat value buffer reshaped, never one ndarray per row."""
+    return (col.flatten().to_numpy(zero_copy_only=False)
+            .reshape(len(col), -1).astype(np.float64))
+
+
+def _unit_rows(x: np.ndarray) -> np.ndarray:
+    """L2-normalize the rows of ``x`` in place (zero rows stay zero)."""
+    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    return x
+
+
 def _dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -111,10 +124,7 @@ def broadcast_topk(
     ids = tbl[0].to_numpy()
     if ids.dtype != np.int64:
         ids = ids.astype(np.int64)
-    emb_list = tbl[1].combine_chunks()
-    mat = (emb_list.flatten().to_numpy(zero_copy_only=False)
-           .reshape(len(ids), -1).astype(np.float64))
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    mat = _unit_rows(_matrix(tbl[1].combine_chunks()))
     bc = queries.sparkSession.sparkContext.broadcast((ids, mat))
 
     def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
@@ -123,11 +133,7 @@ def broadcast_topk(
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            emb_col_a = rb.column(1)
-            q = (emb_col_a.flatten().to_numpy(zero_copy_only=False)
-                 .reshape(rb.num_rows, -1).astype(np.float64))
-            q /= np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
-            scores = q @ mat_.T
+            scores = _unit_rows(_matrix(rb.column(1))) @ mat_.T
             qids = rb.column(0).to_numpy()
             # Per-query numpy ranking, NOT a batched argsort/argpartition:
             # both batch forms were built and A/B-measured SLOWER here
@@ -208,10 +214,7 @@ def kmeans_codebook(embeddings: DataFrame, n_cells: int,
         sums = np.zeros((n_cells, d))
         counts = np.zeros(n_cells, dtype=np.int64)
         for rb in table.to_batches():
-            # zero-copy [B, dim] reshape of the list column's values
-            q = (rb.column(0).flatten().to_numpy(zero_copy_only=False)
-                 .reshape(rb.num_rows, -1).astype(np.float64))
-            q /= np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
+            q = _unit_rows(_matrix(rb.column(0)))
             assign = (q @ c.T).argmax(axis=1)
             np.add.at(sums, assign, q)
             np.add.at(counts, assign, 1)
@@ -241,9 +244,7 @@ def _codebook_sample(embeddings: DataFrame, id_col: str, emb_col: str,
             .orderBy(F.pmod(F.xxhash64(F.col(id_col).cast("string")),
                             F.lit(1_000_003)), id_col)
             .limit(sample).collect())
-    x = np.array([r[1] for r in rows], dtype=np.float64)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    return x
+    return _unit_rows(np.array([r[1] for r in rows], dtype=np.float64))
 
 
 def ivf_topk(
@@ -286,7 +287,7 @@ def ivf_topk(
     else:
         raise ValueError(
             f"codebook must be 'minid' or 'kmeans', got {codebook!r}")
-    cents /= np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
+    _unit_rows(cents)
     bc = embeddings.sparkSession.sparkContext.broadcast(cents)
 
     in_schema = {f.name: f.dataType for f in embeddings.schema.fields}
@@ -298,18 +299,14 @@ def ivf_topk(
     ])
 
     def assign(batches):
-        # mapInArrow: zero-copy [B, dim] reshape of the list column's
-        # value buffer (same float64 matmul → identical assignment as
-        # the old per-row boxing); id/emb columns pass through.
+        # mapInArrow: id/emb columns pass through untouched
         import pyarrow as pa
 
         c = bc.value
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            q = (rb.column(1).flatten().to_numpy(zero_copy_only=False)
-                 .reshape(rb.num_rows, -1).astype(np.float64))
-            dots = q @ c.T                                  # [B, n_cells]
+            dots = _matrix(rb.column(1)) @ c.T              # [B, n_cells]
             # ties → smallest centroid index (lexsort mirror of the
             # oracle's (dot desc, idx asc) ranking)
             order = np.argsort(-dots, axis=1, kind="stable")
@@ -432,10 +429,7 @@ def lsh_topk(
     shape = (seed, n_tables, n_bits)
 
     def bucketize(batches):
-        # mapInArrow: the list column's flat value buffer reshapes
-        # zero-copy into the [B, dim] matrix (float32→float64 is exact,
-        # so bucket bits are identical to the old per-row boxing); id
-        # and embedding columns pass through untouched.
+        # mapInArrow: id and embedding columns pass through untouched
         import pyarrow as pa
 
         planes_flat = None  # [n_tables*n_bits, dim], built on first batch
@@ -443,8 +437,7 @@ def lsh_topk(
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            q = (rb.column(1).flatten().to_numpy(zero_copy_only=False)
-                 .reshape(rb.num_rows, -1).astype(np.float64))
+            q = _matrix(rb.column(1))
             if planes_flat is None:
                 d = dim or q.shape[1]
                 planes_flat = lsh_planes(*shape, d).reshape(-1, d)

@@ -8,9 +8,8 @@ from pyspark.sql import functions as F
 
 from ner_pytorch_spark import datagen
 from ner_pytorch_spark.operators.backprop import (
-    _get_arrays, _to_f64, adversarial_char_perturbation,
-    adversarial_loss_and_grads, loss_and_grads, lstm_forward_cache,
-    train_bilstm_crf)
+    adversarial_char_perturbation, adversarial_loss_and_grads,
+    loss_and_grads, lstm_forward_cache, train_bilstm_crf)
 from ner_pytorch_spark.operators.encoder import TaggerWeights, lstm_forward
 from ner_pytorch_spark.operators.tagset import iobes_tags
 
@@ -20,9 +19,10 @@ _CAPS = [[0, 1, 2, 3], [1, 0], [2]]
 
 
 def _tiny_weights(seed=0):
-    return _to_f64(TaggerWeights.random_init(
+    return TaggerWeights.random_init(
         vocab_size=12, char_vocab_size=8, num_tags=len(iobes_tags()),
-        word_dim=5, char_dim=3, char_out=4, hidden=6, cap_dim=2, seed=seed))
+        word_dim=5, char_dim=3, char_out=4, hidden=6, cap_dim=2,
+        seed=seed).astype(np.float64)
 
 
 def test_gradients_match_finite_differences():
@@ -39,9 +39,7 @@ def test_gradients_match_finite_differences():
     nll, grads = loss_and_grads(w, _WORDS, _CHARS, _CAPS, tag_ids)
     assert nll > 0
     eps = 1e-6
-    for k, arr in _get_arrays(w).items():
-        if arr is None:
-            continue
+    for k, arr in w.arrays().items():
         for _ in range(5):
             idx = tuple(rng.integers(0, s) for s in arr.shape)
             orig = arr[idx]
@@ -86,9 +84,8 @@ def test_dropout_grads_consistent():
     nll, grads = loss_and_grads(w, _WORDS, _CHARS, _CAPS, tag_ids,
                                 dropout=0.5, rng=np.random.default_rng(9))
     assert np.isfinite(nll)
-    for k, arr in _get_arrays(w).items():
-        if arr is not None:
-            assert grads[k].shape == arr.shape, k
+    for k, arr in w.arrays().items():
+        assert grads[k].shape == arr.shape, k
 
 
 def test_adversarial_pert_grads_match_finite_differences():
@@ -114,7 +111,7 @@ def test_adversarial_pert_grads_match_finite_differences():
     assert np.isfinite(nll)
     eps = 1e-6
     for k in ("char_emb", "cnn_w", "word_emb", "transitions"):
-        arr = _get_arrays(w)[k]
+        arr = w.arrays()[k]
         for _ in range(4):
             idx = tuple(rng.integers(0, s) for s in arr.shape)
             orig = arr[idx]
@@ -140,9 +137,8 @@ def test_adversarial_perturbation_increases_loss():
         w, _WORDS, _CHARS, _CAPS, tag_ids, alpha=0.01, ratio=0.5)
     assert adv > clean
     assert clean < mixed < adv
-    for k, arr in _get_arrays(w).items():
-        if arr is not None:
-            assert grads[k].shape == arr.shape, k
+    for k, arr in w.arrays().items():
+        assert grads[k].shape == arr.shape, k
 
 
 def test_adversarial_scale_matches_reference_formula():
@@ -340,6 +336,50 @@ def test_trainer_parity_knobs(tiny_train):
     assert all("dev_nll" in m for m in metrics)
     assert metrics[-1]["nll_mean"] < metrics[0]["nll_mean"]
     assert trained.meta.get("trained") is True
+
+
+def test_mean_dev_nll_matches_driver_and_loss_scorer(spark, tiny_train):
+    """The early-stop monitor's value is the mean per-sentence CRF NLL:
+    equal to a driver-side forward_score − path_score mean over the
+    collected dev set, and crf_nll_scores' per-row losses equal the
+    driver-side ones (3 partitions of 8-row Arrow batches, so every
+    batch of every partition must count; only float rounding may
+    differ)."""
+    from ner_pytorch_spark.operators.advgen import crf_nll_scores
+    from ner_pytorch_spark.operators.backprop import _mean_dev_nll
+    from ner_pytorch_spark.operators.crf import forward_score, path_score
+    from ner_pytorch_spark.operators.encoder import neural_emissions
+    from ner_pytorch_spark.operators.tagger import featurize_sentence
+
+    _, dev, t2i, c2i, w0 = tiny_train
+    w = w0.astype(np.float64)            # the trainer's dtype
+    tag_ids = {t: i for i, t in enumerate(iobes_tags())}
+    unk = t2i.get("<UNK>", 0)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        got = _mean_dev_nll(dev.repartition(3), w, t2i, c2i, unk, tag_ids)
+        scored = {(r.url, r.sent_id): r.loss for r in crf_nll_scores(
+            dev, w, t2i, c2i, tokens_col="tokens", tags_col="gold_tags"
+        ).collect()}
+    finally:
+        spark.conf.set(key, old)
+
+    rows = dev.select("url", "sent_id", "tokens", "gold_tags").collect()
+    feats = [featurize_sentence(r.tokens, t2i, c2i, unk) for r in rows]
+    em, lens = neural_emissions(w, [f[0] for f in feats],
+                                [f[1] for f in feats], [f[2] for f in feats])
+    gold = np.zeros(em.shape[:2], dtype=np.int64)
+    for b, r in enumerate(rows):
+        gold[b, :len(r.gold_tags)] = [tag_ids[t] for t in r.gold_tags]
+    want = (forward_score(em, lens, w.transitions)
+            - path_score(em, gold, lens, w.transitions))
+    assert got > 0
+    assert got == pytest.approx(float(want.mean()), rel=1e-5)
+    assert len(scored) == len(rows)
+    np.testing.assert_allclose(
+        [scored[(r.url, r.sent_id)] for r in rows], want, rtol=1e-5)
 
 
 def test_early_stopping_restores_best(tiny_train, monkeypatch):

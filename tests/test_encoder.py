@@ -1,6 +1,7 @@
 """Numpy encoder forward: masking, OOV-drop guards, neural tagger e2e."""
 
 import numpy as np
+import pytest
 
 from ner_pytorch_spark.operators.encoder import (TaggerWeights, char_bilstm,
                                                  char_cnn, lstm_forward,
@@ -75,6 +76,9 @@ def test_neural_emissions_shapes_and_decode():
     # deterministic: same inputs → identical emissions
     em2, _ = neural_emissions(w, word_ids, char_ids, caps)
     np.testing.assert_array_equal(em, em2)
+    # a batch with no words at all still has the full input width
+    em0, lens0 = neural_emissions(w, [[]], [[]], [[]])
+    assert em0.shape == (1, 1, len(tags)) and list(lens0) == [0]
 
 
 def test_neural_tagger_spark_e2e(spark):
@@ -99,12 +103,27 @@ def test_neural_tagger_spark_e2e(spark):
         iobes_iob(list(r.pred_tags))  # raises if grammar-invalid
 
 
-def test_weights_npz_roundtrip(tmp_path):
+@pytest.mark.parametrize("char_mode,cap_dim", [
+    ("CNN", 4), ("CNN", 0), ("LSTM", 4), ("LSTM", 0)],
+    ids=["CNN-4", "CNN-0", "LSTM-4", "LSTM-0"])
+def test_weights_npz_roundtrip(tmp_path, char_mode, cap_dim):
+    """Every weight array — the char-LSTM triples and a missing cap
+    embedding included — survives to_npz/from_npz bit for bit."""
     tags = iobes_tags()
-    w = TaggerWeights.random_init(30, 10, len(tags), seed=5)
+    w = TaggerWeights.random_init(30, 10, len(tags), cap_dim=cap_dim,
+                                  char_mode=char_mode, seed=5)
     p = str(tmp_path / "w.npz")
     w.to_npz(p)
     w2 = TaggerWeights.from_npz(p)
+    assert w2.char_mode == char_mode
+    assert (w2.cap_emb is None) == (cap_dim == 0)
+    assert (w2.char_lstm_fw is None) == (char_mode == "CNN")
+    assert (w2.cnn_w is None) == (char_mode == "LSTM")
+    a1, a2 = w.arrays(), w2.arrays()
+    assert list(a1) == list(a2)
+    for k, a in a1.items():
+        assert a2[k].dtype == a.dtype, k
+        np.testing.assert_array_equal(a2[k], a, err_msg=k)
     em1, _ = neural_emissions(w, [[1, 2]], [[[1], [2]]], [[0, 1]])
     em2, _ = neural_emissions(w2, [[1, 2]], [[[1], [2]]], [[0, 1]])
     np.testing.assert_array_equal(em1, em2)
@@ -125,7 +144,6 @@ def test_checkpoint_decode_parity(spark, tmp_path):
     from ner_pytorch_spark.operators.tagger import (featurize_sentence,
                                                     sentences_table,
                                                     tag_sentences)
-    from ner_pytorch_spark.operators.tagset import grammar_transitions
 
     pages = datagen.pages_dataframe(spark, 8)
     sents = sentences_table(pages)

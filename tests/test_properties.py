@@ -4,9 +4,10 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from crf_oracle import brute_force_decode
 from ner_pytorch_spark.functions.extraction import extract_text
 from ner_pytorch_spark.functions.tagscheme import iob2, iob_iobes, iobes_iob
-from ner_pytorch_spark.operators.crf import brute_force_decode, viterbi_decode
+from ner_pytorch_spark.operators.crf import viterbi_decode
 from ner_pytorch_spark.operators.spans import extract_spans
 
 TYPES = ["PER", "ORG", "LOC", "MISC"]
